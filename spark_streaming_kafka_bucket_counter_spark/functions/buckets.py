@@ -47,8 +47,8 @@ def ts_epoch_seconds(col: Column) -> Column:
     timezone. For TIMESTAMP_LTZ inputs the extracted fields are
     session-timezone-LOCAL wall-clock values, so the result is the true
     epoch only when ``spark.sql.session.timeZone`` is UTC —
-    ``session.get_spark`` pins that, the streaming interval-join catalog
-    query pins it for its drain (scoped via ``restored_conf``), and
+    ``session.get_spark`` pins that, the catalog's streaming drains pin
+    it while they execute (``streaming.pipeline.drain_to_table``), and
     :func:`require_utc_session` is the loud guard for any new LTZ
     round-trip call site.
     """

@@ -96,7 +96,3 @@ def decode_json_values(
         cols.append(F.col(f"_j.{CORRUPT_COL}").alias(CORRUPT_COL))
     return parsed.select(*cols)
 
-
-def drop_kafka_keys(df: DataFrame) -> DataFrame:
-    """Kafka (key, value) -> value-as-string (P1; reference main.py:124)."""
-    return df.select(F.col("value").cast("string").alias("value"))

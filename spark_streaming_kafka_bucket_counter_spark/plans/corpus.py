@@ -20,6 +20,8 @@ from ..operators import graph as G
 from ..operators import sketches as K
 from ..operators import quality as Q
 from ..operators import similarity as S
+from ..sources.files import stream_events
+from ..streaming.pipeline import drain_to_table
 from .queries import _DUCK_EPOCH, _t, query
 
 # ---------------------------------------------------------------------------
@@ -337,58 +339,16 @@ def q_streaming_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``sessionize_events`` islands. The driver dataset's sub-second
     timestamps can never produce an exact-gap pair, which is why a
     ``>=`` oracle survived four rounds there.
-
-    The memory sink is the driver-sized ORACLE-HARNESS shape only; the
-    production sink is ``foreachBatch`` into a partitioned parquet
-    ``ServingStore`` (streaming/pipeline.py + streaming/serving.py) —
-    do not copy the memory sink to a cluster.
     """
-    import uuid
-
     from ..operators.sessions import streaming_session_counts
-    from ..session import restored_conf, stream_drain_partitions
 
-    # state partitions sized to the drain's state (r12; see
-    # session.stream_drain_partitions)
-    with restored_conf(
-        spark, "spark.sql.legacy.parquet.nanosAsLong",
-        "spark.sql.session.timeZone", "spark.sql.shuffle.partitions",
-    ):
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        spark.conf.set("spark.sql.session.timeZone", "UTC")
-        spark.conf.set(
-            "spark.sql.shuffle.partitions", str(stream_drain_partitions(spark))
+    def build() -> DataFrame:
+        ev = stream_events(spark, sf_dir).select(
+            "user_id", F.timestamp_seconds(ts_epoch_seconds(F.col("ts"))).alias("evt")
         )
-        raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-        stream = (
-            spark.readStream.schema(raw_schema)
-            .option("pathGlobFilter", "events.parquet")
-            .parquet(sf_dir)
-        )
-        ts = F.col("ts")
-        if dict(
-            zip(raw_schema.names, [f.dataType.simpleString() for f in raw_schema])
-        ).get("ts") == "bigint":
-            ts = F.timestamp_micros(F.floor(F.col("ts") / 1000).cast("long"))
-        ev = stream.select(
-            "user_id", F.timestamp_seconds(ts_epoch_seconds(ts)).alias("evt")
-        )
-        sessions = streaming_session_counts(ev, "user_id", "evt", _SS_GAP)
-        name = f"sessq_{uuid.uuid4().hex[:8]}"
-        q = (
-            sessions.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise RuntimeError(
-                "streaming_sessionize: availableNow drain did not finish "
-                "within 300s — refusing to query a partial sink"
-            )
-    return spark.table(name).select(
+        return streaming_session_counts(ev, "user_id", "evt", _SS_GAP)
+
+    return drain_to_table(spark, "streaming_sessionize", build, "complete").select(
         "user_id",
         ts_epoch_seconds(F.col("session.start")).alias("session_start_e"),
         ts_epoch_seconds(F.col("session.end")).alias("session_end_e"),
@@ -797,41 +757,13 @@ def q_streaming_count_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     (60s window, 20s hop, complete-mode availableNow drain into a memory
     sink) — §2.11 evidence that the streaming sliding aggregation equals
     the batch `bucket_count_sliding` relation (same F.window construct,
-    same oracle).
+    same oracle)."""
 
-    The memory sink is the driver-sized ORACLE-HARNESS shape only; the
-    production sink is ``foreachBatch`` into a partitioned parquet
-    ``ServingStore`` (streaming/pipeline.start_sliding_counter) — do
-    not copy the memory sink to a cluster."""
-    import uuid
-
-    from ..session import restored_conf, stream_drain_partitions
-
-    # state partitions sized to the drain's state (r12; see
-    # session.stream_drain_partitions)
-    with restored_conf(
-        spark, "spark.sql.legacy.parquet.nanosAsLong",
-        "spark.sql.session.timeZone", "spark.sql.shuffle.partitions",
-    ):
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        spark.conf.set("spark.sql.session.timeZone", "UTC")
-        spark.conf.set(
-            "spark.sql.shuffle.partitions", str(stream_drain_partitions(spark))
-        )
-        raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-        stream = (
-            spark.readStream.schema(raw_schema)
-            .option("pathGlobFilter", "events.parquet")
-            .parquet(sf_dir)
-        )
-        ts = F.col("ts")
-        if dict(
-            zip(raw_schema.names, [f.dataType.simpleString() for f in raw_schema])
-        ).get("ts") == "bigint":
-            ts = F.timestamp_micros(F.floor(F.col("ts") / 1000).cast("long"))
-        evt = F.timestamp_seconds(ts_epoch_seconds(ts))
-        counted = (
-            stream.select("event_type", evt.alias("evt"))
+    def build() -> DataFrame:
+        evt = F.timestamp_seconds(ts_epoch_seconds(F.col("ts")))
+        return (
+            stream_events(spark, sf_dir)
+            .select("event_type", evt.alias("evt"))
             .withWatermark("evt", "1 second")
             .groupBy(
                 "event_type",
@@ -839,21 +771,8 @@ def q_streaming_count_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .agg(F.count(F.lit(1)).alias("count"))
         )
-        name = f"sswq_{uuid.uuid4().hex[:8]}"
-        q = (
-            counted.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise RuntimeError(
-                "streaming_count_sliding: availableNow drain did not finish "
-                "within 300s — refusing to query a partial sink"
-            )
-    return spark.table(name).select(
+
+    return drain_to_table(spark, "streaming_count_sliding", build, "complete").select(
         "event_type",
         ts_epoch_seconds(F.col("_w.start")).alias("bucket_start"),
         ts_epoch_seconds(F.col("_w.end")).alias("bucket_end"),

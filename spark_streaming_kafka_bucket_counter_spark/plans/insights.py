@@ -26,6 +26,8 @@ from ..operators.profile import (
     snapshot_diff_sql,
 )
 from ..operators.spans import duplicated_span_stats, duplicated_span_stats_sql
+from ..sources.files import stream_events
+from ..streaming.pipeline import drain_to_table
 from .queries import _DUCK_EPOCH, _t, query
 
 _EPOCH_TS = _DUCK_EPOCH.format(col="ts")
@@ -1392,67 +1394,24 @@ def q_streaming_click_purchase_join(spark: SparkSession, sf_dir: str) -> DataFra
     join — the §2.11 evidence that the streaming operator computes the
     same relation as its batch statement. State on both sides is
     bounded by the watermark + the closed time window (see
-    streaming/pipeline.streaming_interval_join).
-
-    The memory sink is the driver-sized ORACLE-HARNESS shape only; the
-    production sink is ``foreachBatch`` into a partitioned parquet
-    ``ServingStore`` (streaming/pipeline.py + streaming/serving.py) —
-    do not copy the memory sink to a cluster."""
-    import uuid
-
-    from ..session import restored_conf, stream_drain_partitions
+    streaming/pipeline.streaming_interval_join)."""
     from ..streaming.pipeline import streaming_interval_join
 
-    # the drain EXECUTES inside the block -> safe to restore the confs
-    # after. Session tz is pinned to UTC for the duration because the
-    # event-time columns round-trip through TIMESTAMP_LTZ (the driver may
-    # hand us a bare session with a local timezone). State partitions are
-    # sized to the drain's state, not the core count (r12 — see
-    # session.stream_drain_partitions; 32 -> 8 cut this drain ~3x).
-    with restored_conf(
-        spark, "spark.sql.legacy.parquet.nanosAsLong",
-        "spark.sql.session.timeZone", "spark.sql.shuffle.partitions",
-    ):
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        spark.conf.set("spark.sql.session.timeZone", "UTC")
-        spark.conf.set(
-            "spark.sql.shuffle.partitions", str(stream_drain_partitions(spark))
-        )
-        raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-        stream = (
-            spark.readStream.schema(raw_schema)
-            .option("pathGlobFilter", "events.parquet")
-            .parquet(sf_dir)
-        )
-        # timezone-free LTZ event time (works for NTZ and nanos-bigint files)
-        ts = F.col("ts")
-        if dict(zip(raw_schema.names, [f.dataType.simpleString() for f in raw_schema])).get("ts") == "bigint":
-            ts = F.timestamp_micros(F.floor(ts / 1000).cast("long"))
-        evt = F.timestamp_seconds(ts_epoch_seconds(ts))
+    def build() -> DataFrame:
+        stream = stream_events(spark, sf_dir)
+        # timezone-free LTZ event time (the drain pins a UTC session)
+        evt = F.timestamp_seconds(ts_epoch_seconds(F.col("ts")))
         clicks = stream.filter(F.col("event_type") == "click").select(
             "user_id", F.col("event_id").alias("click_id"), evt.alias("c_ts")
         )
         purchases = stream.filter(F.col("event_type") == "purchase").select(
             "user_id", F.col("event_id").alias("purchase_id"), evt.alias("p_ts")
         )
-        joined = streaming_interval_join(
+        return streaming_interval_join(
             clicks, purchases, "user_id", "c_ts", "p_ts", _SSJ_WIN
         )
-        name = f"ssjq_{uuid.uuid4().hex[:8]}"
-        q = (
-            joined.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise RuntimeError(
-                "streaming_click_purchase_join: availableNow drain did not "
-                "finish within 300s — refusing to query a partial sink"
-            )
-    return spark.table(name).select(
+
+    return drain_to_table(spark, "streaming_click_purchase_join", build).select(
         "user_id",
         "click_id",
         "purchase_id",
@@ -1482,60 +1441,20 @@ def q_streaming_dedup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     tolerates and the state size (see
     streaming/pipeline.streaming_drop_duplicates). Only the dedup keys
     are projected out, so which replica won is unobservable — the result
-    is deterministic under any batch split.
-
-    The memory sink is the driver-sized ORACLE-HARNESS shape only; the
-    production sink is ``foreachBatch`` into a partitioned parquet
-    ``ServingStore`` (streaming/pipeline.py + streaming/serving.py) —
-    do not copy the memory sink to a cluster."""
-    import uuid
-
-    from ..session import restored_conf, stream_drain_partitions
+    is deterministic under any batch split."""
     from ..streaming.pipeline import streaming_drop_duplicates
 
-    # state partitions sized to the drain's state (r12; see
-    # session.stream_drain_partitions)
-    with restored_conf(
-        spark, "spark.sql.legacy.parquet.nanosAsLong",
-        "spark.sql.session.timeZone", "spark.sql.shuffle.partitions",
-    ):
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        spark.conf.set("spark.sql.session.timeZone", "UTC")
-        spark.conf.set(
-            "spark.sql.shuffle.partitions", str(stream_drain_partitions(spark))
+    def build() -> DataFrame:
+        records = stream_events(spark, sf_dir).select(
+            "user_id",
+            "event_type",
+            F.timestamp_seconds(ts_epoch_seconds(F.col("ts"))).alias("evt"),
         )
-        raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-        stream = (
-            spark.readStream.schema(raw_schema)
-            .option("pathGlobFilter", "events.parquet")
-            .parquet(sf_dir)
-        )
-        ts = F.col("ts")
-        if dict(
-            zip(raw_schema.names, [f.dataType.simpleString() for f in raw_schema])
-        ).get("ts") == "bigint":
-            ts = F.timestamp_micros(F.floor(ts / 1000).cast("long"))
-        records = stream.select(
-            "user_id", "event_type", F.timestamp_seconds(ts_epoch_seconds(ts)).alias("evt")
-        )
-        deduped = streaming_drop_duplicates(
+        return streaming_drop_duplicates(
             records, ["user_id", "event_type"], "evt", delay="3650 days"
         ).select("user_id", "event_type")
-        name = f"sdq_{uuid.uuid4().hex[:8]}"
-        q = (
-            deduped.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise RuntimeError(
-                "streaming_dedup_events: availableNow drain did not finish "
-                "within 300s — refusing to query a partial sink"
-            )
-    return spark.table(name)
+
+    return drain_to_table(spark, "streaming_dedup_events", build)
 
 
 # ---------------------------------------------------------------------------

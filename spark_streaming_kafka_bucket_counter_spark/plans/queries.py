@@ -29,7 +29,8 @@ from ..functions import predicates as P
 from ..functions.buckets import ISO_TS_FORMAT, ts_epoch_seconds, with_bucket
 from ..functions.projection import decode_json_values, project_fields
 from ..operators.count import bucket_count, merged_count, select_max
-from ..sources.files import load_table
+from ..sources.files import load_table, stream_events
+from ..streaming.pipeline import drain_to_table
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLES: dict[str, str] = {}
@@ -200,70 +201,25 @@ def q_merged_count_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_stateful_running_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cross-batch running count (A5) EXECUTED as a stateful streaming
-    aggregation in update mode, drained with availableNow.
+    aggregation in update mode, drained with availableNow."""
+    from ..streaming.stateful import running_bucket_count
 
-    The memory sink is the driver-sized ORACLE-HARNESS shape only; the
-    production sink is ``foreachBatch`` into a partitioned parquet
-    ``ServingStore`` or a JDBC MERGE upsert (streaming/pipeline.py,
-    streaming/sinks.py) — do not copy the memory sink to a cluster."""
-    import shutil
-    import tempfile
-    import uuid
-
-    from ..functions.buckets import with_bucket
-    from ..session import restored_conf, stream_drain_partitions
-    from ..streaming.stateful import start_stateful_counter
-
-    name = f"srSan_{uuid.uuid4().hex[:8]}"
-    ckpt = tempfile.mkdtemp(prefix="ssbc_ckpt_")
-    # The whole drain EXECUTES inside this block, so pinning + restoring
-    # the nanos conf leaves the caller's session untouched (hygiene).
-    # State partitions sized to the drain's state (r12; see
-    # session.stream_drain_partitions).
-    with restored_conf(
-        spark, "spark.sql.legacy.parquet.nanosAsLong",
-        "spark.sql.shuffle.partitions",
-    ):
-        spark.conf.set(
-            "spark.sql.shuffle.partitions", str(stream_drain_partitions(spark))
-        )
-        # raw parquet schema (ts = TIMESTAMP(NANOS) surfaces as bigint under
-        # nanosAsLong); the stream applies the same ns -> us truncation as
-        # sources.files.load_table so values match the batch/oracle path
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-        # the file source requires a directory path; glob-filter to the one table
-        stream = (
-            spark.readStream.schema(raw_schema)
-            .option("pathGlobFilter", "events.parquet")
-            .parquet(sf_dir)
-        )
-        ts = F.col("ts")
-        if dict(zip(raw_schema.names, [f.dataType.simpleString() for f in raw_schema])).get("ts") == "bigint":
-            ts = F.timestamp_micros(F.floor(ts / 1000).cast("long"))
+    def build() -> DataFrame:
+        epoch = ts_epoch_seconds(F.col("ts")).cast("double").alias("epoch_ts")
         records = with_bucket(
-            stream.select("event_type", ts_epoch_seconds(ts).cast("double").alias("epoch_ts")),
+            stream_events(spark, sf_dir).select("event_type", epoch),
             "epoch_ts",
             3600,
             "epoch",
         ).select("event_type", "bucket_start", "bucket_end")
-        try:
-            q = start_stateful_counter(records, ["event_type"], ckpt, query_name=name)
-            if not q.awaitTermination(300):
-                q.stop()
-                raise RuntimeError(
-                    "stateful_running_count: availableNow drain did not finish "
-                    "within 300s — refusing to query a partially-populated sink"
-                )
-        finally:
-            # drained (or failed): the memory-sink table no longer needs
-            # the checkpoint; don't leak a /tmp dir per invocation
-            shutil.rmtree(ckpt, ignore_errors=True)
-    return spark.sql(
-        f"""
-        SELECT event_type, bucket_start, bucket_end, max(count) AS count
-        FROM {name} GROUP BY 1, 2, 3
-        """
+        return running_bucket_count(records, ["event_type"])
+
+    # update mode emits each key's running total once per micro-batch it
+    # grows in; max(count) is the final total however the drain splits
+    return (
+        drain_to_table(spark, "stateful_running_count", build, "update")
+        .groupBy("event_type", "bucket_start", "bucket_end")
+        .agg(F.max("count").alias("count"))
     )
 
 

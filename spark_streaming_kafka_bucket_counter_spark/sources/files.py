@@ -1,4 +1,4 @@
-"""File-based sources: parquet test tables, JSON side files, file streams.
+"""File-based sources: parquet test tables, the events file stream, document files.
 
 ``load_tables`` registers the driver-generated tables as temp views so the
 serving layer's arbitrary-SQL endpoint (reference H2, ``GET /c/<sql>``)
@@ -12,7 +12,6 @@ root, and everything downstream is unchanged.
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -32,23 +31,51 @@ TABLE_NAMES = (
 )
 
 
+NANOS_AS_LONG = "spark.sql.legacy.parquet.nanosAsLong"
+
+
+def _micros_ts(df: DataFrame) -> DataFrame:
+    """Truncate a BIGINT-nanoseconds ``ts`` (parquet TIMESTAMP(NANOS)
+    read under ``nanosAsLong``) to a microsecond timestamp — the same
+    truncation DuckDB 1.x applies reading the file, so both engines see
+    identical values. Batch and streaming readers share this one rule."""
+    if dict(df.dtypes).get("ts") == "bigint":
+        df = df.withColumn(
+            "ts", F.timestamp_micros(F.floor(F.col("ts") / 1000).cast("long"))
+        )
+    return df
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one test table, normalizing parquet TIMESTAMP(NANOS) columns.
 
     Spark 4 rejects nanosecond parquet timestamps outright; with
     ``spark.sql.legacy.parquet.nanosAsLong`` they surface as BIGINT
-    nanoseconds, which we truncate to microsecond timestamps — the same
-    truncation DuckDB 1.x applies reading the file, so both engines see
-    identical values. The conf is session-dynamic, set here defensively
-    because the driver may hand us its own SparkSession.
+    nanoseconds, which :func:`_micros_ts` truncates to microseconds. The
+    conf is session-dynamic, set here defensively because a caller may
+    hand us its own SparkSession.
     """
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    spark.conf.set(NANOS_AS_LONG, "true")
     df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-    if name == "events" and dict(df.dtypes).get("ts") == "bigint":
-        df = df.withColumn(
-            "ts", F.timestamp_micros(F.floor(F.col("ts") / 1000).cast("long"))
-        )
-    return df
+    return _micros_ts(df) if name == "events" else df
+
+
+def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The ``events`` table as a file stream, with ``ts`` normalized as
+    in :func:`load_table`. The file source needs a directory and an
+    explicit schema, so this reads the raw parquet schema and glob-filters
+    the directory to the one table. Sets ``nanosAsLong`` like
+    :func:`load_table`; a caller that must leave the session untouched
+    pins it around the stream's whole execution (``restored_conf``).
+    """
+    spark.conf.set(NANOS_AS_LONG, "true")
+    raw_schema = spark.read.parquet(os.path.join(sf_dir, "events.parquet")).schema
+    stream = (
+        spark.readStream.schema(raw_schema)
+        .option("pathGlobFilter", "events.parquet")
+        .parquet(sf_dir)
+    )
+    return _micros_ts(stream)
 
 
 def load_tables(
@@ -271,12 +298,6 @@ def remove_dir_or_link(path) -> None:
         shutil.rmtree(path, ignore_errors=True)
 
 
-def json_file_to_dict(path: str) -> dict:
-    """Driver-side JSON side-file loader (reference S6, utils.py:265-274)."""
-    with open(path) as fh:
-        return json.load(fh)
-
-
 def open_or_none(path: str | None) -> str | None:
     """File-or-None loader (reference S9, utils.py:375-381)."""
     if not path:
@@ -286,17 +307,6 @@ def open_or_none(path: str | None) -> str | None:
             return fh.read()
     except OSError:
         return None
-
-
-def read_json_stream(spark: SparkSession, path: str, schema) -> DataFrame:
-    """File-based streaming source (newline-JSON), for Kafka-less testing.
-
-    Mirrors the Kafka value stream shape: one string column ``value``.
-    """
-    return (
-        spark.readStream.schema("value string")
-        .text(path)
-    )
 
 
 def zorder_key(cols: list[str], bits: int = 16) -> "F.Column":

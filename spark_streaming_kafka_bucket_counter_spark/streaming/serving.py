@@ -475,8 +475,13 @@ class ServingStore:
         """H6: rows of the n most recent batches (http_endpoint.py:170-176).
 
         Partition pruning turns this into reading exactly n directories.
+        The newest batch id and the view come from ONE snapshot, so a
+        commit landing between the two reads cannot shorten the answer.
         """
-        return self.view().filter(F.col(RST_COL) > F.lit(self.rst() - n))
+        m = self._snapshot()
+        ids = self._batch_ids(m)
+        newest = ids[-1] if ids else -1
+        return self._view_from(m).filter(F.col(RST_COL) > F.lit(newest - n))
 
     def batch(self, batch_id: int) -> DataFrame:
         """H7: a single batch by id (http_endpoint.py:178-184)."""

@@ -33,6 +33,8 @@ from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import LongType, StructField, StructType
 
+from .pipeline import start_writer
+
 
 def _output_schema(records: DataFrame, keys: list[str]) -> StructType:
     fields = [records.schema[k] for k in keys]
@@ -113,4 +115,4 @@ def start_stateful_counter(
         .queryName(query_name)
         .option("checkpointLocation", checkpoint_dir)
     )
-    return writer.trigger(**(trigger or {"availableNow": True})).start()
+    return start_writer(writer, trigger)

@@ -1,22 +1,50 @@
 """Session hygiene: catalog queries must not leave session state behind.
 
-The two Structured-Streaming catalog queries pin
-``spark.sql.legacy.parquet.nanosAsLong`` while their drain executes and
-used to leave it set (plus a /tmp checkpoint dir per call) — surprising
-for any embedder calling a "query". Pinned here: conf restored, no
-checkpoint-dir leak.
+The Structured-Streaming catalog queries pin three session confs while
+their drain executes and used to leave ``nanosAsLong`` set (plus a /tmp
+checkpoint dir per call) — surprising for any embedder calling a
+"query". Pinned here, for every drain query: confs restored, no
+checkpoint-dir leak; the drain helper's partial-sink guard; and that the
+helper stays the only drain in ``plans/``.
 """
 
 from __future__ import annotations
 
 import glob
+import os
+import re
+import tempfile
+from pathlib import Path
+
+import pytest
+from pyspark.sql.streaming import StreamingQuery
 
 from spark_streaming_kafka_bucket_counter_spark.plans import queries as catalog
 from spark_streaming_kafka_bucket_counter_spark.session import restored_conf
+from spark_streaming_kafka_bucket_counter_spark.sources.files import stream_events
+from spark_streaming_kafka_bucket_counter_spark.streaming.pipeline import (
+    drain_to_table,
+)
 
 SF_SMALL = "/root/testdata/sf0.001"
 
 _NANOS = "spark.sql.legacy.parquet.nanosAsLong"
+_TZ = "spark.sql.session.timeZone"
+_SHUFFLE = "spark.sql.shuffle.partitions"
+
+DRAIN_QUERIES = (
+    "streaming_sessionize",
+    "streaming_count_sliding",
+    "streaming_click_purchase_join",
+    "streaming_dedup_events",
+    "stateful_running_count",
+)
+
+PLANS_DIR = (
+    Path(__file__).resolve().parents[1]
+    / "spark_streaming_kafka_bucket_counter_spark"
+    / "plans"
+)
 
 
 def _conf_or_none(spark, key):
@@ -24,6 +52,26 @@ def _conf_or_none(spark, key):
         return spark.conf.get(key)
     except Exception:
         return None
+
+
+def _checkpoint_dirs():
+    tmp = tempfile.gettempdir()
+    return set(glob.glob(os.path.join(tmp, "ssbc_ckpt_*"))) | set(
+        glob.glob(os.path.join(tmp, "temporary-*"))
+    )
+
+
+@pytest.fixture()
+def distinct_confs(spark):
+    """Session confs that differ from every value a drain pins: nanos
+    unset, a UTC-equivalent zone spelled differently from the pinned
+    ``UTC``, and a shuffle count no drain picks. Restored afterwards —
+    the session is shared by the whole suite."""
+    with restored_conf(spark, _NANOS, _TZ, _SHUFFLE):
+        spark.conf.unset(_NANOS)
+        spark.conf.set(_TZ, "Etc/UTC")
+        spark.conf.set(_SHUFFLE, "7")
+        yield {k: _conf_or_none(spark, k) for k in (_NANOS, _TZ, _SHUFFLE)}
 
 
 def test_restored_conf_sets_back_and_unsets(spark):
@@ -34,12 +82,52 @@ def test_restored_conf_sets_back_and_unsets(spark):
     assert _conf_or_none(spark, _NANOS) == before
 
 
-def test_stateful_query_leaves_no_conf_or_checkpoint(spark):
-    spark.conf.unset(_NANOS)
-    before = _conf_or_none(spark, _NANOS)  # default value (or None)
-    assert before != "true"
-    dirs_before = set(glob.glob("/tmp/ssbc_ckpt_*"))
-    df = catalog.QUERIES["stateful_running_count"](spark, SF_SMALL)
+@pytest.mark.parametrize("name", DRAIN_QUERIES)
+def test_drain_query_leaves_session_and_tmp_as_found(spark, distinct_confs, name):
+    assert distinct_confs[_NANOS] != "true"
+    dirs_before = _checkpoint_dirs()
+    df = catalog.QUERIES[name](spark, SF_SMALL)
     assert df.count() > 0
-    assert _conf_or_none(spark, _NANOS) == before
-    assert set(glob.glob("/tmp/ssbc_ckpt_*")) == dirs_before
+    assert {k: _conf_or_none(spark, k) for k in distinct_confs} == distinct_confs
+    assert _checkpoint_dirs() == dirs_before
+
+
+def test_drain_timeout_stops_query_and_never_reads_sink(
+    spark, distinct_confs, monkeypatch
+):
+    stopped = []
+    real_stop = StreamingQuery.stop
+
+    def stop(q):
+        stopped.append(q.name)
+        real_stop(q)
+
+    def read_sink(*_args, **_kwargs):
+        raise AssertionError("the drain read a partial sink")
+
+    monkeypatch.setattr(StreamingQuery, "awaitTermination", lambda q, timeout=None: False)
+    monkeypatch.setattr(StreamingQuery, "stop", stop)
+    monkeypatch.setattr(spark, "table", read_sink)
+    dirs_before = _checkpoint_dirs()
+    with pytest.raises(RuntimeError, match="guard_probe"):
+        drain_to_table(
+            spark, "guard_probe", lambda: stream_events(spark, SF_SMALL).select("user_id")
+        )
+    assert len(stopped) == 1 and stopped[0].startswith("guard_probe_")
+    assert not any(q.name == stopped[0] for q in spark.streams.active)
+    assert {k: _conf_or_none(spark, k) for k in distinct_confs} == distinct_confs
+    assert _checkpoint_dirs() == dirs_before
+
+
+def test_plans_run_no_drain_of_their_own():
+    """Spark-free: every streaming drain in ``plans/`` goes through
+    ``drain_to_table``, so the conf pins, checkpoint cleanup and
+    partial-sink guard exist once."""
+    direct = re.compile(r"awaitTermination\(|\.format\(\s*[\"']memory[\"']\s*\)")
+    offenders = [
+        f"{path.relative_to(PLANS_DIR)}:{lineno}"
+        for path in sorted(PLANS_DIR.rglob("*.py"))
+        for lineno, line in enumerate(path.read_text().splitlines(), 1)
+        if direct.search(line)
+    ]
+    assert offenders == []

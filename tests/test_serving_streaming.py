@@ -302,6 +302,28 @@ def test_store_time_travel(spark, tmp_path):
     assert store.view().count() == 3
 
 
+def test_store_recent_answers_from_one_snapshot(spark, tmp_path, monkeypatch):
+    """H6 (/rv/<n>) resolves the newest batch id and the view from ONE
+    snapshot: a commit landing between the store's snapshot reads must
+    not shorten the answer to fewer than n batches."""
+    store = ServingStore(spark, str(tmp_path / "rvstore"), clean_freq=0)
+    for b in range(3):
+        store.append(_batch(spark, [("click", b)]), b)
+    real_snapshot = store._snapshot
+    committed = []
+
+    def snapshot_then_commit():
+        m = real_snapshot()
+        if not committed:  # a concurrent ingest commits batch 3 right after
+            committed.append(3)
+            store.append(_batch(spark, [("click", 3)]), 3)
+        return m
+
+    monkeypatch.setattr(store, "_snapshot", snapshot_then_commit)
+    assert sorted(r[RST_COL] for r in store.recent(2).collect()) == [1, 2]
+    assert committed == [3] and store.rst() == 3
+
+
 def test_store_compact_is_reader_atomic(spark, tmp_path):
     """Racing readers during compaction never observe a partial store
     (VERDICT r5 ask #8). Two readers race repeated compactions: a Spark
