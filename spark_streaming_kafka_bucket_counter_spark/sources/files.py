@@ -5,17 +5,27 @@ serving layer's arbitrary-SQL endpoint (reference H2, ``GET /c/<sql>``)
 can query them by name — the Spark analog of the reference's ATTACHed
 SQLite databases (models.py:189-224).
 
-Scale: `spark.read.parquet` gives partition pruning + predicate pushdown +
-column pruning for free; at 100 TB the same call reads a partitioned table
-root, and everything downstream is unchanged.
+Every parquet read whose schema Spark would take from one footer goes
+through :func:`read_parquet`: the schema is read on the driver from that
+footer and handed to the reader, so planning a read runs no Spark job
+(Spark's own inference runs a one-task job per read just to open the
+footer). Directories and globs keep Spark's inference.
+
+Scale: the scan itself is a plain parquet scan — partition pruning,
+predicate pushdown and column pruning are unchanged; at 100 TB the same
+call reads a partitioned table root (a directory, so Spark infers its
+schema), and everything downstream is unchanged.
 """
 
 from __future__ import annotations
 
+import json
 import os
+from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 TABLE_NAMES = (
     "region",
@@ -46,6 +56,75 @@ def _micros_ts(df: DataFrame) -> DataFrame:
     return df
 
 
+#: the characters that make Spark expand a read path as a glob
+#: (``SparkHadoopUtil.isGlobPath``)
+_GLOB_CHARS = frozenset("{}[]*?\\")
+
+
+def footer_schema(spark: SparkSession, paths: Sequence[str]) -> StructType | None:
+    """The schema Spark's parquet inference would give a read of
+    ``paths``, resolved on the driver from one footer — no Spark job.
+
+    Spark's non-merging inference opens exactly one footer: that of the
+    first data file in path order (``ParquetUtils.splitFiles`` sorts the
+    listing), which for explicit files is the lexicographically first
+    path. This reads that footer through Hadoop's ``FileSystem`` and
+    converts it with the code the inference job runs
+    (``ParquetToSparkSchemaConverter`` over the session's SQL conf, then
+    ``ParquetFileFormat.readSchemaFromFooter``), so ``nanosAsLong``,
+    INT96, NTZ and an embedded Spark schema resolve exactly as in the job.
+
+    Returns None where one footer is not what Spark reads — a glob, a
+    first path that is a directory (or missing, so Spark raises its own
+    ``PATH_NOT_FOUND``), or several paths under
+    ``spark.sql.parquet.mergeSchema`` — and the caller lets Spark infer.
+    Only the first path is checked: a directory later in path order
+    holds only files that sort after its own path, hence after the first
+    one, so the first path, when it is a file, is the one Spark opens.
+    JVM errors reading the footer propagate.
+    """
+    if not paths or any(_GLOB_CHARS.intersection(p) for p in paths):
+        return None
+
+    def jclass(name: str):
+        # one gateway round trip; ``spark._jvm.org.apache...`` costs one
+        # per package segment
+        return getattr(spark._jvm, name)
+
+    state = spark._jsparkSession.sessionState()
+    sql_conf = state.conf()
+    if len(paths) > 1 and sql_conf.isParquetSchemaMergingEnabled():
+        return None
+    hconf = state.newHadoopConf()
+    path = jclass("org.apache.hadoop.fs.Path")(min(paths))
+    if not path.getFileSystem(hconf).isFile(path):
+        return None
+    spark_pq = "org.apache.spark.sql.execution.datasources.parquet."
+    meta = jclass(spark_pq + "ParquetFooterReader").readFooter(
+        jclass("org.apache.parquet.hadoop.util.HadoopInputFile").fromPath(path, hconf),
+        jclass(
+            "org.apache.parquet.format.converter.ParquetMetadataConverter"
+        ).SKIP_ROW_GROUPS,
+    )
+    schema = jclass(spark_pq + "ParquetFileFormat").readSchemaFromFooter(
+        jclass("org.apache.parquet.hadoop.Footer")(path, meta),
+        jclass(spark_pq + "ParquetToSparkSchemaConverter")(sql_conf),
+    )
+    return StructType.fromJson(json.loads(schema.json()))
+
+
+def read_parquet(spark: SparkSession, *paths: str, base: str | None = None) -> DataFrame:
+    """``spark.read.parquet(*paths)`` — with ``basePath`` ``base`` when
+    given — whose schema comes from :func:`footer_schema` instead of an
+    inference job. Partition columns under ``base`` are still discovered
+    from the paths, exactly as in a plain read."""
+    reader = spark.read if base is None else spark.read.option("basePath", base)
+    schema = footer_schema(spark, paths)
+    if schema is not None:
+        reader = reader.schema(schema)
+    return reader.parquet(*paths)
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one test table, normalizing parquet TIMESTAMP(NANOS) columns.
 
@@ -53,23 +132,26 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     ``spark.sql.legacy.parquet.nanosAsLong`` they surface as BIGINT
     nanoseconds, which :func:`_micros_ts` truncates to microseconds. The
     conf is session-dynamic, set here defensively because a caller may
-    hand us its own SparkSession.
+    hand us its own SparkSession. The table's schema comes from its one
+    footer on the driver (:func:`read_parquet`), so building the read
+    runs no Spark job.
     """
     spark.conf.set(NANOS_AS_LONG, "true")
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    df = read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
     return _micros_ts(df) if name == "events" else df
 
 
 def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The ``events`` table as a file stream, with ``ts`` normalized as
     in :func:`load_table`. The file source needs a directory and an
-    explicit schema, so this reads the raw parquet schema and glob-filters
-    the directory to the one table. Sets ``nanosAsLong`` like
+    explicit schema, so this reads the raw parquet schema (from the
+    table's footer, :func:`read_parquet`) and glob-filters the directory
+    to the one table. Sets ``nanosAsLong`` like
     :func:`load_table`; a caller that must leave the session untouched
     pins it around the stream's whole execution (``restored_conf``).
     """
     spark.conf.set(NANOS_AS_LONG, "true")
-    raw_schema = spark.read.parquet(os.path.join(sf_dir, "events.parquet")).schema
+    raw_schema = read_parquet(spark, os.path.join(sf_dir, "events.parquet")).schema
     stream = (
         spark.readStream.schema(raw_schema)
         .option("pathGlobFilter", "events.parquet")

@@ -81,6 +81,8 @@ from typing import Iterator, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .files import read_parquet
+
 MANIFEST_DIR = "_manifest"
 #: manifest generations to retain beyond the grace window (debugging
 #: trail; readers only ever resolve the latest)
@@ -293,7 +295,7 @@ def manifest_diff_read(spark: SparkSession, root: str | Path,
     if not paths:
         return None
     base = rootp / sub if sub else rootp
-    return spark.read.option("basePath", str(base)).parquet(*paths)
+    return read_parquet(spark, *paths, base=str(base))
 
 
 def scan_parquet_files(root: str | Path) -> set[str]:
@@ -708,7 +710,9 @@ def manifest_read(spark: SparkSession, root: str | Path, sub: str = "",
     built by older code or external writers) fall back to the plain
     directory read. A query spanning several subtrees resolves
     :func:`latest_manifest` ONCE and passes it as ``snapshot`` so all
-    its reads pin the same generation.
+    its reads pin the same generation. The schema is the first listed
+    file's, read from its footer on the driver
+    (:func:`~.files.read_parquet`), so planning the read runs no Spark job.
 
     ``predicate`` — ``(col, op, value)`` conjuncts — prunes files by
     the snapshot's zone maps BEFORE Spark ever lists or opens them
@@ -731,10 +735,7 @@ def manifest_read(spark: SparkSession, root: str | Path, sub: str = "",
         # live files exist but all were zone-map-pruned: empty result
         # with the real schema (from a live file, schema-only)
         first_live = next(f for f in m["files"] if f.startswith(want))
-        schema = (
-            spark.read.option("basePath", str(base))
-            .parquet(str(rootp / first_live)).schema
-        )
+        schema = read_parquet(spark, str(rootp / first_live), base=str(base)).schema
         return spark.createDataFrame([], schema)
     if not paths:
         # A manifest exists but lists no live files under the subtree.
@@ -748,9 +749,7 @@ def manifest_read(spark: SparkSession, root: str | Path, sub: str = "",
         ghosts = [str(rootp / f) for f in scan_parquet_files(rootp)
                   if f.startswith(want) and (rootp / f).exists()]
         if ghosts:
-            schema = (
-                spark.read.option("basePath", str(base)).parquet(*ghosts).schema
-            )
+            schema = read_parquet(spark, *ghosts, base=str(base)).schema
             return spark.createDataFrame([], schema)
         from pyspark.errors import AnalysisException
 
@@ -758,7 +757,7 @@ def manifest_read(spark: SparkSession, root: str | Path, sub: str = "",
             f"[PATH_NOT_FOUND] manifest snapshot generation "
             f"{m['generation']} has no live files under {base}"
         )
-    return spark.read.option("basePath", str(base)).parquet(*paths)
+    return read_parquet(spark, *paths, base=str(base))
 
 
 def _rewrite_dropping_rows(spark: SparkSession, rootp: Path, live: set[str],

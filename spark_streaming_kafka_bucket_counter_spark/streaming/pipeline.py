@@ -23,6 +23,7 @@ batch id.
 
 from __future__ import annotations
 
+import os
 import shutil
 import tempfile
 import uuid
@@ -331,9 +332,19 @@ def _write_batch_partition(df: DataFrame, out_path: str, batch_id: int) -> None:
 
 def _land(spark: SparkSession, df: DataFrame, out_path: str, batch_id: int) -> DataFrame:
     """:func:`_write_batch_partition`, then read the landed rows back —
-    the durable copy an index append feeds from (output before index)."""
+    the durable copy an index append feeds from (output before index).
+    Only this batch's leaf is listed; ``basePath`` keeps its ``batch_id``
+    column, typed by partition inference as in a read of the whole tree.
+    A batch with no survivors (all near-duplicates of the index) writes
+    no leaf, and lands as an empty frame."""
     _write_batch_partition(df, out_path, batch_id)
-    return spark.read.parquet(out_path).filter(F.col("batch_id") == batch_id)
+    leaf = os.path.join(out_path, f"batch_id={batch_id}")
+    jleaf = getattr(spark._jvm, "org.apache.hadoop.fs.Path")(leaf)
+    if not jleaf.getFileSystem(spark._jsc.hadoopConfiguration()).exists(jleaf):
+        return spark.createDataFrame(
+            [], df.withColumn("batch_id", F.lit(batch_id)).schema
+        )
+    return spark.read.option("basePath", out_path).parquet(leaf)
 
 
 def start_near_dup_ingest(

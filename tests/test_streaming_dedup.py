@@ -498,6 +498,73 @@ def test_ingest_loops_survive_empty_first_batch(spark, tmp_path):
     assert {r["vec_id"] for r in spark.read.parquet(vout).collect()} == set(range(16))
 
 
+def test_ingest_loops_survive_all_duplicate_batch(spark, tmp_path):
+    """A non-bootstrap batch whose every doc near-matches the index (a
+    re-send) has no survivors: its partitioned write creates no
+    ``batch_id=`` leaf, so the read-back must yield an empty frame, not
+    PATH_NOT_FOUND. The query finishes and the curated table keeps
+    exactly the first batch."""
+    from spark_streaming_kafka_bucket_counter_spark.streaming.pipeline import (
+        start_near_dup_ingest,
+        start_semantic_dedup_ingest,
+    )
+
+    def _two_batches(src, first, second):
+        src.mkdir()
+        f1, f2 = src / "a.json", src / "b.json"
+        f1.write_text("\n".join(json.dumps(r) for r in first))
+        f2.write_text("\n".join(json.dumps(r) for r in second))
+        now = time.time()
+        os.utime(f1, (now - 60, now - 60))
+        os.utime(f2, (now, now))
+        return str(src)
+
+    alpha = "the quick brown fox jumps over the lazy dog about topic alpha " * 3
+    b1 = [
+        {"doc_id": 1, "text": alpha + "one"},
+        {"doc_id": 2, "text": "completely different content with its own words entirely"},
+    ]
+    b2 = [
+        {"doc_id": 10, "text": alpha + "one extra"},  # near-copy of 1
+        {"doc_id": 11, "text": b1[1]["text"]},  # exact re-send of 2
+    ]
+    stream = (
+        spark.readStream.schema("doc_id long, text string")
+        .option("maxFilesPerTrigger", 1)
+        .json(_two_batches(tmp_path / "src", b1, b2))
+    )
+    out = str(tmp_path / "out")
+    q = start_near_dup_ingest(
+        stream, "doc_id", "text", str(tmp_path / "idx"), out, str(tmp_path / "ck")
+    )
+    assert q.awaitTermination(300)
+    assert sorted(r["doc_id"] for r in spark.read.parquet(out).collect()) == [1, 2]
+    assert q.lastProgress["batchId"] == 1  # the all-duplicate batch ran
+
+    def vec(i):
+        return [1.0, float(i), float((i * i) % 7), 1.0]
+
+    v1 = [{"vec_id": i, "embedding": vec(i)} for i in range(16)]
+    # scaled copies of indexed vectors: cosine 1.0 -> dropped
+    v2 = [
+        {"vec_id": 100, "embedding": [2.0 * x for x in vec(3)]},
+        {"vec_id": 101, "embedding": [3.0 * x for x in vec(5)]},
+    ]
+    vstream = (
+        spark.readStream.schema("vec_id long, embedding array<float>")
+        .option("maxFilesPerTrigger", 1)
+        .json(_two_batches(tmp_path / "vsrc", v1, v2))
+    )
+    vout = str(tmp_path / "vout")
+    q2 = start_semantic_dedup_ingest(
+        vstream, "vec_id", "embedding", str(tmp_path / "vidx"), vout,
+        str(tmp_path / "vck"),
+    )
+    assert q2.awaitTermination(300)
+    assert {r["vec_id"] for r in spark.read.parquet(vout).collect()} == set(range(16))
+    assert q2.lastProgress["batchId"] == 1
+
+
 def test_search_index_ingest_stream_end_to_end(spark, tmp_path):
     """BM25 leg of the streaming ingest triad: two micro-batches fold
     segments into the persisted index; querying it afterwards must score

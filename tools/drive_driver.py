@@ -107,6 +107,9 @@ def _session_memory_mb() -> dict[str, int]:
 _MEM_HWM_MB = {
     "/root/testdata/sf0.01": {"python_peak_mb": 1725, "jvm_peak_mb": 3214}
 }
+# the DuckDB version the marks above were recorded under: the python peak
+# is the oracle's, so a DuckDB upgrade re-bases them (ADVICE r13 #4)
+_MEM_HWM_DUCKDB = "1.0.0"
 
 
 def main() -> int:
@@ -155,7 +158,8 @@ def main() -> int:
     mem = _session_memory_mb()
     print(
         f"session memory peak: python {mem['python_peak_mb']} MiB, "
-        f"jvm {mem['jvm_peak_mb']} MiB",
+        f"jvm {mem['jvm_peak_mb']} MiB (duckdb {duckdb.__version__}; "
+        f"marks recorded under {_MEM_HWM_DUCKDB})",
         flush=True,
     )
     if not subset:
