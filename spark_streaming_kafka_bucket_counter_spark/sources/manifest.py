@@ -88,6 +88,10 @@ MANIFEST_DIR = "_manifest"
 #: trail; readers only ever resolve the latest)
 KEEP_GENERATIONS = 4
 LEASE_NAME = "_lease"
+#: hidden root-level staging directories: files are written here, then
+#: renamed into their leaf; a crash leaves the directory for GC
+COMPACT_STAGE_PREFIX = "_compactstage_"
+COMMIT_STAGE_PREFIX = "_commitstage_"
 #: a dead maintainer's lease is broken after this long even when its
 #: pid can't be probed (cross-host; pid-liveness handles same-host)
 LEASE_TIMEOUT_SEC = 1800.0
@@ -813,7 +817,7 @@ def _rewrite_dropping_rows(spark: SparkSession, rootp: Path, live: set[str],
             )
             if keep.limit(1).count() == 0:
                 continue  # whole file forgotten: retire, no replacement
-            staged = rootp / f"_compactstage_{uuid.uuid4().hex[:8]}"
+            staged = rootp / f"{COMPACT_STAGE_PREFIX}{uuid.uuid4().hex[:8]}"
             keep.coalesce(1).write.mode("overwrite").parquet(str(staged))
             leaf_dir = (rootp / rel).parent
             leaf_rel = os.path.dirname(rel)
@@ -940,13 +944,15 @@ def _gc(rootp: Path, grace_sec: float) -> int:
                 d.rmdir()  # fails (kept) unless truly empty
             except OSError:
                 pass
-    # staging debris from a compaction that crashed before its publish
-    # (hidden from readers and scans; safe to sweep once aged)
+    # staging debris from a compaction or a driver-side commit that
+    # crashed before its publish (hidden from readers and scans; safe to
+    # sweep once aged)
     import shutil
 
     for name in os.listdir(rootp):
         p = rootp / name
-        if name.startswith("_compactstage_") and p.is_dir():
+        stage = name.startswith((COMPACT_STAGE_PREFIX, COMMIT_STAGE_PREFIX))
+        if stage and p.is_dir():
             try:
                 if p.stat().st_mtime <= cutoff:
                     shutil.rmtree(p, ignore_errors=True)
@@ -1000,7 +1006,7 @@ def compact_index_tree(spark: SparkSession, root: str | Path,
             if len(leaf_files) <= target_files:
                 continue
             df = spark.read.parquet(*[str(rootp / f) for f in leaf_files])
-            staged = rootp / f"_compactstage_{uuid.uuid4().hex[:8]}"
+            staged = rootp / f"{COMPACT_STAGE_PREFIX}{uuid.uuid4().hex[:8]}"
             df.coalesce(target_files).write.mode("overwrite").parquet(str(staged))
             leaf_dir = rootp / leaf if leaf else rootp
             for pf in sorted(staged.glob("*.parquet")):

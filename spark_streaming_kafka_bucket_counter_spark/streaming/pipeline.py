@@ -5,8 +5,9 @@ and ``ss_kafka_bucket_counter``, main.py:91-133).
 Reference dataflow: Kafka -> drop keys -> JSON parse + project + bucket ->
 per-batch reduceByKey count -> accumulator flip -> mp.Queue -> SQLite.
 Here: ``readStream`` -> ``from_json`` projection -> bucket columns ->
-``foreachBatch`` (per-batch groupBy().count() + partitioned parquet append
-tagged with batch_id). One process, one lineage, checkpointed.
+``foreachBatch`` (per-batch groupBy().count() + a serving-store commit
+of the counts under ``RST_ID=batch_id``). One process, one lineage,
+checkpointed.
 
 Two count semantics (SURVEY §2.11), both supported:
 - ``per_batch`` (default, reference serving parity): the same bucket key
@@ -17,8 +18,11 @@ Two count semantics (SURVEY §2.11), both supported:
 
 Scale: the only shuffle is the per-batch partial->final hash aggregation;
 source parallelism = Kafka partition count (vs the reference's single
-receiver, main.py:115); sink writes are file appends partitioned by
-batch id.
+receiver, main.py:115). The sink commit brings each batch's counts to
+the driver in one Arrow collect and writes them with pyarrow under the
+batch's ``RST_ID`` partition (``ServingStore.append``), so a micro-batch
+runs no Spark write job; the counts are O(distinct keys per batch), and
+``spark.driver.maxResultSize`` bounds them.
 """
 
 from __future__ import annotations
