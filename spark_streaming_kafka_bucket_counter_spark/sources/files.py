@@ -366,20 +366,6 @@ def cached_index_dir(
     return str(root)
 
 
-def remove_dir_or_link(path) -> None:
-    """Remove a partition slot: a symlink slot drops the link AND its
-    versioned data dir; a real dir is rmtree'd. (``shutil.rmtree``
-    silently refuses symlinks, so callers can't use it directly.)"""
-    import shutil
-
-    if path.is_symlink():
-        target = path.parent / os.readlink(path)
-        path.unlink(missing_ok=True)
-        shutil.rmtree(target, ignore_errors=True)
-    else:
-        shutil.rmtree(path, ignore_errors=True)
-
-
 def open_or_none(path: str | None) -> str | None:
     """File-or-None loader (reference S9, utils.py:375-381)."""
     if not path:

@@ -77,7 +77,7 @@ import threading
 import time
 import uuid
 from pathlib import Path
-from typing import Iterator, Sequence
+from typing import Collection, Iterator, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -974,13 +974,17 @@ def _gc(rootp: Path, grace_sec: float) -> int:
 
 
 def compact_index_tree(spark: SparkSession, root: str | Path,
-                       target_files: int = 1, grace_sec: float = 300.0) -> int:
+                       target_files: int = 1, grace_sec: float = 300.0,
+                       leaves: Collection[str] | None = None) -> int:
     """Small-files maintenance for a manifest-managed index: rewrite
     every leaf holding more than ``target_files`` live data files down
     to ``target_files``, publish the snapshot that swaps them in, then
-    GC. Readers never coordinate: until the new snapshot lands they
-    plan over the old files (which stay on disk through the grace
-    window); after it, over the compacted ones. A crash at any point
+    GC. ``leaves`` (relative leaf directories, e.g. ``"RST_ID=3"``)
+    restricts the rewrite to that subset — the serving store compacts
+    only its frozen batches; None rewrites every leaf. Readers never
+    coordinate: until the new snapshot lands they plan over the old
+    files (which stay on disk through the grace window); after it,
+    over the compacted ones. A crash at any point
     leaves either the old snapshot fully intact (moved-but-unpublished
     files are orphans GC removes) or the new one. File contents merge
     verbatim — partition values live in directory names — so query
@@ -1004,6 +1008,8 @@ def compact_index_tree(spark: SparkSession, root: str | Path,
         now = time.time()
         for leaf, leaf_files in sorted(by_leaf.items()):
             if len(leaf_files) <= target_files:
+                continue
+            if leaves is not None and leaf not in leaves:
                 continue
             df = spark.read.parquet(*[str(rootp / f) for f in leaf_files])
             staged = rootp / f"{COMPACT_STAGE_PREFIX}{uuid.uuid4().hex[:8]}"

@@ -36,7 +36,7 @@ from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from urllib.parse import unquote
 
 from . import api
-from .serving import CommandRejected, ServingStore
+from .serving import CommandRejected, EmptyStoreError, ServingStore
 
 
 def _route(store: ServingStore, path: str, max_rows: int | None = None):
@@ -96,13 +96,12 @@ def make_server(
                 # executes (serving.reject_non_query); 403 = the route
                 # exists, the statement kind is forbidden
                 status, payload = 403, {"error": str(exc)}
-            except ValueError as exc:
+            except EmptyStoreError:
                 # empty store (e.g. right after /r): reads answer [],
                 # matching the reference's freshly-reset table
-                if "empty" in str(exc):
-                    status, payload = 200, []
-                else:
-                    status, payload = 400, {"error": str(exc)}
+                status, payload = 200, []
+            except ValueError as exc:  # malformed path argument
+                status, payload = 400, {"error": str(exc)}
             except Exception as exc:  # surface as JSON, not a stack page
                 status, payload = 500, {"error": f"{type(exc).__name__}: {exc}"}
             body = json.dumps(payload, default=str).encode()

@@ -25,11 +25,16 @@ Spark-first redesign:
   ``foreachBatch`` — monotone and checkpoint-recovered, reproducing the
   reference's ``MAX(RST_ID)+1`` crash-recovery init (models.py:526-536)
   without the race.
-- retention (R2) deletes whole partition directories — O(#batches), not
-  O(#rows), vs the reference's row-scan DELETE.
+- retention (R2) retires whole partitions from the snapshot —
+  O(#batches), not O(#rows), vs the reference's row-scan DELETE.
+- the manifest is the store's only truth: every mutation publishes a
+  snapshot and every read resolves one, so a store without a manifest
+  is empty. Compaction is the index trees' ``compact_index_tree`` over
+  the frozen partitions. Stores written before round 9 upgrade once
+  through ``tools/migrate_store.py``; the store refuses to open them.
 - idempotence: re-running a batch after crash REPLACES its own
-  partition at manifest level (round 9 — scoped snapshot commit, the
-  same substrate as the LSH/IVF/BM25 indexes), giving effectively-once
+  partition at manifest level (scoped snapshot commit, the same
+  substrate as the LSH/IVF/BM25 indexes), giving effectively-once
   serving output on top of at-least-once delivery — strictly better than
   the reference's double-buffer accumulator flip (main.py:204-237) —
   while readers pinned to the prior snapshot keep a complete file set
@@ -159,31 +164,49 @@ def reject_non_query(spark: SparkSession, sql: str) -> None:
                 pass  # expression leaves / API drift: nothing to descend
 
 
+class EmptyStoreError(ValueError):
+    """A read found no committed batch: the store has no manifest yet
+    (nothing was ever committed, or only a crashed first commit's
+    files sit on disk) or its snapshot lists no files (everything was
+    cleaned, forgotten or reset). The HTTP surface answers ``[]``, as
+    the reference's freshly reset table does."""
+
+
+class LegacyStoreLayoutError(RuntimeError):
+    """The store root holds a pre-manifest layout (symlinked ``RST_ID=``
+    partitions, hidden ``_data_``/``_gc_`` version directories, or
+    ``_compact_``/``_old_`` swap debris). Run ``tools/migrate_store.py
+    PATH`` once to upgrade it; the store never reads or rewrites those
+    layouts itself."""
+
+
+#: root entries only the pre-manifest layouts wrote (current staging
+#: directories are ``_compactstage_``/``_commitstage_``, not matched)
+_LEGACY_PREFIXES = ("_data_", "_gc_", "_compact_", "_old_")
+
+
 class ServingStore:
     """Parquet-backed, rst_id-partitioned serving table on the MANIFEST
-    substrate (round 9, VERDICT r8 ask #6 — previously a bespoke
-    symlink-versioned layout).
+    substrate (:mod:`..sources.manifest`, shared with the LSH/IVF/BM25
+    indexes). The manifest is the store's only truth: a store without
+    one is empty, whatever ``RST_ID=`` directories sit on disk (a crash
+    during the very first commit leaves such a leaf; the replayed
+    batch's commit retires it).
 
-    Every mutation (append / compact / delete / clean) runs inside a
-    :func:`~..sources.manifest.manifest_txn` and publishes the next
-    snapshot; reads resolve ONE snapshot and plan over its explicit
-    file list, so a concurrent replace, compaction, or retention clean
-    can never yank a planned file — external readers get the same
-    0-transient contract the LSH/IVF/BM25 indexes got in round 8, now
-    INCLUDING retention deletes (the symlink scheme was reader-atomic
-    per partition swap, but ``clean()`` hard-deleted whole partitions
-    under in-flight scans). Displaced and dropped files RETIRE and are
-    GC'd after ``gc_grace_sec``; generation time travel
-    (:meth:`snapshot` + :meth:`view_at`) and row-level
-    right-to-be-forgotten (:meth:`forget`) come with the substrate.
+    Every mutation (append / compact / delete / clean / forget) runs
+    inside a :func:`~..sources.manifest.manifest_txn` (compaction inside
+    :func:`~..sources.manifest.compact_index_tree`) and publishes the
+    next snapshot; reads resolve ONE snapshot and plan over its
+    explicit file list, so a concurrent replace, compaction, or
+    retention clean can never yank a planned file. Displaced and
+    dropped files RETIRE and are GC'd after ``gc_grace_sec``;
+    generation time travel (:meth:`snapshot` + :meth:`view_at`) and
+    row-level right-to-be-forgotten (:meth:`forget`) come with the
+    substrate. A read resolves one snapshot and never lists the root,
+    takes the maintainer lease or changes the filesystem.
 
-    Pre-round-9 stores (symlink partitions pointing at hidden
-    ``_data_*`` version dirs, or the older two-rename ``_compact_`` /
-    ``_old_`` debris) self-heal and migrate on first metadata read:
-    recovery finishes/rolls back interrupted legacy swaps, symlinks
-    materialize into real partition dirs, and the first transaction
-    ADOPTS the tree as generation 1 (manifest.py's unmanaged-tree
-    adoption) — no data vanishes on the upgrade path.
+    Opening a root that still holds a pre-manifest layout raises
+    :class:`LegacyStoreLayoutError` naming ``tools/migrate_store.py``.
 
     clean_interval / clean_freq semantics follow the reference defaults
     (keep 100 batches, clean every 10; main.py:71-72).
@@ -210,89 +233,24 @@ class ServingStore:
         self.gc_grace_sec = gc_grace_sec
         self.path.mkdir(parents=True, exist_ok=True)
         self._batches_since_clean = 0
-        self._migrated = False
-
-    # -- legacy layout migration (one-time, round 9) ----------------------
-    def _migrate_legacy_layout(self) -> None:
-        """Materialize the pre-manifest symlink layout into plain
-        partition dirs so the manifest can manage the files directly:
-        resolve each ``RST_ID=<b>`` symlink and move its hidden version
-        dir into the slot, then sweep the remaining hidden ``_data_`` /
-        ``_gc_`` version dirs (displaced long ago). One-time upgrade
-        per store — a no-op once a manifest exists or when no symlinks
-        remain. The move is unlink+rename (the same two-syscall window
-        the legacy layout paid once per pre-symlink partition); after
-        it, reader atomicity is the manifest's job, not the
-        filesystem's."""
-        from ..sources.manifest import latest_manifest
-
-        # legacy two-rename debris self-heals on EVERY metadata read, as
-        # it always has — a store restored from an old backup can
-        # surface it at any time, and recovery is two cheap globs
-        self._recover_compactions()
-        if self._migrated:
-            return
-        if latest_manifest(self.path) is None and self._legacy_entries():
-            # the migration MUTATES the tree, so even when reached from
-            # a read path it must hold the maintainer lease: two readers
-            # of a legacy store would otherwise interleave unlink+rename
-            # on the same symlinks (r9 review catch)
-            from ..sources.manifest import (
-                ConcurrentMaintainerError,
-                _maintainer_lease,
+        with os.scandir(self.path) as it:
+            legacy = sorted(
+                e.name for e in it
+                if (e.is_symlink() and e.name.startswith(f"{RST_COL}="))
+                or (e.name.startswith(_LEGACY_PREFIXES)
+                    and (e.is_dir() or e.is_symlink()))
             )
-
-            try:
-                with _maintainer_lease(self.path):
-                    if latest_manifest(self.path) is None:
-                        self._do_legacy_migration()
-            except ConcurrentMaintainerError:
-                # another process is migrating (or writing) right now:
-                # wait for the layout to settle instead of racing it
-                deadline = time.time() + 30.0
-                while time.time() < deadline and self._legacy_entries():
-                    time.sleep(0.2)
-        self._migrated = True
-
-    def _legacy_entries(self) -> bool:
-        for p in self.path.iterdir():
-            if p.is_symlink() and p.name.startswith(f"{RST_COL}="):
-                return True
-            if p.is_dir() and not p.is_symlink() and (
-                p.name.startswith("_data_") or p.name.startswith("_gc_")
-            ):
-                return True
-        return False
-
-    def _do_legacy_migration(self) -> None:
-        # per-entry tolerance: a racer that slipped before the lease
-        # existed degrades to a skipped entry, not a crashed read
-        for p in sorted(self.path.iterdir()):
-            if p.is_symlink() and p.name.startswith(f"{RST_COL}="):
-                try:
-                    target = p.resolve()
-                    p.unlink()
-                    target.rename(p)
-                except OSError:
-                    continue
-        for p in sorted(self.path.iterdir()):
-            if (
-                p.is_dir()
-                and not p.is_symlink()
-                and (p.name.startswith("_data_") or p.name.startswith("_gc_"))
-            ):
-                shutil.rmtree(p, ignore_errors=True)
+        if legacy:
+            raise LegacyStoreLayoutError(
+                f"serving store at {self.path} has a pre-manifest layout "
+                f"({', '.join(legacy[:3])}); run "
+                f"tools/migrate_store.py {self.path} once to upgrade it"
+            )
 
     def _snapshot(self) -> dict | None:
         from ..sources.manifest import latest_manifest
 
-        self._migrate_legacy_layout()
         return latest_manifest(self.path)
-
-    def _remove_partition(self, part: Path) -> None:
-        from ..sources.files import remove_dir_or_link
-
-        remove_dir_or_link(part)
 
     # -- K7/K8: tagged (bulk) insert ------------------------------------
     def append(self, df: DataFrame, batch_id: int) -> None:
@@ -330,7 +288,6 @@ class ServingStore:
         t0 = time.perf_counter()
         table = df.withColumn(_PID_COL, F.spark_partition_id()).toArrow()
         t1 = time.perf_counter()
-        self._migrate_legacy_layout()
         leaf = f"{RST_COL}={b}"
         with manifest_txn(self.path, replace_prefixes=[leaf]):
             t2 = time.perf_counter()
@@ -387,61 +344,17 @@ class ServingStore:
         return len(names)
 
     # -- catalog (D1-D3) -------------------------------------------------
-    def _recover_compactions(self) -> None:
-        """Finish or roll back LEGACY compaction swaps interrupted by a
-        crash — pre-round-6 stores used a two-rename swap
-        (``part -> _old_<b>`` then ``_compact_<b> -> part``); a crash
-        between them leaves the batch only under ``_old_<b>``, which
-        Spark's file listing hides — the batch would silently vanish
-        from ``view()``/``view_asof()``. Called from every metadata read
-        (``_batch_ids``) so any store open self-heals: an orphaned
-        ``_compact_<b>`` with its live partition missing is promoted
-        (the compacted data is complete — the swap just didn't finish);
-        a leftover ``_old_<b>`` is restored when the live partition is
-        gone and discarded when it exists.
-
-        The current manifest layout cannot strand a batch: a crash
-        before the commit only leaves orphans that GC sweeps, and the
-        snapshot keeps serving the prior state.
-        """
-        for tmp in self.path.glob("_compact_*"):
-            b = tmp.name[len("_compact_") :]
-            part = self.path / f"{RST_COL}={b}"
-            if not part.exists():
-                tmp.rename(part)  # crash between the two renames: finish
-            else:
-                # crash before the first rename: live partition is intact,
-                # the staged rewrite is redundant — compact() will redo it
-                self._remove_partition(tmp)
-        for bak in self.path.glob("_old_*"):
-            b = bak.name[len("_old_") :]
-            part = self.path / f"{RST_COL}={b}"
-            if part.exists():
-                # swap finished: drop the backup (and, when the backup is
-                # a displaced symlink, its versioned data dir)
-                self._remove_partition(bak)
-            else:
-                bak.rename(part)  # compacted copy lost: restore original
-
     @staticmethod
-    def _ids_of(files) -> list[int]:
+    def _ids_of(m: dict | None) -> list[int]:
         ids = set()
-        for f in files:
+        for f in m["files"] if m else ():
             head = f.split("/", 1)[0]
             if head.startswith(f"{RST_COL}="):
                 ids.add(int(head.split("=", 1)[1]))
         return sorted(ids)
 
-    def _batch_ids(self, snapshot: dict | None = None) -> list[int]:
-        m = snapshot if snapshot is not None else self._snapshot()
-        if m is not None:
-            return self._ids_of(m["files"])
-        # unmanaged (never-mutated-by-round-9-code) store: directory truth
-        return sorted(
-            int(p.name.split("=", 1)[1])
-            for p in self.path.iterdir()
-            if p.is_dir() and p.name.startswith(f"{RST_COL}=")
-        )
+    def _batch_ids(self) -> list[int]:
+        return self._ids_of(self._snapshot())
 
     def exists(self) -> bool:
         """D2: table-exists check (vs sqlite_master probe, models.py:226-250)."""
@@ -451,8 +364,8 @@ class ServingStore:
         """The latest manifest snapshot — pass to :meth:`view_at` (or
         hold across several queries) to pin ONE consistent store state
         while ingestion, compaction, and retention keep running behind
-        it; valid as long as the GC grace window. None for a legacy
-        store no round-9 code has mutated yet."""
+        it; valid as long as the GC grace window. None until the first
+        commit."""
         return self._snapshot()
 
     def view_at(self, snapshot: dict) -> DataFrame:
@@ -462,35 +375,25 @@ class ServingStore:
         return self._view_from(snapshot)
 
     def _view_from(self, m: dict | None, predicate: list | tuple = ()) -> DataFrame:
-        if m is not None:
-            if not m["files"]:
-                raise ValueError(f"serving store at {self.path} is empty")
-            rels = m["files"]
-            if predicate:
-                from ..sources.manifest import files_matching
+        if not m or not m["files"]:
+            raise EmptyStoreError(f"serving store at {self.path} is empty")
+        rels = m["files"]
+        if predicate:
+            from ..sources.manifest import files_matching
 
-                # zone-map file pruning: conjuncts the caller will ALSO
-                # apply as a row filter, so keeping one file as a schema
-                # donor when everything is pruned stays correct
-                rels = files_matching(m, "", predicate) or m["files"][:1]
-            paths = [str(self.path / f) for f in rels]
-            # basePath keeps the RST_ID partition column in the schema;
-            # mergeSchema lets later batches widen the table (schema
-            # evolution) with NULL backfill for older partitions. The
-            # explicit per-file list IS the snapshot pin: files a
-            # maintenance pass retires stay resolvable till GC.
-            return (
-                self.spark.read.option("basePath", str(self.path))
-                .option("mergeSchema", "true")
-                .parquet(*paths)
-            )
-        ids = self._batch_ids()
-        if not ids:
-            raise ValueError(f"serving store at {self.path} is empty")
+            # zone-map file pruning: conjuncts the caller will ALSO
+            # apply as a row filter, so keeping one file as a schema
+            # donor when everything is pruned stays correct
+            rels = files_matching(m, "", predicate) or m["files"][:1]
+        # basePath keeps the RST_ID partition column in the schema;
+        # mergeSchema lets later batches widen the table (schema
+        # evolution) with NULL backfill for older partitions. The
+        # explicit per-file list IS the snapshot pin: files a
+        # maintenance pass retires stay resolvable till GC.
         return (
             self.spark.read.option("basePath", str(self.path))
             .option("mergeSchema", "true")
-            .parquet(*[str(self.path / f"{RST_COL}={i}") for i in ids])
+            .parquet(*[str(self.path / f) for f in rels])
         )
 
     def view(self) -> DataFrame:
@@ -566,7 +469,7 @@ class ServingStore:
         commit landing between the two reads cannot shorten the answer.
         """
         m = self._snapshot()
-        ids = self._batch_ids(m)
+        ids = self._ids_of(m)
         newest = ids[-1] if ids else -1
         return self._view_from(m).filter(F.col(RST_COL) > F.lit(newest - n))
 
@@ -586,30 +489,26 @@ class ServingStore:
     # -- retention (R1-R4) ----------------------------------------------
     def clean(self, clean_interval: int | None = None) -> int:
         """R2: drop batches with ``RST_ID < max - clean_interval``
-        (models.py:702-735). RETIRE-then-GC (round 9): the dropped
-        partitions leave the snapshot immediately — no new query sees
-        them — but their files stay on disk through the GC grace
-        window, so a reader that planned against the previous snapshot
-        finishes its scan untouched (the symlink layout hard-deleted
-        here, the one remaining reader-transient window in the store).
-        Returns the number of batches dropped.
+        (models.py:702-735). RETIRE-then-GC: the dropped partitions
+        leave the snapshot immediately — no new query sees them — but
+        their files stay on disk through the GC grace window, so a
+        reader that planned against the previous snapshot finishes its
+        scan untouched. Returns the number of batches dropped.
         """
         from ..sources.manifest import gc_index_tree, manifest_txn
 
         keep = self.clean_interval if clean_interval is None else clean_interval
         if keep < 0:
             return 0
-        self._migrate_legacy_layout()
         ids = self._batch_ids()
         if not ids:
             return 0
-        cutoff = ids[-1] - keep
-        drop = [i for i in ids if i < cutoff]
-        with manifest_txn(self.path) as txn:
-            if not drop:
-                txn.abort()  # still adopt nothing / publish nothing
-            for i in drop:
-                txn.replace(f"{RST_COL}={i}")
+        drop = [i for i in ids if i < ids[-1] - keep]
+        if drop:
+            with manifest_txn(
+                self.path, replace_prefixes=[f"{RST_COL}={i}" for i in drop]
+            ):
+                pass  # the scopes' files retire; nothing is written
         gc_index_tree(self.path, self.gc_grace_sec)
         return len(drop)
 
@@ -625,55 +524,37 @@ class ServingStore:
         Recent partitions are left alone — they are still inside the
         retention/serving hot window and may be replayed (overwritten)
         by the stream; frozen ones are immutable, so the rewrite is
-        safe. All rewrites publish as ONE snapshot: a concurrent reader
+        safe. The rewrite is the index trees' compactor,
+        :func:`~..sources.manifest.compact_index_tree`, over the frozen
+        leaves: each leaf is staged, renamed beside its old files and
+        all of them publish as ONE snapshot, so a concurrent reader
         plans against either the whole pre-compaction state or the
         whole rewritten one, never a missing/partial leaf — displaced
         files retire and survive until GC's grace window expires so
         readers mid-scan finish cleanly (racing-reader pytest pins it).
         """
-        from ..sources.manifest import gc_index_tree, manifest_txn
+        from ..sources.manifest import compact_index_tree
 
-        self._migrate_legacy_layout()
-        rewritten = 0
-        with manifest_txn(self.path) as txn:
-            # txn.live_files already covers both managed stores (prior
-            # snapshot) and adopted unmanaged ones (pre-scan); frozen
-            # leaves are immutable inside this txn, so no per-leaf
-            # rescan is needed (r9 review: the per-leaf current_live
-            # walked the whole tree once per partition)
-            ids = self._ids_of(txn.live_files)
-            frozen = ids[: -keep_recent] if keep_recent > 0 else ids
-            for b in frozen:
-                leaf = f"{RST_COL}={b}/"
-                files = sorted(
-                    f for f in txn.live_files if f.startswith(leaf)
-                )
-                if len(files) <= target_files:
-                    continue
-                df = self.spark.read.option("basePath", str(self.path)).parquet(
-                    *[str(self.path / f) for f in files]
-                )
-                (
-                    df.coalesce(target_files)
-                    .write.mode("append")
-                    .partitionBy(RST_COL)
-                    .parquet(str(self.path))
-                )
-                txn.replace(leaf)
-                rewritten += 1
-            if not rewritten:
-                txn.abort()
-        gc_index_tree(self.path, self.gc_grace_sec)
-        return rewritten
+        m = self._snapshot()
+        if m is None:
+            return 0
+        ids = self._ids_of(m)
+        frozen = ids[:-keep_recent] if keep_recent > 0 else ids
+        return compact_index_tree(
+            self.spark, self.path, target_files, self.gc_grace_sec,
+            leaves={f"{RST_COL}={b}" for b in frozen},
+        )
 
     def delete(self, conditions: dict[str, object]) -> int:
         """Q3: DELETE with ANDed equality predicates (models.py:447-481).
 
-        Lakehouse-style delete: only partitions containing matching rows
-        are rewritten (read -> anti-filter -> rewrite that partition);
-        untouched batches are untouched files. All partition rewrites
-        land in ONE snapshot — racing readers see pre- or post-delete
-        rows, nothing between. Returns #rows deleted.
+        Lakehouse-style delete: one aggregate over the snapshot's view
+        finds the partitions holding matching rows, and only those are
+        rewritten (anti-filter of the same view -> one partitioned
+        write); untouched batches are untouched files. All partition
+        rewrites land in ONE snapshot — racing readers see pre- or
+        post-delete rows, nothing between. Rows where a condition is
+        NULL are kept. Returns #rows deleted.
         """
         from functools import reduce
 
@@ -681,44 +562,44 @@ class ServingStore:
 
         if not conditions:
             return 0
-        self._migrate_legacy_layout()
         cond = reduce(
             lambda a, b: a & b, [F.col(k) == F.lit(v) for k, v in conditions.items()]
         )
-        deleted = 0
         with manifest_txn(self.path) as txn:
-            for bid in self._batch_ids():
-                part = self.batch(bid)
-                n_match = part.filter(cond).count()
-                if n_match == 0:
-                    continue
-                keep = part.filter(~cond | cond.isNull())
+            # discovery under the lease: no commit can land between the
+            # snapshot the rewrite reads and the one it replaces
+            m = self._snapshot()
+            view = self._view_from(m) if self._ids_of(m) else None
+            hits = {} if view is None else dict(
+                view.filter(cond).groupBy(RST_COL).count().collect()
+            )
+            if not hits:
+                txn.abort()
+            else:
                 (
-                    keep.write.mode("append")
+                    view.filter(F.col(RST_COL).isin(list(hits)))
+                    .filter(~cond | cond.isNull())
+                    .write.mode("append")
                     .partitionBy(RST_COL)
                     .parquet(str(self.path))
                 )
-                txn.replace(f"{RST_COL}={bid}")
-                deleted += n_match
-            if not deleted:
-                txn.abort()
+                for bid in hits:
+                    txn.replace(f"{RST_COL}={bid}")
         gc_index_tree(self.path, self.gc_grace_sec)
-        return deleted
+        return sum(hits.values())
 
     def forget(self, id_col: str, ids: list[int]) -> int:
-        """Right-to-be-forgotten on serving rows (round 9 — free on the
-        manifest substrate, same primitive as ``lsh_forget`` /
-        ``ivf_forget``): rewrite ONLY the data files containing the
-        given ids (pushdown-pruned discovery scan), publish as one
-        snapshot, GC after the grace window — after which the forgotten
-        rows have no bytes on disk anywhere in the store. Unlike
-        :meth:`delete` (the reference's predicate DELETE, partition
-        granular), this is file-granular and id-keyed."""
+        """Right-to-be-forgotten on serving rows (free on the manifest
+        substrate, same primitive as ``lsh_forget`` / ``ivf_forget``):
+        rewrite ONLY the data files containing the given ids
+        (pushdown-pruned discovery scan), publish as one snapshot, GC
+        after the grace window — after which the forgotten rows have no
+        bytes on disk anywhere in the store. Unlike :meth:`delete` (the
+        reference's predicate DELETE, partition granular), this is
+        file-granular and id-keyed."""
         from ..sources.manifest import manifest_forget_rows
 
-        self._migrate_legacy_layout()
-        m = self._snapshot()
-        subtrees = [f"{RST_COL}={i}" for i in self._batch_ids(m)]
+        subtrees = [f"{RST_COL}={i}" for i in self._batch_ids()]
         return manifest_forget_rows(
             self.spark, self.path, id_col, ids, subtrees,
             grace_sec=self.gc_grace_sec,

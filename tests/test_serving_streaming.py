@@ -252,43 +252,6 @@ def test_store_compact_frozen_partitions(spark, tmp_path):
     assert store.view().groupBy().sum("v").collect()[0][0] == before
 
 
-def test_store_compact_crash_recovery(spark, tmp_path):
-    """Every interruption point of compact()'s two-rename swap must
-    self-heal on the next metadata read — a batch can never vanish."""
-    import shutil
-
-    store = ServingStore(spark, str(tmp_path / "rstore"), clean_freq=0)
-    df = spark.range(50).withColumnRenamed("id", "v")
-    for b in range(3):
-        store.append(df.repartition(3), b)
-    total = store.view().groupBy().sum("v").collect()[0][0]
-    part = tmp_path / "rstore" / "RST_ID=0"
-
-    # crash point 1: staged rewrite written, swap not started
-    shutil.copytree(part, tmp_path / "rstore" / "_compact_0")
-    assert store._batch_ids() == [0, 1, 2]
-    assert not (tmp_path / "rstore" / "_compact_0").exists()
-    assert store.view().groupBy().sum("v").collect()[0][0] == total
-
-    # crash point 2: between the renames (batch only under _old_0)
-    shutil.copytree(part, tmp_path / "rstore" / "_compact_0")
-    part.rename(tmp_path / "rstore" / "_old_0")
-    assert store._batch_ids() == [0, 1, 2]  # promoted, not lost
-    assert part.exists() and not (tmp_path / "rstore" / "_old_0").exists()
-    assert store.view().groupBy().sum("v").collect()[0][0] == total
-
-    # crash point 3: swap done, backup dir not yet deleted
-    shutil.copytree(part, tmp_path / "rstore" / "_old_0")
-    assert store._batch_ids() == [0, 1, 2]
-    assert not (tmp_path / "rstore" / "_old_0").exists()
-    assert store.view().groupBy().sum("v").collect()[0][0] == total
-
-    # crash point 2 with the staged copy lost: original restored
-    part.rename(tmp_path / "rstore" / "_old_0")
-    assert store._batch_ids() == [0, 1, 2]
-    assert store.view().groupBy().sum("v").collect()[0][0] == total
-
-
 def test_store_time_travel(spark, tmp_path):
     store = ServingStore(spark, str(tmp_path / "ttstore"), clean_freq=0)
     for b in range(3):
@@ -449,31 +412,3 @@ def test_store_forget_rows(spark, tmp_path):
 
     gc_index_tree(tmp_path / "fstore", grace_sec=0)
     assert sorted(r["user_id"] for r in store.view().collect()) == got
-
-
-def test_store_legacy_symlink_layout_migrates(spark, tmp_path):
-    """A pre-round-9 store (RST_ID=<b> symlinks into hidden _data_*
-    version dirs) must migrate losslessly: symlinks materialize, the
-    first mutation adopts the tree as generation 1, and old version
-    debris is swept — no batch vanishes on upgrade."""
-    import os
-
-    root = tmp_path / "lstore"
-    root.mkdir()
-    for b in range(2):
-        data = root / f"_data_{b}_legacy"
-        spark.createDataFrame([(b, b)], "k long, v long").write.parquet(str(data))
-        os.symlink(data.name, root / f"RST_ID={b}")
-    (root / "_data_9_orphan").mkdir()  # displaced version, swept
-
-    store = ServingStore(spark, str(root), clean_freq=0)
-    assert store._batch_ids() == [0, 1]
-    assert sorted(r["k"] for r in store.view().collect()) == [0, 1]
-    assert not any(p.is_symlink() for p in root.iterdir())
-    assert not (root / "_data_9_orphan").exists()
-
-    # first mutation adopts the migrated tree: nothing vanishes
-    store.append(spark.createDataFrame([(2, 2)], "k long, v long"), 2)
-    m = store.snapshot()
-    assert m is not None and m["generation"] == 1
-    assert sorted(r["k"] for r in store.view().collect()) == [0, 1, 2]
