@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ._cache import persist, scope
+
 __all__ = ["kmeans_lloyd", "kmeans_lloyd_sql", "kmeans_ctes", "kmeans_centroids"]
 
 
@@ -107,13 +109,13 @@ def kmeans_lloyd(
     """
     if k < 1 or iters < 1:
         raise ValueError(f"k and iters must be >= 1: k={k}, iters={iters}")
-    vecs = df.select(
-        F.col(id_col).alias("id"),
-        F.transform(
-            F.col(vec_col), lambda x: F.round(x.cast("double") * scale).cast("long")
-        ).alias("v"),
-    ).persist()
-    try:
+    with scope():
+        vecs = persist(df.select(
+            F.col(id_col).alias("id"),
+            F.transform(
+                F.col(vec_col), lambda x: F.round(x.cast("double") * scale).cast("long")
+            ).alias("v"),
+        ))
         seed_rows = (
             vecs.orderBy(F.md5(F.col("id").cast("string")), F.col("id"))
             .limit(k)
@@ -154,8 +156,6 @@ def kmeans_lloyd(
         return spark.createDataFrame(
             out, "cluster long, dim long, n long, centroid_e6 long"
         )
-    finally:
-        vecs.unpersist()
 
 
 def kmeans_centroids(

@@ -20,6 +20,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import text as X
+from ._cache import persist, scoped
 
 # ---------------------------------------------------------------------------
 # Hashed linear quality classifier (fastText-style, hashing trick)
@@ -90,6 +91,7 @@ def classify_quality_sql(table: str, id_col: str, text_col: str) -> str:
 # ---------------------------------------------------------------------------
 
 
+@scoped
 def boilerplate_stats(
     df: DataFrame,
     id_col: str,
@@ -124,20 +126,18 @@ def boilerplate_stats(
     with fewer than k tokens keep a row with zero counts.
     """
     from ..sources.files import fan_out_scan
-    from ._cache import unpersist_with
 
     # materialize the token array before the shingle HOF (interpreted
     # lambdas re-evaluate inline sub-expressions per element — the
     # doc_shingles lesson), fan the explode out of the single-task scan
     # stage, and persist slots: it feeds BOTH the doc-frequency rollup
     # and the join-back (r12)
-    slots = (
+    slots = persist(
         fan_out_scan(df.select(F.col(id_col), F.col(text_col)), id_col)
         .select(F.col(id_col), X.tokens(F.col(text_col)).alias("_tok"))
         .select(F.col(id_col), F.explode(X.shingles(F.col("_tok"), k)).alias("gram"))
         .groupBy(id_col, "gram")
         .agg(F.count("*").alias("cnt"))
-        .persist()
     )
     docfreq = slots.groupBy("gram").agg(F.count("*").alias("df"))
     per_doc = (
@@ -163,12 +163,11 @@ def boilerplate_stats(
         F.col("n_shingles") > 0,
         F.floor(F.col("n_boiler") * F.lit(1_000_000) / F.col("n_shingles")),
     ).otherwise(F.lit(0))
-    out = out.withColumn("boiler_ppm", ppm.cast("long")).withColumn(
+    return out.withColumn("boiler_ppm", ppm.cast("long")).withColumn(
         "flagged",
         (F.col("n_shingles") > 0)
         & (F.col("n_boiler") * F.lit(100) >= F.col("n_shingles") * F.lit(flag_pct)),
     )
-    return unpersist_with(out, slots)
 
 
 def boilerplate_stats_sql(
@@ -217,6 +216,7 @@ def boilerplate_stats_sql(
 STACK_BITS = ("clf_reject", "boilerplate", "dsir_reject", "duplicate")
 
 
+@scoped
 def curation_stack(
     df: DataFrame,
     id_col: str,
@@ -251,12 +251,12 @@ def curation_stack(
     """
     from pyspark.sql import Window
 
-    feat = df.select(
+    feat = persist(df.select(
         F.col(id_col),
         target_pred.alias("_is_tgt"),
         X.tokens(F.col(text_col)).alias("_tok"),
         X.md5_fingerprint(F.col(text_col)).alias("_fp"),
-    ).persist()
+    ))
 
     # map-side classifier + fingerprint canonicalization on the same frame
     w = Window.partitionBy("_fp")
@@ -330,13 +330,10 @@ def curation_stack(
     flags = F.lit(0)
     for i, name in enumerate(STACK_BITS):
         flags = flags + F.when(preds[name], F.lit(1 << i)).otherwise(F.lit(0))
-    out = stack.select(
+    return stack.select(
         F.col(id_col),
         flags.cast("long").alias("reason_flags"),
     ).withColumn("keep", F.col("reason_flags") == 0)
-    from ._cache import unpersist_with
-
-    return unpersist_with(out, feat)
 
 
 # ---------------------------------------------------------------------------

@@ -33,7 +33,7 @@ from pyspark.sql import functions as F
 
 from ..functions.text import md5_fingerprint, shingles, tokens
 from ..sources.files import fan_out_scan
-from ._cache import unpersist_with
+from ._cache import persist, scope, scoped
 
 # ---------------------------------------------------------------------------
 # Exact dedup
@@ -517,6 +517,7 @@ def doc_shingles(
     return sh
 
 
+@scoped
 def ngram_jaccard_pairs(
     df: DataFrame,
     id_col: str,
@@ -531,16 +532,12 @@ def ngram_jaccard_pairs(
     shingle. Output: doc_a < doc_b, intersection/set sizes (exact ints),
     jaccard (one IEEE division).
     """
-    from ._cache import persist_for_scale
-
     sh = doc_shingles(df, id_col, text_col, k, max_shingle_freq)
     # The inverted index feeds both the sizes agg and the pair join —
-    # materialize it once at scale (persist size-gated r13 — see
-    # persist_for_scale: locally the exploded shingle frame is cheaper
-    # to recompute than to cache).
-    sh = persist_for_scale(sh, df)
-    out = _jaccard_pairs_from_shingles(sh, threshold)
-    return unpersist_with(out, sh)
+    # materialize it once at scale (size-gated r13: locally the
+    # exploded shingle frame is cheaper to recompute than to cache).
+    sh = persist(sh, source=df)
+    return _jaccard_pairs_from_shingles(sh, threshold)
 
 
 def _jaccard_pairs_from_shingles(sh: DataFrame, threshold: float) -> DataFrame:
@@ -569,6 +566,7 @@ def _jaccard_pairs_from_shingles(sh: DataFrame, threshold: float) -> DataFrame:
     )
 
 
+@scoped
 def containment_pairs(
     df: DataFrame,
     id_col: str,
@@ -596,12 +594,7 @@ def containment_pairs(
     Output: (doc_a, doc_b, n_common, size_a, size_b, containment),
     emitted once per direction that clears the threshold.
     """
-    from ._cache import persist_for_scale
-
-    # persist size-gated r13 — see persist_for_scale
-    sh = persist_for_scale(
-        doc_shingles(df, id_col, text_col, k, max_shingle_freq), df
-    )
+    sh = persist(doc_shingles(df, id_col, text_col, k, max_shingle_freq), source=df)
     sizes = sh.groupBy("doc").agg(F.count(F.lit(1)).alias("n_shingles"))
     a = sh.select(F.col("doc").alias("doc_a"), "shingle")
     b = sh.select(F.col("doc").alias("doc_b"), "shingle")
@@ -628,10 +621,10 @@ def containment_pairs(
             (F.col("n_common").cast("double") / F.col("size_b")).alias("containment"),
         )
     )
-    out = directed.filter(F.col("containment") >= threshold)
-    return unpersist_with(out, sh)
+    return directed.filter(F.col("containment") >= threshold)
 
 
+@scoped
 def drop_contained_docs(
     df: DataFrame,
     id_col: str,
@@ -664,12 +657,7 @@ def drop_contained_docs(
         .select(F.col("doc_a").alias(id_col))
         .distinct()
     )
-    from ._cache import adopt_lifetime
-
-    # `pairs` carries containment_pairs' persisted shingle set; the
-    # anti-join result must adopt it or the persist dies at return and
-    # the shingle subtree recomputes uncached (r13 persist audit)
-    return adopt_lifetime(df.join(dropped, id_col, "left_anti"), pairs)
+    return df.join(dropped, id_col, "left_anti")
 
 
 # ---------------------------------------------------------------------------
@@ -716,6 +704,7 @@ def minhash_signatures(
     return hs.groupBy("doc").agg(*aggs)
 
 
+@scoped
 def minhash_lsh_pairs(
     df: DataFrame,
     id_col: str,
@@ -743,22 +732,21 @@ def minhash_lsh_pairs(
     grows with N, so past the bound the verify joins fall back to plain
     shuffle hash joins (AQE picks the strategy).
     """
-    sh = doc_shingles(df, id_col, text_col, k, max_shingle_freq).persist()
+    sh = persist(doc_shingles(df, id_col, text_col, k, max_shingle_freq))
     # shared signature->band stage (one (doc, band_idx, band_key) row
     # per band via explode -> a SINGLE self-join regardless of band
     # count); the cross-corpus path uses the SAME builder, which is what
     # keeps batch and snapshot band keys mutually joinable
     banded = _minhash_banded(sh, num_hashes, bands)
-    candidates = (
+    # read twice downstream (candidate-doc broadcast build + the final
+    # pair join) — without the materialization the whole band pipeline
+    # re-executes per consumer
+    candidates = persist(
         banded.select(F.col("doc").alias("doc_a"), "band", "bk")
         .join(banded.select(F.col("doc").alias("doc_b"), "band", "bk"), ["band", "bk"])
         .filter(F.col("doc_a") < F.col("doc_b"))
         .select("doc_a", "doc_b")
         .distinct()
-        # read twice downstream (candidate-doc broadcast build + the final
-        # pair join) — without the materialization the whole band pipeline
-        # re-executes per consumer
-        .persist()
     )
 
     # Exact-Jaccard verify restricted to candidate docs: semi-join the
@@ -785,7 +773,7 @@ def minhash_lsh_pairs(
         .groupBy("doc")
         .agg(F.collect_set("shingle").alias("sh_set"))
     )
-    out = (
+    return (
         candidates.join(
             hint(
                 doc_sets.select(F.col("doc").alias("doc_a"), F.col("sh_set").alias("set_a"))
@@ -813,7 +801,6 @@ def minhash_lsh_pairs(
         .filter(F.col("jaccard") >= threshold)
         .select("doc_a", "doc_b", "n_common", "size_a", "size_b", "jaccard")
     )
-    return unpersist_with(out, sh, candidates)
 
 
 # ---------------------------------------------------------------------------
@@ -1125,6 +1112,7 @@ def _minhash_banded(
     )
 
 
+@scoped
 def minhash_lsh_cross_pairs(
     incoming: DataFrame,
     snapshot: DataFrame,
@@ -1153,12 +1141,11 @@ def minhash_lsh_cross_pairs(
     Output: (inc_doc, snap_doc, n_common, size_inc, size_snap, jaccard)
     for pairs with jaccard >= threshold.
     """
-    sh_inc = doc_shingles(incoming, id_col, text_col, k, max_shingle_freq).persist()
-    sh_snap = doc_shingles(snapshot, id_col, text_col, k, max_shingle_freq).persist()
+    sh_inc = persist(doc_shingles(incoming, id_col, text_col, k, max_shingle_freq))
+    sh_snap = persist(doc_shingles(snapshot, id_col, text_col, k, max_shingle_freq))
     b_inc = _minhash_banded(sh_inc, num_hashes, bands)
     b_snap = _minhash_banded(sh_snap, num_hashes, bands)
-    out, candidates = _cross_pairs_from_parts(sh_inc, b_inc, sh_snap, b_snap, threshold)
-    return unpersist_with(out, sh_inc, sh_snap, candidates)
+    return _cross_pairs_from_parts(sh_inc, b_inc, sh_snap, b_snap, threshold)
 
 
 def _cross_pairs_from_parts(
@@ -1167,17 +1154,17 @@ def _cross_pairs_from_parts(
     sh_snap: DataFrame,
     b_snap: DataFrame,
     threshold: float,
-) -> tuple[DataFrame, DataFrame]:
-    """Candidate join + exact-Jaccard verify between prebuilt
-    (doc, shingle) and (doc, band, bk) sides — shared by the in-memory
-    cross-corpus path and the persisted-index query path. Returns
-    (result, persisted candidates df for the caller to release)."""
-    candidates = (
-        b_inc.select(F.col("doc").alias("inc_doc"), "band", "bk")
-        .join(b_snap.select(F.col("doc").alias("snap_doc"), "band", "bk"), ["band", "bk"])
+    keys: tuple[str, ...] = ("band", "bk"),
+) -> DataFrame:
+    """Candidate join on ``keys`` + exact-Jaccard verify between
+    prebuilt (doc, shingle) and (doc, band, bk) sides — shared by the
+    in-memory cross-corpus path and the persisted-index query path (the
+    candidate set is persisted in the caller's scope)."""
+    candidates = persist(
+        b_inc.select(F.col("doc").alias("inc_doc"), *keys)
+        .join(b_snap.select(F.col("doc").alias("snap_doc"), *keys), list(keys))
         .select("inc_doc", "snap_doc")
         .distinct()
-        .persist()
     )
     sets_inc = (
         sh_inc.join(candidates.select(F.col("inc_doc").alias("doc")).distinct(), "doc")
@@ -1191,7 +1178,7 @@ def _cross_pairs_from_parts(
         .agg(F.collect_set("shingle").alias("set_snap"))
         .withColumnRenamed("doc", "snap_doc")
     )
-    out = (
+    return (
         candidates.join(sets_inc, "inc_doc")
         .join(sets_snap, "snap_doc")
         .select(
@@ -1209,7 +1196,6 @@ def _cross_pairs_from_parts(
         .filter(F.col("jaccard") >= threshold)
         .select("inc_doc", "snap_doc", "n_common", "size_inc", "size_snap", "jaccard")
     )
-    return out, candidates
 
 
 # ---------------------------------------------------------------------------
@@ -1245,8 +1231,6 @@ def lsh_build_index(
     partition columns, a BROADCAST batch side lets dynamic partition
     pruning skip every band file the batch never touches.
     """
-    sh = doc_shingles(df, id_col, text_col, k, max_shingle_freq).persist()
-    banded = _minhash_banded(sh, num_hashes, bands)
     from pathlib import Path
 
     from ..sources.manifest import manifest_txn
@@ -1254,17 +1238,18 @@ def lsh_build_index(
     bkb = (F.conv(F.substring("bk", 1, 2), 16, 10) % F.lit(LSH_INDEX_BUCKETS)).cast(
         "int"
     )
-    with manifest_txn(path):
+    with scope(), manifest_txn(path):
+        sh = persist(doc_shingles(df, id_col, text_col, k, max_shingle_freq))
         (
-            banded.withColumn("bkb", bkb)
+            _minhash_banded(sh, num_hashes, bands).withColumn("bkb", bkb)
             .write.mode("overwrite")
             .partitionBy("band", "bkb")
             .parquet(str(Path(path) / "bands"))
         )
         sh.write.mode("overwrite").parquet(str(Path(path) / "shingles"))
-    sh.unpersist()
 
 
+@scoped
 def lsh_query_index(
     spark,
     path: str,
@@ -1301,54 +1286,16 @@ def lsh_query_index(
             f"lsh_query_index: no published manifest snapshot under "
             f"{path!r}; bootstrap with lsh_build_index first"
         )
-    sh_inc = doc_shingles(incoming, id_col, text_col, k, max_shingle_freq).persist()
+    sh_inc = persist(doc_shingles(incoming, id_col, text_col, k, max_shingle_freq))
     b_inc = _minhash_banded(sh_inc, num_hashes, bands).withColumn(
         "bkb",
         (F.conv(F.substring("bk", 1, 2), 16, 10) % F.lit(LSH_INDEX_BUCKETS)).cast("int"),
     )
     b_snap = manifest_read(spark, path, "bands", snapshot=snap)
     sh_snap = manifest_read(spark, path, "shingles", snapshot=snap)
-    candidates = (
-        b_inc.select(F.col("doc").alias("inc_doc"), "band", "bkb", "bk")
-        .join(
-            b_snap.select(F.col("doc").alias("snap_doc"), "band", "bkb", "bk"),
-            ["band", "bkb", "bk"],
-        )
-        .select("inc_doc", "snap_doc")
-        .distinct()
-        .persist()
+    return _cross_pairs_from_parts(
+        sh_inc, b_inc, sh_snap, b_snap, threshold, ("band", "bkb", "bk")
     )
-    sets_inc = (
-        sh_inc.join(candidates.select(F.col("inc_doc").alias("doc")).distinct(), "doc")
-        .groupBy("doc")
-        .agg(F.collect_set("shingle").alias("set_inc"))
-        .withColumnRenamed("doc", "inc_doc")
-    )
-    sets_snap = (
-        sh_snap.join(candidates.select(F.col("snap_doc").alias("doc")).distinct(), "doc")
-        .groupBy("doc")
-        .agg(F.collect_set("shingle").alias("set_snap"))
-        .withColumnRenamed("doc", "snap_doc")
-    )
-    out = (
-        candidates.join(sets_inc, "inc_doc")
-        .join(sets_snap, "snap_doc")
-        .select(
-            "inc_doc",
-            "snap_doc",
-            F.size(F.array_intersect("set_inc", "set_snap")).cast("long").alias("n_common"),
-            F.size("set_inc").cast("long").alias("size_inc"),
-            F.size("set_snap").cast("long").alias("size_snap"),
-        )
-        .withColumn(
-            "jaccard",
-            F.col("n_common").cast("double")
-            / (F.col("size_inc") + F.col("size_snap") - F.col("n_common")),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("inc_doc", "snap_doc", "n_common", "size_inc", "size_snap", "jaccard")
-    )
-    return unpersist_with(out, sh_inc, candidates)
 
 
 # ---------------------------------------------------------------------------
@@ -1356,6 +1303,7 @@ def lsh_query_index(
 # ---------------------------------------------------------------------------
 
 
+@scoped
 def minhash_lsh_eval(
     df: DataFrame,
     id_col: str,
@@ -1377,32 +1325,27 @@ def minhash_lsh_eval(
     inverted-index join, so the eval runs at sample scale by design;
     the exact-ppm integer metrics make it oracle-replayable.
     """
-    sh = doc_shingles(df, id_col, text_col, k).persist()
+    sh = persist(doc_shingles(df, id_col, text_col, k))
     banded = _minhash_banded(sh, num_hashes, bands)
     # cand and truth are each consumed TWICE (the true-positive join +
     # their own count aggregate) — without the persists the banded
     # self-join and the full inverted-index truth join execute twice
-    # per eval (r12; lifecycle tied to the result below)
-    cand = (
+    # per eval (r12)
+    cand = persist(
         banded.select(F.col("doc").alias("doc_a"), "band", "bk")
         .join(banded.select(F.col("doc").alias("doc_b"), "band", "bk"), ["band", "bk"])
         .filter(F.col("doc_a") < F.col("doc_b"))
         .select("doc_a", "doc_b")
         .distinct()
-        .persist()
     )
-    truth = (
-        _jaccard_pairs_from_shingles(sh, threshold)
-        .select("doc_a", "doc_b")
-        .persist()
-    )
+    truth = persist(_jaccard_pairs_from_shingles(sh, threshold).select("doc_a", "doc_b"))
     tp = cand.join(truth, ["doc_a", "doc_b"])
     metrics = (
         truth.agg(F.count(F.lit(1)).alias("n_truth"))
         .crossJoin(cand.agg(F.count(F.lit(1)).alias("n_candidates")))
         .crossJoin(tp.agg(F.count(F.lit(1)).alias("n_true_positive")))
     )
-    out = metrics.select(
+    return metrics.select(
         F.col("n_truth").cast("long").alias("n_truth"),
         F.col("n_candidates").cast("long").alias("n_candidates"),
         F.col("n_true_positive").cast("long").alias("n_true_positive"),
@@ -1420,7 +1363,6 @@ def minhash_lsh_eval(
         .cast("long")
         .alias("recall_ppm"),
     )
-    return unpersist_with(out, sh, cand, truth)
 
 
 def lsh_append_index(
@@ -1456,20 +1398,18 @@ def lsh_append_index(
             f"lsh_append_index: no published manifest snapshot under "
             f"{path!r}; bootstrap with lsh_build_index first"
         )
-    sh = doc_shingles(df, id_col, text_col, k, max_shingle_freq).persist()
-    banded = _minhash_banded(sh, num_hashes, bands)
     bkb = (F.conv(F.substring("bk", 1, 2), 16, 10) % F.lit(LSH_INDEX_BUCKETS)).cast(
         "int"
     )
-    with manifest_txn(path):
+    with scope(), manifest_txn(path):
+        sh = persist(doc_shingles(df, id_col, text_col, k, max_shingle_freq))
         (
-            banded.withColumn("bkb", bkb)
+            _minhash_banded(sh, num_hashes, bands).withColumn("bkb", bkb)
             .write.mode("append")
             .partitionBy("band", "bkb")
             .parquet(str(Path(path) / "bands"))
         )
         sh.write.mode("append").parquet(str(Path(path) / "shingles"))
-    sh.unpersist()
 
 
 def lsh_forget(spark, path: str, ids: list[int]) -> int:

@@ -35,6 +35,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ._cache import persist, scoped
+
 
 def _cut_lineage(
     df: DataFrame,
@@ -72,6 +74,7 @@ def _cut_lineage(
     return df.localCheckpoint(eager=eager)
 
 
+@scoped
 def connected_components(
     edges: DataFrame,
     src: str = "doc_a",
@@ -123,7 +126,7 @@ def connected_components(
     # expensive pipeline (LSH candidate generation + verify) — without
     # the cache, building `nodes` would re-run that whole pipeline a
     # second time (measured ~3s of the dedup_clusters budget at sf0.1).
-    e0 = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).persist()
+    e0 = persist(edges.select(F.col(src).alias("a"), F.col(dst).alias("b")))
     nodes = (
         e0.select(F.col("a").alias("node"))
         .unionByName(e0.select(F.col("b").alias("node")))
@@ -207,7 +210,6 @@ def connected_components(
                 prev = cur
     connected_components.last_n_rounds = rounds
     if not converged:
-        e0.unpersist()
         raise RuntimeError(
             f"connected_components did not converge within max_iter={max_iter} "
             "star-alternation rounds (O(log n) expected — this graph would "
@@ -215,15 +217,13 @@ def connected_components(
             "accepting partial labels, which would silently split clusters"
         )
     # fixpoint stars: hi -> component root lo; roots map to themselves.
-    out = (
+    return (
         nodes.join(e.withColumnRenamed("hi", "node"), "node", "left")
         .select("node", F.coalesce(F.col("lo"), F.col("node")).alias("component"))
     )
-    from ._cache import unpersist_with
-
-    return unpersist_with(out, e0)
 
 
+@scoped
 def component_summary(
     edges: DataFrame, src: str = "doc_a", dst: str = "doc_b"
 ) -> DataFrame:
@@ -235,6 +235,7 @@ def component_summary(
     )
 
 
+@scoped
 def drop_near_duplicate_docs(
     docs: DataFrame,
     pairs: DataFrame,
@@ -281,6 +282,7 @@ def transitive_closure_sql(pairs_cte: str, src: str = "doc_a", dst: str = "doc_b
 PR_UNIT = 1_000_000_000  # nano-unit fixed point: total mass = 1e9
 
 
+@scoped
 def pagerank(
     edges: DataFrame,
     src: str,
@@ -311,22 +313,19 @@ def pagerank(
     iterative-DataFrame trap). BIGINT sums of nano-units are exact; no
     float enters the plan.
     """
-    und = (
+    und = persist(
         edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
         .unionByName(edges.select(F.col(dst).alias("u"), F.col(src).alias("v")))
         .distinct()
-        .persist()
     )
     deg = und.groupBy("u").agg(F.count(F.lit(1)).alias("deg"))
     n_nodes = deg.count()  # tiny scalar action (also materializes `und`)
     if n_nodes == 0:
         # empty edge set -> empty result with the node column's true type
         # (a // by n_nodes below would otherwise raise ZeroDivisionError)
-        out = und.select(
+        return und.select(
             F.col("u").alias("node"), F.lit(0).cast("long").alias("rank_e9")
         )
-        und.unpersist()
-        return out
     base = (100 - damping_pct) * PR_UNIT // (100 * n_nodes)
     from ..session import loop_shuffle_partitions, restored_conf
 
@@ -350,7 +349,7 @@ def pagerank(
         # side — one join + one shuffle (the aggregation) per round instead
         # of two joins. The per-edge `r div deg` equals the per-node value
         # (deg is constant within a node's fanout).
-        und_deg = und.join(deg, "u").repartition("u").persist()
+        und_deg = persist(und.join(deg, "u").repartition("u"))
         ranks = deg.select("u", F.lit(PR_UNIT // n_nodes).cast("long").alias("r"))
         for rnd in range(iterations):
             contribs = (
@@ -372,10 +371,7 @@ def pagerank(
                 checkpoint_dir,
                 eager=rnd == iterations - 1,
             )
-    out = ranks.select(F.col("u").alias("node"), F.col("r").alias("rank_e9"))
-    from ._cache import unpersist_with
-
-    return unpersist_with(out, und, und_deg)
+    return ranks.select(F.col("u").alias("node"), F.col("r").alias("rank_e9"))
 
 
 def pagerank_sql(
@@ -425,6 +421,7 @@ LPA_CNT_CAP = 1 << 20  # max neighbor count per node
 LPA_LBL_CAP = 1 << 40  # max label value (labels are node ids)
 
 
+@scoped
 def label_propagation(
     edges: DataFrame,
     src: str,
@@ -451,12 +448,11 @@ def label_propagation(
     # round's labels frame leaves its aggregation already partitioned
     # the same way, so the labels x edges join runs exchange-free every
     # round (same pattern as pagerank's degree-prejoined edge frame).
-    und = (
+    und = persist(
         edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
         .unionByName(edges.select(F.col(dst).alias("u"), F.col(src).alias("v")))
         .distinct()
         .repartition("u")
-        .persist()
     )
     # enforce the encoding caps LOUDLY: labels are node ids (the only
     # values propagation can ever produce) and cnt is bounded by degree,
@@ -510,10 +506,7 @@ def label_propagation(
                 )
                 .localCheckpoint(eager=rnd == iterations - 1)
             )
-    out = labels.select(F.col("u").alias("node"), F.col("label").alias("community"))
-    from ._cache import unpersist_with
-
-    return unpersist_with(out, und)
+    return labels.select(F.col("u").alias("node"), F.col("label").alias("community"))
 
 
 def label_propagation_sql(

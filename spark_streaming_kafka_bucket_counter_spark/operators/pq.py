@@ -52,6 +52,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ._cache import persist, scope, scoped
+
 __all__ = [
     "pq_train",
     "pq_encode",
@@ -267,16 +269,16 @@ def pq_train(
     dsub = dim // m
     spark = df.sparkSession
     vecs = _fixed_vecs(df, id_col, vec_col, scale, already_fixed)
-    subs = vecs.select(
-        "id",
-        F.explode(F.array(*[F.lit(s).cast("int") for s in range(m)])).alias("sub"),
-        F.col("v"),
-    ).select(
-        "id",
-        "sub",
-        F.expr(f"slice(v, sub * {dsub} + 1, {dsub})").alias("sl"),
-    ).persist()
-    try:
+    with scope():
+        subs = persist(vecs.select(
+            "id",
+            F.explode(F.array(*[F.lit(s).cast("int") for s in range(m)])).alias("sub"),
+            F.col("v"),
+        ).select(
+            "id",
+            "sub",
+            F.expr(f"slice(v, sub * {dsub} + 1, {dsub})").alias("sl"),
+        ))
         seed_rows = (
             vecs.orderBy(F.md5(F.col("id").cast("string")), F.col("id"))
             .limit(ksub)
@@ -329,8 +331,6 @@ def pq_train(
                 new_books[(r["sub"], r["cid"])][r["dim"]] = r["c"]
             books = new_books
         return books
-    finally:
-        subs.unpersist()
 
 
 def pq_encode(
@@ -692,6 +692,7 @@ def ivfpq_residual_topk(
     return _rank_topk(scored, top_k)
 
 
+@scoped
 def ivfpq_recall_eval(
     df: DataFrame,
     id_col: str,
@@ -716,16 +717,12 @@ def ivfpq_recall_eval(
     residual quantization buys recall at identical bytes."""
     from .similarity import nonzero_vectors
 
-    from ._cache import persist_for_scale
-
     nz = nonzero_vectors(df, vec_col)
     vecs = _fixed_vecs(nz, id_col, vec_col, scale)
     # the exact-L2 truth table is consumed twice per variant (per-query
     # totals + the hit semi-join) — materialize it ONCE instead of
-    # re-running the crossJoin + window per consumer (r12; persist
-    # size-gated r13 — see persist_for_scale; lifecycle tied to the
-    # returned frame per the _cache convention)
-    truth = persist_for_scale(exact_l2_truth(vecs, query_max_id, top_k), df)
+    # re-running the crossJoin + window per consumer (r12; size-gated r13)
+    truth = persist(exact_l2_truth(vecs, query_max_id, top_k), source=df)
 
     def _ppm(approx: DataFrame, variant: str) -> DataFrame:
         per_q = truth.groupBy("query_id").agg(F.count(F.lit(1)).alias("n_true"))
@@ -749,8 +746,8 @@ def ivfpq_recall_eval(
     # size-gated r13)
     from .similarity import ivf_assign
 
-    assigned = persist_for_scale(
-        ivf_assign(nz, id_col, vec_col, n_centroids, max_rank=nprobe), df
+    assigned = persist(
+        ivf_assign(nz, id_col, vec_col, n_centroids, max_rank=nprobe), source=df
     )
     raw = ivfpq_topk(
         df, id_col, vec_col, raw_books, dim, m, ksub, scale,
@@ -760,11 +757,7 @@ def ivfpq_recall_eval(
         df, id_col, vec_col, res_books, dim, m, ksub, scale,
         n_centroids, nprobe, query_max_id, top_k, res_codes, assigned=assigned,
     )
-    from ._cache import unpersist_with
-
-    return unpersist_with(
-        _ppm(raw, "raw").unionAll(_ppm(res, "residual")), truth, assigned
-    )
+    return _ppm(raw, "raw").unionAll(_ppm(res, "residual"))
 
 
 # ---------------------------------------------------------------------------
@@ -1961,8 +1954,7 @@ def exact_l2_truth(
     per query (id < ``query_max_id``) over the candidate universe
     ``vecs`` — an (id, v) frame of fixed-point integer vectors — self
     excluded, distance ties to the lower cand_id. Returned UNPERSISTED;
-    callers that consume it more than once persist it and own the
-    lifecycle (the `_cache` convention).
+    callers that consume it more than once persist it (``_cache.persist``).
 
     This relation is invariant under a common PERMUTATION of the vector
     coordinates: per-element fixed-point rounding commutes with
@@ -2010,6 +2002,7 @@ def recall_truth(
     return exact_l2_truth(vecs, query_max_id, top_k)
 
 
+@scoped
 def ivfpq_trained_recall_eval(
     df: DataFrame,
     id_col: str,
@@ -2044,7 +2037,7 @@ def ivfpq_trained_recall_eval(
     reused).
 
     ``truth`` optionally supplies an externally persisted
-    :func:`recall_truth` frame; the caller owns its lifecycle (r13 —
+    :func:`recall_truth` frame (r13 —
     lets the OPQ 2x2x2 composition compute the crossJoin+window truth
     ONCE for both its halves instead of once per half)."""
     from .clustering import kmeans_centroids
@@ -2054,18 +2047,12 @@ def ivfpq_trained_recall_eval(
         cents = kmeans_centroids(
             df, id_col, vec_col, k=n_centroids, iters=cell_iters, scale=scale
         )
-    from ._cache import persist_for_scale
-
     nz = nonzero_vectors(df, vec_col)
     vecs = _fixed_vecs(nz, id_col, vec_col, scale)
     # consumed twice per variant x FOUR variants — materialize once
-    # (r12; persist size-gated r13 — see persist_for_scale; lifecycle
-    # tied to the returned frame, _cache convention)
-    own_truth = truth is None
-    if own_truth:
-        truth = persist_for_scale(
-            exact_l2_truth(vecs, query_max_id, top_k), df
-        )
+    # (r12; size-gated r13)
+    if truth is None:
+        truth = persist(exact_l2_truth(vecs, query_max_id, top_k), source=df)
 
     def _ppm(approx: DataFrame, variant: str) -> DataFrame:
         per_q = truth.groupBy("query_id").agg(F.count(F.lit(1)).alias("n_true"))
@@ -2094,13 +2081,13 @@ def ivfpq_trained_recall_eval(
     # size-gated r13)
     from .similarity import ivf_assign
 
-    assigned = persist_for_scale(
-        ivf_assign(nz, id_col, vec_col, n_centroids, max_rank=nprobe), df
+    assigned = persist(
+        ivf_assign(nz, id_col, vec_col, n_centroids, max_rank=nprobe), source=df
     )
     tpairs, tfixed = _trained_pairs(
         df, id_col, vec_col, cents, scale, nprobe, query_max_id
     )
-    tpairs = persist_for_scale(tpairs, df)
+    tpairs = persist(tpairs, source=df)
     raw_seed = ivfpq_topk(
         df, id_col, vec_col, raw_books, dim, m, ksub, scale,
         n_centroids, nprobe, query_max_id, top_k, raw_codes, assigned=assigned,
@@ -2119,16 +2106,12 @@ def ivfpq_trained_recall_eval(
         n_centroids, cell_iters, nprobe, query_max_id, top_k,
         tres_codes, cents, pairs_fixed=(tpairs, tfixed),
     )
-    from ._cache import unpersist_with
-
-    result = (
+    return (
         _ppm(raw_seed, "raw_seed")
         .unionAll(_ppm(res_seed, "residual_seed"))
         .unionAll(_ppm(raw_tr, "raw_trained"))
         .unionAll(_ppm(res_tr, "residual_trained"))
     )
-    cached = (truth, assigned, tpairs) if own_truth else (assigned, tpairs)
-    return unpersist_with(result, *cached)
 
 
 def _trained_cell_ctes(
@@ -2349,6 +2332,7 @@ def ivfpq_trained_recall_sql(
     """
 
 
+@scoped
 def ivfpq_probe_frontier(
     df: DataFrame,
     id_col: str,
@@ -2379,9 +2363,6 @@ def ivfpq_probe_frontier(
 
     _check_dims(dim, m)
     if not probes:
-        # guard BEFORE any persist: an empty frontier would otherwise
-        # fall through to unpersist_with(None, ...) and leak both
-        # persisted frames (ADVICE r12 #1)
         raise ValueError("ivfpq_probe_frontier: probes must be non-empty")
     if cents is None:
         cents = kmeans_centroids(
@@ -2390,92 +2371,70 @@ def ivfpq_probe_frontier(
     max_np = max(probes)
     nz = nonzero_vectors(df, vec_col)
     fixed = _fixed_vecs(nz, id_col, vec_col, scale)
-    from ._cache import persist_for_scale
-
-    ranked = None
-    truth = None
-    try:
-        # persists size-gated r13 — see persist_for_scale
-        ranked = persist_for_scale(_ranked_cells(fixed, cents, max_np), df)
-        if codes is None:
-            codes = pq_encode(df, id_col, vec_col, books, dim, m, ksub, scale)
-        dsub = dim // m
-        cand = ranked.filter(F.col("rn") == 1).select(
-            F.col("id").alias("cand_id"), "cid"
+    # persists size-gated r13
+    ranked = persist(_ranked_cells(fixed, cents, max_np), source=df)
+    if codes is None:
+        codes = pq_encode(df, id_col, vec_col, books, dim, m, ksub, scale)
+    dsub = dim // m
+    cand = ranked.filter(F.col("rn") == 1).select(
+        F.col("id").alias("cand_id"), "cid"
+    )
+    qrows = fixed.filter(F.col("id") < query_max_id).collect()
+    lut = _driver_lut_frame(df.sparkSession, qrows, books, m, ksub, dsub)
+    truth = persist(exact_l2_truth(fixed, query_max_id, top_k), source=df)
+    rows = None
+    for np_ in probes:
+        probes_df = (
+            ranked.filter(
+                (F.col("rn") <= np_) & (F.col("id") < query_max_id)
+            )
+            .select(F.col("id").alias("query_id"), "cid")
         )
-        qrows = fixed.filter(F.col("id") < query_max_id).collect()
-        lut = _driver_lut_frame(df.sparkSession, qrows, books, m, ksub, dsub)
-        truth = persist_for_scale(exact_l2_truth(fixed, query_max_id, top_k), df)
-        rows = None
-        for np_ in probes:
-            probes_df = (
-                ranked.filter(
-                    (F.col("rn") <= np_) & (F.col("id") < query_max_id)
+        pairs = (
+            cand.join(F.broadcast(probes_df), "cid")
+            .filter(F.col("cand_id") != F.col("query_id"))
+            .select("query_id", "cand_id")
+        )
+        scored = (
+            pairs.join(codes.withColumnRenamed("id", "cand_id"), "cand_id")
+            .join(F.broadcast(lut), "query_id")
+            .select(
+                "query_id", "cand_id",
+                F.expr(_adc_dist_sql(m)).alias("adc_dist"),
+            )
+        )
+        approx = _rank_topk(scored, top_k).select("query_id", "cand_id")
+        per_q = truth.groupBy("query_id").agg(
+            F.count(F.lit(1)).alias("n_true")
+        )
+        hits = (
+            truth.join(approx, ["query_id", "cand_id"], "left_semi")
+            .groupBy("query_id")
+            .agg(F.count(F.lit(1)).alias("n_hit"))
+        )
+        npairs = pairs.agg(
+            F.count(F.lit(1)).cast("long").alias("total_pairs")
+        )
+        row = (
+            per_q.join(hits, "query_id", "left")
+            .select(
+                F.expr("coalesce(n_hit, 0) * 1000000 div n_true").alias(
+                    "recall_ppm"
                 )
-                .select(F.col("id").alias("query_id"), "cid")
             )
-            pairs = (
-                cand.join(F.broadcast(probes_df), "cid")
-                .filter(F.col("cand_id") != F.col("query_id"))
-                .select("query_id", "cand_id")
+            .agg(
+                F.lit(np_).cast("long").alias("nprobe"),
+                F.count(F.lit(1)).cast("long").alias("n_queries"),
+                F.lit(top_k).cast("long").alias("k"),
+                F.expr("sum(recall_ppm) div count(1)")
+                .cast("long")
+                .alias("mean_recall_ppm"),
+                F.min("recall_ppm").cast("long").alias("min_recall_ppm"),
             )
-            scored = (
-                pairs.join(codes.withColumnRenamed("id", "cand_id"), "cand_id")
-                .join(F.broadcast(lut), "query_id")
-                .select(
-                    "query_id", "cand_id",
-                    F.expr(_adc_dist_sql(m)).alias("adc_dist"),
-                )
-            )
-            approx = _rank_topk(scored, top_k).select("query_id", "cand_id")
-            per_q = truth.groupBy("query_id").agg(
-                F.count(F.lit(1)).alias("n_true")
-            )
-            hits = (
-                truth.join(approx, ["query_id", "cand_id"], "left_semi")
-                .groupBy("query_id")
-                .agg(F.count(F.lit(1)).alias("n_hit"))
-            )
-            npairs = pairs.agg(
-                F.count(F.lit(1)).cast("long").alias("total_pairs")
-            )
-            row = (
-                per_q.join(hits, "query_id", "left")
-                .select(
-                    F.expr("coalesce(n_hit, 0) * 1000000 div n_true").alias(
-                        "recall_ppm"
-                    )
-                )
-                .agg(
-                    F.lit(np_).cast("long").alias("nprobe"),
-                    F.count(F.lit(1)).cast("long").alias("n_queries"),
-                    F.lit(top_k).cast("long").alias("k"),
-                    F.expr("sum(recall_ppm) div count(1)")
-                    .cast("long")
-                    .alias("mean_recall_ppm"),
-                    F.min("recall_ppm").cast("long").alias("min_recall_ppm"),
-                )
-                .crossJoin(F.broadcast(npairs))
-            )
-            rows = row if rows is None else rows.unionAll(row)
-    except BaseException:
-        # both frames are initialized to None BEFORE the try (ADVICE
-        # r10 #4): a failure anywhere inside — including pq_encode —
-        # leaks neither persist
-        if ranked is not None:
-            ranked.unpersist()
-        if truth is not None:
-            truth.unpersist()
-        raise
-    # On success the caches must OUTLIVE this call: the returned frame
-    # is lazy, so the r10 finally-unpersist evicted both persists before
-    # any consumer executed and every probe row recomputed the ranked
-    # assignment AND the exact-L2 truth from scratch (r12 find). Tie the
-    # unpersists to the result's lifetime instead (_cache convention —
-    # same leak-safety, caches actually serve).
-    from ._cache import unpersist_with
-
-    return unpersist_with(rows, ranked, truth)
+            .crossJoin(F.broadcast(npairs))
+        )
+        rows = row if rows is None else rows.unionAll(row)
+    return rows
 
 
 def ivfpq_probe_frontier_sql(
@@ -2580,6 +2539,7 @@ def ivfpq_probe_frontier_sql(
     """
 
 
+@scoped
 def ivfpq_operating_point(
     frontier: DataFrame, within: float = 0.05
 ) -> DataFrame:
@@ -2595,21 +2555,18 @@ def ivfpq_operating_point(
     Scale shape: the frontier is a #probes-row aggregate (3 rows); the
     max/min reductions and the join-back all ride 1-row broadcasts."""
     thr_bp = round((1.0 - within) * 10_000)
-    f = frontier.persist()
+    f = persist(frontier)
     mx = f.agg(F.max("mean_recall_ppm").alias("_best"))
     best = (
         f.crossJoin(F.broadcast(mx))
         .filter(F.col("mean_recall_ppm") * 10_000 >= F.col("_best") * thr_bp)
         .agg(F.min("nprobe").alias("_chosen"))
     )
-    out = f.crossJoin(F.broadcast(best)).select(
+    return f.crossJoin(F.broadcast(best)).select(
         "nprobe", "n_queries", "k", "mean_recall_ppm", "min_recall_ppm",
         "total_pairs",
         (F.col("nprobe") == F.col("_chosen")).alias("chosen"),
     )
-    from ._cache import unpersist_with
-
-    return unpersist_with(out, f)
 
 
 def ivfpq_operating_point_sql(

@@ -43,6 +43,7 @@ from ..functions.text import (
     tokens,
     tokens_sql,
 )
+from ._cache import persist, scoped
 
 # ---------------------------------------------------------------------------
 # Projection-only repetition signals (no shuffle)
@@ -158,6 +159,7 @@ def top_ngram_stats_sql(table: str, id_col: str, text_col: str, n: int = 2) -> s
 # ---------------------------------------------------------------------------
 
 
+@scoped
 def decontaminate(
     corpus: DataFrame,
     eval_df: DataFrame,
@@ -183,13 +185,13 @@ def decontaminate(
     """
     from pyspark import StorageLevel
 
-    ev_cached = (
+    ev_cached = persist(
         eval_df.select(
             F.explode(F.array_distinct(shingles(tokens(F.col(text_col)), k))).alias("_s")
         )
         .select(token_hash32(F.col("_s")).alias("_h"))
-        .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .distinct(),
+        level=StorageLevel.MEMORY_AND_DISK,
     )
     ev = ev_cached
     if ev_cached.count() <= broadcast_max_grams:
@@ -227,14 +229,9 @@ def decontaminate(
         .otherwise(F.lit(0.0))
         .alias("overlap_frac"),
     )
-    out = out.withColumn(
+    return out.withColumn(
         "contaminated", F.col("overlap_frac") >= F.lit(min_overlap_frac)
     )
-    # release the cached eval-gram set once this result materializes —
-    # without it every call leaks one pinned DataFrame for the session
-    from ._cache import unpersist_with
-
-    return unpersist_with(out, ev_cached)
 
 
 def decontaminate_sql(
@@ -277,6 +274,7 @@ def decontaminate_sql(
 # ---------------------------------------------------------------------------
 
 
+@scoped
 def unigram_logprob(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Per-document mean negative log2-probability under the corpus's own
     unigram language model — the cheap statistical stand-in for the
@@ -301,19 +299,15 @@ def unigram_logprob(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     than (token | doc id); T rides a 1-row broadcast cross join.
     """
     from ..sources.files import fan_out_scan
-    from ._cache import unpersist_with
-
-    from ._cache import persist_for_scale
 
     # occ feeds BOTH the vocab build and the per-doc join — fan the
     # tokenize/explode out of the single-task scan stage and persist it
-    # so the explode runs once (r12; persist size-gated r13 — see
-    # persist_for_scale; lifecycle tied to the result)
-    occ = persist_for_scale(
+    # so the explode runs once (r12; size-gated r13)
+    occ = persist(
         fan_out_scan(df.select(F.col(id_col), F.col(text_col)), id_col).select(
             F.col(id_col), F.explode(tokens(F.col(text_col))).alias("_tok")
         ),
-        df,
+        source=df,
     )
     vocab = occ.groupBy("_tok").agg(F.count(F.lit(1)).alias("_cnt"))
     vocab = vocab.select(
@@ -327,7 +321,7 @@ def unigram_logprob(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
         .groupBy(id_col)
         .agg(F.count(F.lit(1)).alias("n_tokens"), F.sum("_lp9").alias("_s9"))
     )
-    out = (
+    return (
         df.select(F.col(id_col))
         .join(per_doc, id_col, "left")
         .crossJoin(F.broadcast(total))
@@ -344,9 +338,9 @@ def unigram_logprob(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
             .alias("nll_bits"),
         )
     )
-    return unpersist_with(out, occ)
 
 
+@scoped
 def bigram_logprob(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Per-document mean negative log2 CONDITIONAL probability under the
     corpus's own bigram model — the next step up from
@@ -369,15 +363,12 @@ def bigram_logprob(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     < 2 tokens emit m = 0, score 0.
     """
     from ..sources.files import fan_out_scan
-    from ._cache import unpersist_with
 
     t = tokens(F.col(text_col))
-    from ._cache import persist_for_scale
-
     # occ2 feeds BOTH the bigram-vocab build and the per-doc join — fan
     # the tokenize/pair-explode out of the single-task scan stage and
-    # persist it so the explode runs once (r12; persist size-gated r13)
-    occ2 = persist_for_scale((
+    # persist it so the explode runs once (r12; size-gated r13)
+    occ2 = persist((
         fan_out_scan(df.select(F.col(id_col), F.col(text_col)), id_col)
         .select(F.col(id_col), t.alias("_t"))
         .filter(F.size("_t") >= 2)
@@ -391,7 +382,7 @@ def bigram_logprob(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
             ).alias("_p"),
         )
         .select(F.col(id_col), F.col("_p.w1").alias("_w1"), F.col("_p.w2").alias("_w2"))
-    ), df)
+    ), source=df)
     v2 = occ2.groupBy("_w1", "_w2").agg(F.count(F.lit(1)).alias("_c2"))
     v1 = v2.groupBy("_w1").agg(F.sum("_c2").alias("_c1"))
     vlp = v2.join(v1, "_w1").select(
@@ -404,7 +395,7 @@ def bigram_logprob(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
         .groupBy(id_col)
         .agg(F.count(F.lit(1)).alias("n_bigrams"), F.sum("_lp9").alias("_s9"))
     )
-    out = (
+    return (
         df.select(F.col(id_col))
         .join(per_doc, id_col, "left")
         .select(
@@ -422,7 +413,6 @@ def bigram_logprob(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
             .alias("nll2_bits"),
         )
     )
-    return unpersist_with(out, occ2)
 
 
 def bigram_logprob_sql(corpus_cte: str, id_col: str, text_col: str) -> str:
@@ -451,6 +441,7 @@ def bigram_logprob_sql(corpus_cte: str, id_col: str, text_col: str) -> str:
       FROM {corpus_cte} c LEFT JOIN _bg_per p USING ({id_col}))"""
 
 
+@scoped
 def bigram_backoff_logprob(
     df: DataFrame,
     id_col: str,
@@ -497,7 +488,6 @@ def bigram_backoff_logprob(
     actually knew).
     """
     from ..sources.files import fan_out_scan
-    from ._cache import unpersist_with
 
     t = tokens(F.col(text_col))
     # occ2 feeds the target-bigram build AND the scoring join; tv2
@@ -507,10 +497,10 @@ def bigram_backoff_logprob(
     # size-gated (r13): the interleaved persist-on/off A/B measured
     # this family's persists WINNING at sf0.1 (ON 1.554s vs OFF 1.635s
     # — three consumers amortize the cache build), unlike the gated
-    # losers; see persist_for_scale.
+    # losers; see the _cache module docstring.
     # fanned WITHOUT projecting first: target_pred is caller-supplied
     # and may reference any input column (e.g. source)
-    occ2 = ((
+    occ2 = persist(
         fan_out_scan(df, id_col)
         .select(F.col(id_col), target_pred.alias("_is_tgt"), t.alias("_t"))
         .filter(F.size("_t") >= 2)
@@ -528,12 +518,11 @@ def bigram_backoff_logprob(
             F.col(id_col), "_is_tgt",
             F.col("_p.w1").alias("_w1"), F.col("_p.w2").alias("_w2"),
         )
-    )).persist()
-    tv2 = (
+    )
+    tv2 = persist(
         occ2.filter(F.col("_is_tgt"))
         .groupBy("_w1", "_w2")
         .agg(F.count(F.lit(1)).alias("_c2"))
-        .persist()
     )
     tv1 = tv2.groupBy("_w1").agg(F.sum("_c2").alias("_c1"))
     v2lp = tv2.join(tv1, "_w1").select(
@@ -573,7 +562,7 @@ def bigram_backoff_logprob(
         ).alias("n_hit1"),
         F.sum(F.coalesce("_lp9", "_lp9u", "_flr9")).alias("_s9"),
     )
-    out = (
+    return (
         df.select(F.col(id_col))
         .join(per_doc, id_col, "left")
         .select(
@@ -590,7 +579,6 @@ def bigram_backoff_logprob(
             .alias("nll_bits"),
         )
     )
-    return unpersist_with(out, occ2, tv2)
 
 
 def bigram_backoff_logprob_sql(

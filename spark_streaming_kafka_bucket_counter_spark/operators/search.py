@@ -22,8 +22,10 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.text import tokens, tokens_sql
+from ._cache import persist, scope, scoped
 
 
+@scoped
 def bm25_topk(
     df: DataFrame,
     id_col: str,
@@ -51,14 +53,13 @@ def bm25_topk(
     )
     # consumed twice (dfreq + scored) — each consumer re-ran the whole
     # corpus tokenize+explode leg; materialize the tiny matched-docs
-    # aggregate once (r13, guide §5; lifecycle tied to the returned
-    # frame per the _cache convention)
-    tf = (
+    # aggregate once (r13, guide §5; ungated — see the _cache module
+    # docstring)
+    tf = persist(
         docs.select(F.col(id_col), "_dl", F.explode("_tok").alias("_t"))
         .filter(F.col("_t").isin(terms))
         .groupBy(id_col, "_dl", "_t")
         .agg(F.count(F.lit(1)).alias("_tf"))
-        .persist()
     )
     dfreq = tf.groupBy("_t").agg(F.count(F.lit(1)).alias("_df"))
     idf = F.log(
@@ -83,17 +84,11 @@ def bm25_topk(
     # The rank column is then a window over just top_k rows.
     topk = per_doc.orderBy(F.col("_s9").desc(), F.col(id_col)).limit(top_k)
     rk = Window.orderBy(F.col("_s9").desc(), F.col(id_col))
-    from ._cache import unpersist_with
-
-    result = (
-        topk.withColumn("rank", F.row_number().over(rk))
-        .select(
-            F.col(id_col),
-            F.round(F.col("_s9") / F.lit(1e9), 6).alias("score"),
-            F.col("rank").cast("long").alias("rank"),
-        )
+    return topk.withColumn("rank", F.row_number().over(rk)).select(
+        F.col(id_col),
+        F.round(F.col("_s9") / F.lit(1e9), 6).alias("score"),
+        F.col("rank").cast("long").alias("rank"),
     )
-    return unpersist_with(result, tf)
 
 
 def bm25_topk_sql(
@@ -776,8 +771,8 @@ def bm25_forget(
             ).parquet(*[str(rootp / f) for f in rem_files])
             if bid is not None:
                 remaining = remaining.filter(F.col("batch_id") == bid)
-            remaining = remaining.persist()
-            try:
+            with scope():
+                remaining = persist(remaining)
                 docs = remaining.select(id_col, "_dl").distinct()
                 stats = docs.agg(
                     F.count(F.lit(1)).alias("_N"), F.sum("_dl").alias("_sumdl")
@@ -810,7 +805,5 @@ def bm25_forget(
                     dfreq.write.mode("append").partitionBy("tb").parquet(
                         str(rootp / "dfreq")
                     )
-            finally:
-                remaining.unpersist()
     gc_index_tree(path)
     return n

@@ -28,6 +28,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..sources.files import fan_out_scan
+from ._cache import persist, scoped
 
 
 #: DuckDB oracle twin of :func:`cosine` over aliased sides ``a.v``/``b.v``
@@ -274,6 +275,7 @@ def normalized(vec: Column, norm_col: Column) -> Column:
     return F.transform(_dvec(vec), lambda x: x / norm_col)
 
 
+@scoped
 def cosine_near_dup_pairs(
     df: DataFrame,
     id_col: str,
@@ -307,14 +309,12 @@ def cosine_near_dup_pairs(
     # norm(vec) into the post-join output and re-fold it once per PAIR
     # instead of once per row (measured 5x slower). With it, pair scoring
     # is a single dot fold + scalar divide.
-    from ._cache import unpersist_with
-
-    base = nonzero_vectors(df, vec_col).select(
+    base = persist(nonzero_vectors(df, vec_col).select(
         F.col(id_col).alias("_id"),
         F.col(vec_col).alias("_vec"),
         norm(F.col(vec_col)).alias("_nrm"),
         sign_bucket(F.col(vec_col), planes).alias("bucket"),
-    ).persist()
+    ))
     a = base.select(
         F.col("_id").alias("id_a"), F.col("_vec").alias("vec_a"),
         F.col("_nrm").alias("nrm_a"), "bucket",
@@ -323,7 +323,7 @@ def cosine_near_dup_pairs(
         F.col("_id").alias("id_b"), F.col("_vec").alias("vec_b"),
         F.col("_nrm").alias("nrm_b"), "bucket",
     )
-    out = (
+    return (
         a.join(b, "bucket")
         .filter(F.col("id_a") < F.col("id_b"))
         .select(
@@ -335,7 +335,6 @@ def cosine_near_dup_pairs(
         )
         .filter(F.col("cosine") >= threshold)
     )
-    return unpersist_with(out, base)
 
 
 def _blocked_allpairs_cosine(
@@ -693,6 +692,7 @@ def _assign_nearest_cell(
     return best.join(evec, id_col).select(id_col, "cell", "_e6")
 
 
+@scoped
 def semantic_dedup_pairs(
     df: DataFrame,
     id_col: str,
@@ -727,11 +727,12 @@ def semantic_dedup_pairs(
     # would pass a 1e-12 vector that still snaps to zero and divide by 0)
     # materialize the assignment ONCE: both pair-join sides consume it,
     # and without the persist the whole centroid+argmin+join pipeline
-    # re-executes per side (measured 2.9 s -> 0.4 s warm at sf0.1;
-    # lifecycle tied to the result per the _cache convention)
-    sided = assigned.select(F.col(id_col), "cell", "_e6", norm.alias("_n")).filter(
-        F.col("_n") > 0
-    ).persist()
+    # re-executes per side (measured 2.9 s -> 0.4 s warm at sf0.1)
+    sided = persist(
+        assigned.select(F.col(id_col), "cell", "_e6", norm.alias("_n")).filter(
+            F.col("_n") > 0
+        )
+    )
     a = sided.select(
         F.col(id_col).alias("id_a"), "cell",
         F.col("_e6").alias("_ea"), F.col("_n").alias("_na"),
@@ -764,17 +765,15 @@ def semantic_dedup_pairs(
     # unsalted — at that K the per-cell quadratic work is already
     # spread. Result-identity is pinned by
     # test_salted_join_matches_plain_join.
-    from ._cache import unpersist_with
     from .joins import salted_join
 
-    out = (
+    return (
         salted_join(a, b, ["cell"], salt_buckets=8)
         .filter(F.col("id_a") < F.col("id_b"))
         .withColumn("cosine", cos)
         .filter(F.col("cosine") >= threshold)
         .select("id_a", "id_b", "cell", "cosine")
     )
-    return unpersist_with(out, sided)
 
 
 def _nearest_cell_sql(
@@ -888,6 +887,7 @@ def balanced_sample_by_centroid_sql(
 # ---------------------------------------------------------------------------
 
 
+@scoped
 def cosine_multiprobe_pairs(
     df: DataFrame,
     id_col: str,
@@ -914,14 +914,12 @@ def cosine_multiprobe_pairs(
     persist barrier (same projection-collapse guard as the bucketed
     path).
     """
-    from ._cache import unpersist_with
-
-    base = nonzero_vectors(df, vec_col).select(
+    base = persist(nonzero_vectors(df, vec_col).select(
         F.col(id_col).alias("_id"),
         F.col(vec_col).alias("_vec"),
         norm(F.col(vec_col)).alias("_nrm"),
         sign_bucket(F.col(vec_col), planes).alias("bucket"),
-    ).persist()
+    ))
     probes = F.array(
         F.col("bucket"), *[F.col("bucket").bitwiseXOR(F.lit(1 << i)) for i in range(planes)]
     )
@@ -933,7 +931,7 @@ def cosine_multiprobe_pairs(
         F.col("_id").alias("id_b"), F.col("_vec").alias("vec_b"),
         F.col("_nrm").alias("nrm_b"), F.explode(probes).alias("bucket"),
     )
-    out = (
+    return (
         a.join(b, "bucket")
         .filter(F.col("id_a") < F.col("id_b"))
         .select(
@@ -945,7 +943,6 @@ def cosine_multiprobe_pairs(
         )
         .filter(F.col("cosine") >= threshold)
     )
-    return unpersist_with(out, base)
 
 
 def multiprobe_sql(

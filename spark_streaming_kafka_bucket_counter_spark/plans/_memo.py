@@ -12,10 +12,11 @@ build-once/serve-many trade the IVF/BM25/LSH disk caches make — it
 changes cost, never results (every query still hash-matches its oracle
 independently).
 
-Mechanics: the builder's result is materialized with an EAGER
-``localCheckpoint`` (cuts lineage AND stores the rows executor-local)
-and the builder's own frame is dropped immediately so its
-``unpersist_with`` finalizers release any loop-internal caches.
+Mechanics: the builder runs inside its own cache scope
+(``operators._cache.scope``) and its result is materialized there with
+an EAGER ``localCheckpoint`` (cuts lineage AND stores the rows
+executor-local); leaving the scope releases every cache the build
+persisted.
 
 Lifecycle (round-6 hardening):
 - the memo key folds in the SAME source fingerprint ``cached_index_dir``
@@ -48,6 +49,8 @@ from collections.abc import Callable
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
+
+from ..operators._cache import scope
 
 # (session id, dataset fingerprint) -> {artifact key -> checkpointed frame}
 _MEMO: OrderedDict[tuple[int, str], dict[str, DataFrame]] = OrderedDict()
@@ -102,10 +105,8 @@ def dataset_memo(
         _TOMBSTONE[:] = stale.values()
     df = gen.get(key)
     if df is None:
-        res = build()
-        df = res.localCheckpoint(eager=True)
-        del res  # finalizers release the builder's persisted intermediates
-        gen[key] = df
+        with scope():
+            df = gen[key] = build().localCheckpoint(eager=True)
     return df
 
 
@@ -127,5 +128,6 @@ def dataset_memo_obj(spark: SparkSession, sf_dir: str, key: str, build: Callable
     while len(_OBJ_MEMO) > _MAX_GENERATIONS:
         _OBJ_MEMO.popitem(last=False)
     if key not in gen:
-        gen[key] = build()
+        with scope():
+            gen[key] = build()
     return gen[key]

@@ -1447,8 +1447,6 @@ def q_search_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     top-50 (query = vec_id 0) by reciprocal-rank fusion, final top-20.
     The two retrieval legs run independently (each with its own
     scale-safe plan); fusion joins two 50-row lists."""
-    from ..operators._cache import adopt_lifetime
-
     docs = _t(spark, sf_dir, "documents")
     emb = _t(spark, sf_dir, "embeddings")
     lex = bm25_topk(docs, "doc_id", "text", _BM25_QUERY, top_k=_RRF_POOL)
@@ -1457,11 +1455,7 @@ def q_search_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
         query_df=emb.filter(F.col("vec_id") == _QVEC_ID),
         top_k=_RRF_POOL,
     ).select(F.col("cand_id").alias("doc_id"), "rank")
-    # the fusion frame must keep the legs alive or their operator
-    # persists (BM25's matched-docs tf) die at return (r13 audit)
-    return adopt_lifetime(
-        hybrid_rrf(lex, sem, "doc_id", k=_RRF_K, top_k=_RRF_TOPK), lex, sem
-    )
+    return hybrid_rrf(lex, sem, "doc_id", k=_RRF_K, top_k=_RRF_TOPK)
 
 
 # ---------------------------------------------------------------------------
@@ -1569,14 +1563,15 @@ def q_curation_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-stage drop counts."""
     from pyspark.sql import Window
 
+    from ..operators._cache import persist
+
     docs = _t(spark, sf_dir, "documents")
     gate = quality_gate(docs, "doc_id", "text")
     s1 = docs.join(gate.filter(F.col("keep")).select("doc_id"), "doc_id")
     # the gated+deduped corpus feeds THREE consumers (its own stage
     # count, the decontamination k-gram scan, and the final stage join)
-    # — cache it so the gate + fingerprint window run once, not three
-    # times (unpersisted when the result frame is released)
-    s2 = drop_exact_duplicates(s1, "doc_id", "text").persist()
+    # — cache it so the gate + fingerprint window run once, not thrice
+    s2 = persist(drop_exact_duplicates(s1, "doc_id", "text"))
     ev = docs.filter(F.col("doc_id") < 20)
     dec = decontaminate(s2, ev, "doc_id", "text", k=_DECON_K, min_overlap_frac=_DECON_FRAC)
     s3 = s2.join(dec.filter(~F.col("contaminated")).select("doc_id"), "doc_id")
@@ -1593,16 +1588,10 @@ def q_curation_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         .unionByName(_stage("03_decontaminated", s3))
     )
     w = Window.orderBy("stage")
-    out = counts.select(
+    return counts.select(
         "stage",
         F.col("n").cast("long").alias("n_docs"),
         F.coalesce(F.lag("n").over(w) - F.col("n"), F.lit(0))
         .cast("long")
         .alias("n_dropped"),
     )
-    from ..operators._cache import adopt_lifetime, unpersist_with
-
-    # s3 derives from `dec` without referencing it Python-side — adopt
-    # it so decontaminate's internal eval-gram persist survives until
-    # the report executes (r13 persist audit)
-    return unpersist_with(adopt_lifetime(out, dec), s2)

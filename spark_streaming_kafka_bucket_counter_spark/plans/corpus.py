@@ -715,9 +715,7 @@ def q_entity_golden_records(spark: SparkSession, sf_dir: str) -> DataFrame:
         salt_buckets=8,
     ).select("id_a", "id_b")
     cc = connected_components(pairs, "id_a", "id_b")
-    from ..operators._cache import adopt_lifetime
-
-    out = (
+    return (
         entities.join(cc, entities["ent_id"] == cc["node"], "left")
         .select(
             F.coalesce("component", "ent_id").cast("long").alias("cluster_id"),
@@ -730,10 +728,6 @@ def q_entity_golden_records(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min_by("p_name", "ent_id").alias("canonical_name"),
         )
     )
-    # cc's persisted mirrored-edge set (the whole fuzzy-match subtree!)
-    # must survive until this rollup executes, or the blocked
-    # levenshtein join recomputes uncached (r13 persist audit)
-    return adopt_lifetime(out, cc)
 
 
 # ---------------------------------------------------------------------------
@@ -929,9 +923,7 @@ def q_contamination_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     dc = Q.decontaminate(
         corpus, ev, "doc_id", "text", k=_CBS_K, min_overlap_frac=_CBS_FRAC
     )
-    from ..operators._cache import adopt_lifetime
-
-    out = (
+    return (
         dc.join(docs.select("doc_id", "source"), "doc_id")
         .groupBy("source")
         .agg(
@@ -945,6 +937,3 @@ def q_contamination_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr("n_contaminated * 1000000 div n_docs").cast("long"),
         )
     )
-    # keep decontaminate's internal persist alive until the rollup
-    # executes (r13 persist audit)
-    return adopt_lifetime(out, dc)

@@ -282,14 +282,10 @@ def q_dedup_drop_contained(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end containment dedup: the corpus minus every doc
     (near-)contained in a strictly larger doc (equal sizes keep the min
     id — the exact-dedup rule). One inverted-index pass + one anti-join."""
-    from ..operators._cache import adopt_lifetime
-
     kept = D.drop_contained_docs(
         _t(spark, sf_dir, "documents"), "doc_id", "text", k=3, threshold=0.75
     )
-    # the projection wraps the operator result — adopt it so the
-    # persisted shingle set survives to execution (r13 persist audit)
-    return adopt_lifetime(kept.select("doc_id", "source", "lang"), kept)
+    return kept.select("doc_id", "source", "lang")
 
 
 # Affine MinHash family (one md5-derived 32-bit base hash per shingle,
@@ -677,20 +673,19 @@ def q_sim_ivf_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     before committing the 100 TB index build; mean tracks aggregate
     quality, min exposes the worst query (a cell-boundary victim mean
     alone would hide)."""
-    from ..operators._cache import persist_for_scale, unpersist_with
+    from ..operators._cache import persist
 
     emb = _t(spark, sf_dir, "embeddings")
     # the brute-force cosine truth is consumed twice (per-query totals +
     # the hit semi-join) — without a persist each consumer re-runs the
     # full crossJoin + rank window per corpus pass (r13, guide §5;
-    # persist size-gated — see persist_for_scale; lifecycle tied to the
-    # returned frame per the _cache convention)
-    truth = persist_for_scale(
+    # size-gated)
+    truth = persist(
         S.cosine_topk(
             emb, "vec_id", "embedding",
             query_df=emb.filter(F.col("vec_id") < 10), top_k=5,
         ).select("query_id", "cand_id"),
-        emb,
+        source=emb,
     )
     approx = S.ivf_topk(
         emb, "vec_id", "embedding",
@@ -705,13 +700,12 @@ def q_sim_ivf_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     r = per_q.join(hits, "query_id", "left").select(
         F.expr("coalesce(n_hit, 0) * 1000000 div n_true").alias("recall_ppm")
     )
-    out = r.agg(
+    return r.agg(
         F.count(F.lit(1)).cast("long").alias("n_queries"),
         F.lit(5).cast("long").alias("k"),
         F.expr("sum(recall_ppm) div count(1)").cast("long").alias("mean_recall_ppm"),
         F.min("recall_ppm").cast("long").alias("min_recall_ppm"),
     )
-    return unpersist_with(out, truth)
 
 
 # ---------------------------------------------------------------------------
@@ -1314,7 +1308,7 @@ def q_sim_opq_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     non-parametric Procrustes rotation ships in the layout-v4 index
     path (opq_train_rotation + ivfpq_build_index(rotation=...)),
     pinned by tests/test_opq.py."""
-    from ..operators._cache import adopt_lifetime, persist_for_scale, unpersist_with
+    from ..operators._cache import persist
 
     # ONE exact-L2 truth serves BOTH halves (r13): the axis permutation
     # preserves integer squared-L2 term-for-term (rounding is
@@ -1322,12 +1316,11 @@ def q_sim_opq_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     # rotated truths are the same relation — computing it per half ran
     # the crossJoin+window pass twice for identical rows. Invariance is
     # pinned by test_opq's truth-invariance test; the persist is
-    # size-gated (persist_for_scale) and its lifecycle tied to the
-    # returned union per the _cache convention.
+    # size-gated.
     emb = _t(spark, sf_dir, "embeddings")
-    truth = persist_for_scale(
+    truth = persist(
         PQ.recall_truth(emb, "vec_id", "embedding", query_max_id=10, top_k=5),
-        emb,
+        source=emb,
     )
     base = PQ.ivfpq_trained_recall_eval(
         emb, "vec_id", "embedding",
@@ -1355,15 +1348,9 @@ def q_sim_opq_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         cents=_opq_cents(spark, sf_dir),
         truth=truth,
     )
-    result = base.select(F.lit("base").alias("rot"), "*").unionAll(
+    return base.select(F.lit("base").alias("rot"), "*").unionAll(
         opq.select(F.lit("opq").alias("rot"), "*")
     )
-    # the halves' own persists (seed assignment + trained pairs) are
-    # lifecycle-tied to `base`/`opq`, which this union does NOT
-    # reference on the Python side — adopt them so those caches
-    # survive until the union executes (r13 persist audit)
-    adopt_lifetime(result, base, opq)
-    return unpersist_with(result, truth)
 
 
 @query(

@@ -5,6 +5,8 @@ Registration pattern: ``@query(name, oracle_sql)`` adds both halves to the
 registries consumed by ``__spark_entry__.queries()`` / ``oracle_sql()``.
 Column-name/alias parity between the Spark plan and the oracle SQL is part
 of the contract (the driver hashes values under sorted column names).
+Each registered query is ``operators._cache.scoped``: every cache its
+plan persists lives exactly as long as the DataFrame it returns.
 
 Determinism rules used throughout (so order-insensitive value hashes
 match across engines):
@@ -28,6 +30,7 @@ from pyspark.sql import functions as F
 from ..functions import predicates as P
 from ..functions.buckets import ISO_TS_FORMAT, ts_epoch_seconds, with_bucket
 from ..functions.projection import decode_json_values, project_fields
+from ..operators._cache import scoped
 from ..operators.count import bucket_count, merged_count, select_max
 from ..sources.files import load_table, stream_events
 from ..streaming.pipeline import drain_to_table
@@ -48,7 +51,7 @@ def query(name: str, oracle: str | None = None):
                 f"duplicate catalog query name {name!r} "
                 f"(existing: {QUERIES[name].__module__})"
             )
-        QUERIES[name] = fn
+        QUERIES[name] = fn = scoped(fn)
         if oracle is not None:
             ORACLES[name] = oracle
         return fn

@@ -198,6 +198,13 @@ def fan_out_scan(df: DataFrame, key_col: str | list[str]) -> DataFrame:
     partitioning-independent by construction (integer-exact,
     order-insensitive aggregates; content-hash sampling), so the only
     observable effect is parallelism.
+
+    Unknown-size frames (``createDataFrame``, memoized checkpoints,
+    other non-file sources) are returned untouched, while the cache
+    size gate (``operators._cache.persist(source=...)``) DOES persist
+    them — the same "unknown means big" rule, applied from opposite
+    ends. A caller feeding a small in-memory frame that wants the fan
+    out should repartition it first.
     """
     if not provably_small_scan(df):
         return df
@@ -227,7 +234,7 @@ def provably_small_scan(df: DataFrame) -> bool:
 
     This is the shared smallness test behind two scale-adaptive
     behaviors: :func:`fan_out_scan` (small inputs are fanned out) and
-    ``operators._cache.persist_for_scale`` (small inputs SKIP the
+    ``operators._cache.persist(source=...)`` (small inputs SKIP the
     persist — recomputing their subtree per consumer is an O(one-split)
     pass, cheaper than the cached plan's AQE-less execution)."""
     if df.isStreaming:

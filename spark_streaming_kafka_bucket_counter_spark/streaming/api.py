@@ -139,42 +139,6 @@ def custom_sql_avro(store: ServingStore, sql: str, avro_schema_json: str):
     return avro_encode_df(df, avro_schema_json)
 
 
-def iter_rows(store: ServingStore, sql: str, partition_rows: int = 10_000):
-    """Bounded-memory EXPORT path: stream a query's full result as an
-    iterator of row dicts without ever materializing it on the driver —
-    the escape hatch for reads genuinely larger than the ``max_rows``
-    cap (backfills, downstream ETL), where the capped JSON routes are
-    the wrong tool. ``toLocalIterator`` pulls ONE partition at a time;
-    ``partition_rows`` re-partitions larger results so each driver-side
-    pull stays small (a query that collapsed to a handful of giant
-    partitions would otherwise defeat the point).
-
-    Driver memory is O(partition), not O(result); wall-clock trades for
-    that (partitions transfer sequentially). Not exposed over HTTP — the
-    reference's JSON-list response shape is inherently materialized, so
-    the capped routes keep that contract and exports stay an API call.
-
-    The result is persisted DISK_ONLY for the duration of the export so
-    the sizing ``count()`` and the iteration read ONE evaluation of the
-    query — without it a nondeterministic query (rand(), now()) could
-    yield a count that disagrees with the streamed content, and every
-    deterministic query would pay its scan twice.
-    """
-    from pyspark import StorageLevel
-
-    df = store.run_cmd(sql).persist(StorageLevel.DISK_ONLY)
-    try:
-        n = df.count()
-        if n > partition_rows:
-            df_out = df.repartition(max(1, (n + partition_rows - 1) // partition_rows))
-        else:
-            df_out = df
-        for row in df_out.toLocalIterator(prefetchPartitions=True):
-            yield row.asDict(recursive=True)
-    finally:
-        df.unpersist()
-
-
 def delete(store: ServingStore, conditions: dict) -> dict:
     """Q3 surface: DELETE with ANDed equality predicates."""
     return {"deleted": store.delete(conditions)}

@@ -39,6 +39,7 @@ from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 from ..functions.buckets import with_bucket
 from ..functions.projection import decode_json_values
+from ..operators._cache import persist, scope
 from ..operators.count import merged_count
 from ..session import restored_conf, stream_drain_partitions
 from ..sources.files import NANOS_AS_LONG
@@ -280,6 +281,10 @@ def _start_ingest(
     ``compact_every``-th batch, compacts the index tree at
     ``index_path``. The rules every body relies on, stated once:
 
+    - **One cache scope per batch.** ``body`` runs under
+      ``operators._cache.scope()``: whatever it persists (the batch,
+      its survivors, operator intermediates) is released when it
+      returns or raises.
     - **Footerless-write guard.** Empty micro-batches (idle source
       polls) never reach ``body``: writing one would create an output
       dir with no parquet footers, and the next read-back or bootstrap
@@ -311,7 +316,8 @@ def _start_ingest(
         if batch_df.isEmpty():
             return
         spark = batch_df.sparkSession
-        body(spark, batch_df, batch_id, latest_manifest(index_path) is None)
+        with scope():
+            body(spark, batch_df, batch_id, latest_manifest(index_path) is None)
         if compact_every > 0 and (batch_id + 1) % compact_every == 0:
             compact_index_tree(spark, index_path, grace_sec=gc_grace_sec)
 
@@ -404,32 +410,27 @@ def start_near_dup_ingest(
     lsh = {"num_hashes": num_hashes, "bands": bands, "k": k}
 
     def body(spark, batch_df, batch_id, bootstrap):
-        cached = [batch_df.persist()]
-        try:
-            pairs_in = minhash_lsh_pairs(
-                batch_df, id_col, text_col, threshold=threshold, **lsh
-            )
-            keepers = drop_near_duplicate_docs(batch_df, pairs_in, id_col).persist()
-            cached.append(keepers)
-            survivors = keepers
-            if not bootstrap:
-                dup_ids = (
-                    lsh_query_index(
-                        spark, index_path, keepers, id_col, text_col,
-                        threshold=threshold, **lsh,
-                    )
-                    .select(F.col("inc_doc").alias(id_col))
-                    .distinct()
+        batch_df = persist(batch_df)
+        pairs_in = minhash_lsh_pairs(
+            batch_df, id_col, text_col, threshold=threshold, **lsh
+        )
+        keepers = persist(drop_near_duplicate_docs(batch_df, pairs_in, id_col))
+        survivors = keepers
+        if not bootstrap:
+            dup_ids = (
+                lsh_query_index(
+                    spark, index_path, keepers, id_col, text_col,
+                    threshold=threshold, **lsh,
                 )
-                survivors = keepers.join(dup_ids, id_col, "left_anti")
-            landed = _land(spark, survivors, out_path, batch_id)
-            if bootstrap:
-                lsh_build_index(landed, id_col, text_col, index_path, **lsh)
-            else:
-                lsh_append_index(landed, id_col, text_col, index_path, **lsh)
-        finally:
-            for df in cached:
-                df.unpersist()
+                .select(F.col("inc_doc").alias(id_col))
+                .distinct()
+            )
+            survivors = keepers.join(dup_ids, id_col, "left_anti")
+        landed = _land(spark, survivors, out_path, batch_id)
+        if bootstrap:
+            lsh_build_index(landed, id_col, text_col, index_path, **lsh)
+        else:
+            lsh_append_index(landed, id_col, text_col, index_path, **lsh)
 
     return _start_ingest(
         docs, checkpoint_dir, index_path, trigger, compact_every, gc_grace_sec, body
@@ -481,31 +482,28 @@ def start_semantic_dedup_ingest(
     )
 
     def body(spark, batch_df, batch_id, bootstrap):
-        batch_df = batch_df.persist()
-        try:
-            survivors = batch_df
-            if not bootstrap:
-                hits = ivf_query_index(
-                    spark, index_path, batch_df, id_col, vec_col,
-                    nprobe=nprobe, top_k=1,
+        batch_df = persist(batch_df)
+        survivors = batch_df
+        if not bootstrap:
+            hits = ivf_query_index(
+                spark, index_path, batch_df, id_col, vec_col,
+                nprobe=nprobe, top_k=1,
+            )
+            dup_ids = (
+                hits.filter(
+                    F.round(F.col("cosine") * 1_000_000) >= threshold_e6
                 )
-                dup_ids = (
-                    hits.filter(
-                        F.round(F.col("cosine") * 1_000_000) >= threshold_e6
-                    )
-                    .select(F.col("query_id").alias(id_col))
-                    .distinct()
-                )
-                survivors = batch_df.join(dup_ids, id_col, "left_anti")
-            landed = _land(spark, survivors, out_path, batch_id)
-            if bootstrap:
-                ivf_build_index(
-                    landed, id_col, vec_col, index_path, n_centroids=n_centroids
-                )
-            else:
-                ivf_append_index(spark, landed, id_col, vec_col, index_path)
-        finally:
-            batch_df.unpersist()
+                .select(F.col("query_id").alias(id_col))
+                .distinct()
+            )
+            survivors = batch_df.join(dup_ids, id_col, "left_anti")
+        landed = _land(spark, survivors, out_path, batch_id)
+        if bootstrap:
+            ivf_build_index(
+                landed, id_col, vec_col, index_path, n_centroids=n_centroids
+            )
+        else:
+            ivf_append_index(spark, landed, id_col, vec_col, index_path)
 
     return _start_ingest(
         vectors, checkpoint_dir, index_path, trigger, compact_every, gc_grace_sec, body

@@ -195,3 +195,28 @@ def test_custom_sql_avro_roundtrip(spark, tmp_path):
         tuple(A.decode_record(fields, bytes(r["avro"])).values()) for r in encoded
     )
     assert got == [("click", 3), ("view", 1)]
+
+
+# ---------------------------------------------------------------------------
+# Kafka value projection (P1) — a static frame with Kafka's source schema
+# ---------------------------------------------------------------------------
+
+
+def test_kafka_values_keeps_only_value_as_string(spark):
+    from spark_streaming_kafka_bucket_counter_spark.sources.kafka import kafka_values
+
+    rows = [
+        (b"k1", b'{"a": 1}', "events", 0, 10),
+        (None, None, "events", 1, 11),
+    ]
+    src = spark.createDataFrame(
+        rows, "key binary, value binary, topic string, partition int, offset long"
+    )
+    out = kafka_values(src)
+    assert [(f.name, f.dataType.simpleString()) for f in out.schema.fields] == [
+        ("value", "string")
+    ]
+    assert sorted(out.collect(), key=lambda r: r.value is None) == [
+        ('{"a": 1}',),
+        (None,),
+    ]

@@ -154,27 +154,3 @@ def test_row_cap_truncates_large_reads(spark, tmp_path):
     finally:
         server.shutdown()
 
-
-def test_iter_rows_streams_full_result_beyond_cap(spark, tmp_path):
-    """The export path must deliver EVERY row of a result far larger
-    than the HTTP cap, as a lazy iterator (first rows arrive without
-    consuming the whole thing)."""
-    from spark_streaming_kafka_bucket_counter_spark.streaming import api
-    from pyspark.sql import functions as F
-
-    store = ServingStore(
-        spark, str(tmp_path / "expstore"), clean_interval=100, clean_freq=10
-    )
-    n = 60_000
-    store.append(
-        spark.range(n).select(
-            F.col("id").alias("count"),
-            (F.col("id") % 5).cast("string").alias("event_type"),
-        ),
-        0,
-    )
-    it = api.iter_rows(store, "SELECT count FROM default", partition_rows=7_000)
-    first = next(it)
-    assert "count" in first
-    seen = {first["count"]} | {r["count"] for r in it}
-    assert seen == set(range(n))

@@ -131,3 +131,33 @@ def test_plans_run_no_drain_of_their_own():
         if direct.search(line)
     ]
     assert offenders == []
+
+
+def test_one_persist_site_and_no_legacy_cache_helpers():
+    """Spark-free: ``operators/_cache.py`` holds the package's only
+    ``.persist(`` call, so every cache is registered in a scope and has
+    exactly one owner; the per-frame lifetime helpers it replaced are
+    gone, name and all."""
+    import ast
+
+    pkg = PLANS_DIR.parent
+    persist_calls, legacy = [], []
+    for path in sorted(pkg.rglob("*.py")):
+        src = path.read_text()
+        rel = path.relative_to(pkg)
+        for node in ast.walk(ast.parse(src)):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "persist"
+            ):
+                persist_calls.append(f"{rel}:{node.lineno}")
+        legacy += [
+            f"{rel}:{name}"
+            for name in ("unpersist_with", "adopt_lifetime", "persist_for_scale")
+            if name in src
+        ]
+    assert persist_calls and all(
+        c.startswith("operators/_cache.py:") for c in persist_calls
+    ), persist_calls
+    assert legacy == []

@@ -9,6 +9,7 @@ import contextlib
 import gc
 import io
 
+import pytest
 from pyspark.sql import functions as F
 
 from spark_streaming_kafka_bucket_counter_spark.operators import dedup as D
@@ -195,61 +196,152 @@ def test_size_bytes_parses_spark_unit_suffixes():
     assert _size_bytes("not-a-size", default=77) == 77
 
 
-def test_adopt_lifetime_keeps_wrapped_persists_alive(spark):
-    """r13 persist-audit fix: a derived frame holds no Python reference
-    to the operator result it wraps, so unpersist_with caches tied to
-    that result died at function return, BEFORE the derived frame ever
-    executed. adopt_lifetime must keep the wrapped result (and its
-    caches) alive exactly until the derived frame is GC'd."""
+def _is_cached(spark, df) -> bool:
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    return cm.lookupCachedData(df._jdf).isDefined()
+
+
+def test_scope_keeps_persists_alive_for_derived_frames(spark):
+    """r13 persist-audit hazard, closed by construction: a derived frame
+    holds no Python reference to the operator result it wraps, so a
+    cache tied to that result died at function return, BEFORE the
+    derived frame ever executed. Under @scoped the cache belongs to the
+    scope, which lives exactly until the returned frame is GC'd — no
+    adoption at the call site."""
     from spark_streaming_kafka_bucket_counter_spark.operators._cache import (
-        adopt_lifetime,
-        unpersist_with,
+        persist,
+        scoped,
     )
 
-    def is_cached(df):
-        cm = spark._jsparkSession.sharedState().cacheManager()
-        return cm.lookupCachedData(df._jdf).isDefined()
+    @scoped
+    def op():
+        base = persist(spark.createDataFrame([(1,), (2,)], "x long"))
+        probe.append(base)
+        return base.select("x")
 
-    base = spark.createDataFrame([(1,), (2,)], "x long").persist()
-    assert is_cached(base)
-    op_result = unpersist_with(base.select("x"), base)  # operator return
-    wrapped = adopt_lifetime(op_result.selectExpr("x + 1 as y"), op_result)
-    del op_result
+    @scoped
+    def query():
+        return op().selectExpr("x + 1 as y")  # derived, never adopted
+
+    probe = []
+    result = query()
+    base = probe.pop()
     gc.collect()
-    assert is_cached(base), "adoption must keep the operator result alive"
-    del wrapped
+    assert _is_cached(spark, base), "the scope must keep the cache alive"
+    assert sorted(r.y for r in result.collect()) == [2, 3]
+    del result
     gc.collect()
-    assert not is_cached(base), "cache must drain once the wrapper dies"
+    assert not _is_cached(spark, base), "cache must drain once the result dies"
 
 
-def test_persist_for_scale_gates_on_input_size(spark, monkeypatch):
+def test_persist_source_gate_on_input_size(spark, monkeypatch):
     """r13: persists whose subtree is cheap to recompute on a small
     input LOSE locally (the cached plan executes without AQE and pays a
     materialization pass) but save whole corpus passes at scale — so
-    persist_for_scale persists iff the source is NOT a provably-small
+    persist(source=...) persists iff the source is NOT a provably-small
     file scan, with SPARK_GRAFT_FORCE_PERSIST=1 as the override."""
     from spark_streaming_kafka_bucket_counter_spark.operators._cache import (
-        persist_for_scale,
+        persist,
+        scope,
     )
     from spark_streaming_kafka_bucket_counter_spark.sources.files import (
         load_table,
     )
 
-    def is_cached(df):
-        cm = spark._jsparkSession.sharedState().cacheManager()
-        return cm.lookupCachedData(df._jdf).isDefined()
-
     small = load_table(spark, SF_DIR, "documents")
-    derived = small.select("doc_id")
-    out = persist_for_scale(derived, small)
-    assert out is derived and not is_cached(out)  # small scan: skipped
+    with scope():
+        derived = small.select("doc_id")
+        out = persist(derived, source=small)
+        assert out is derived and not _is_cached(spark, out)  # small: skipped
 
-    unknown = spark.createDataFrame([(1,)], "x long")  # non-file: persist
-    d2 = persist_for_scale(unknown.select("x"), unknown)
-    assert is_cached(d2)
-    d2.unpersist()
+        unknown = spark.createDataFrame([(1,)], "x long")  # non-file: persist
+        d2 = persist(unknown.select("x"), source=unknown)
+        assert _is_cached(spark, d2)
+
+        monkeypatch.setenv("SPARK_GRAFT_FORCE_PERSIST", "1")
+        d3 = persist(small.select("doc_id", "source"), source=small)
+        assert _is_cached(spark, d3)
+    assert not _is_cached(spark, d2) and not _is_cached(spark, d3)
+
+
+def test_persist_outside_a_scope_raises(spark):
+    """A cache with no owner would leak or silently run uncached — an
+    unscoped persist must fail loudly instead."""
+    from spark_streaming_kafka_bucket_counter_spark.operators._cache import (
+        persist,
+    )
+
+    df = spark.createDataFrame([(1,)], "x long")
+    with pytest.raises(RuntimeError, match="outside a cache scope"):
+        persist(df)
+    assert not _is_cached(spark, df)
+
+
+def test_scope_releases_on_exit_and_on_exception(spark):
+    """The eager boundary: `with scope()` releases every frame persisted
+    inside it when the block ends, whether it returns or raises."""
+    from spark_streaming_kafka_bucket_counter_spark.operators._cache import (
+        persist,
+        scope,
+    )
+
+    with scope():
+        a = persist(spark.createDataFrame([(1,)], "x long"))
+        assert _is_cached(spark, a)
+    assert not _is_cached(spark, a)
+
+    with pytest.raises(ValueError, match="boom"):
+        with scope():
+            b = persist(spark.createDataFrame([(2,)], "x long"))
+            assert _is_cached(spark, b)
+            raise ValueError("boom")
+    assert not _is_cached(spark, b)
+
+
+def test_nested_scoped_joins_the_outer_scope(spark):
+    """An inner @scoped call made while a scope is open registers into
+    that scope: its cache outlives the inner return value and is
+    released with the outer scope."""
+    from spark_streaming_kafka_bucket_counter_spark.operators._cache import (
+        persist,
+        scope,
+        scoped,
+    )
+
+    @scoped
+    def inner():
+        return persist(spark.createDataFrame([(1,)], "x long"))
+
+    with scope():
+        c = inner()
+        jdf = c._jdf
+        del c
+        gc.collect()
+        cm = spark._jsparkSession.sharedState().cacheManager()
+        assert cm.lookupCachedData(jdf).isDefined(), "inner must join, not own"
+    assert not cm.lookupCachedData(jdf).isDefined()
+
+
+@pytest.mark.parametrize(
+    "name", ["curation_report", "contamination_by_source", "dedup_drop_contained"]
+)
+def test_catalog_caches_are_read_before_release(spark, monkeypatch, caplog, name):
+    """The r13 persist audit as a runtime signal: three of its
+    wrapper paths (a frame derived from an operator's cached result)
+    must have every forced persist READ by the query's execution before
+    the scope releases it — an unread cache is one that died early or
+    served nothing. The release record carries both counts."""
+    import logging
+
+    from spark_streaming_kafka_bucket_counter_spark.operators import _cache
+    from spark_streaming_kafka_bucket_counter_spark.plans.queries import QUERIES
 
     monkeypatch.setenv("SPARK_GRAFT_FORCE_PERSIST", "1")
-    d3 = persist_for_scale(small.select("doc_id", "source"), small)
-    assert is_cached(d3)
-    d3.unpersist()
+    caplog.set_level(logging.DEBUG, logger=_cache.__name__)
+    df = QUERIES[name](spark, SF_DIR)
+    df.collect()
+    del df
+    gc.collect()
+    recs = [r for r in caplog.records if r.name == _cache.__name__]
+    assert sum(r.registered for r in recs) >= 1
+    assert [r.unread for r in recs] == [0] * len(recs)
