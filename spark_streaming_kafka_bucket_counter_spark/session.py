@@ -13,6 +13,11 @@ test on local[32]):
   deployment-independent (the reference implicitly assumed UTC epochs).
 - Arrow enabled for the few Pandas-UDF operators (multimodal plumbing);
   everything else stays in JVM expressions.
+- Streaming checkpoints and every ``file://`` path skip Hadoop's
+  checksummed local filesystem (:data:`CHECKPOINT_CONF` gives the
+  measured reason and why the checkpoint stays atomic). Other schemes
+  (``hdfs://``, ``s3a://``) keep their own filesystem; an object-store
+  checkpoint should override the manager class through ``extra_conf``.
 """
 
 from __future__ import annotations
@@ -24,6 +29,31 @@ from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
+# Streaming checkpoint writes without the checksummed local filesystem.
+# Without libhadoop, Hadoop's ``LocalFileSystem``/``LocalFs`` (which write
+# a ``.crc`` beside every file) and the default FileContext-based
+# checkpoint manager spawn ``chmod`` subprocesses for each offset- and
+# commit-log file. On the perfbench ``mixed`` workload (4 vCPUs, 1 s
+# trigger, ten alternating pairs) these confs took the trigger phases'
+# p50 from latestOffset 107.5 -> 35 ms, walCommit 74.5 -> 9 ms and
+# commitOffsets 73 -> 9 ms; the filesystem pair alone or the manager
+# class alone gave only part of that (SCALE.md, "Streaming checkpoint
+# writes"). The manager still writes each file to a temporary path and
+# renames it into place, and ``rename(2)`` is atomic on a local POSIX
+# filesystem; Spark's warning that rename "may not be atomic" concerns
+# object stores. ``spark.sql.streaming.checkpoint.fileChecksum.enabled``
+# stays at its default (true): Spark writes its own checksum file beside
+# each state-store delta, snapshot and RocksDB file (``1.delta.crc``),
+# whatever the filesystem, and verifies it on load.
+CHECKPOINT_CONF = {
+    "spark.hadoop.fs.file.impl": "org.apache.hadoop.fs.RawLocalFileSystem",
+    "spark.hadoop.fs.AbstractFileSystem.file.impl":
+        "org.apache.hadoop.fs.local.RawLocalFs",
+    "spark.sql.streaming.checkpointFileManagerClass":
+        "org.apache.spark.sql.execution.streaming.checkpointing."
+        "FileSystemBasedCheckpointFileManager",
+}
+
 
 def get_spark(
     app_name: str = "ssbc-spark",
@@ -31,7 +61,10 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    """Build (or fetch) a SparkSession with the engine defaults."""
+    """Build (or fetch) a SparkSession with the engine defaults.
+
+    ``extra_conf`` is applied last, so it overrides any default here,
+    :data:`CHECKPOINT_CONF` included."""
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS")
         master = f"local[{cpus}]" if cpus else "local[*]"
@@ -69,7 +102,7 @@ def get_spark(
         .config("spark.driver.extraJavaOptions", "-Duser.timezone=UTC")
         .config("spark.executor.extraJavaOptions", "-Duser.timezone=UTC")
     )
-    for k, v in (extra_conf or {}).items():
+    for k, v in {**CHECKPOINT_CONF, **(extra_conf or {})}.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
 

@@ -13,8 +13,14 @@ import pytest
 from spark_streaming_kafka_bucket_counter_spark.plans import _memo
 
 
-def _n_persistent(spark) -> int:
-    return spark._jsc.sc().getPersistentRDDs().size()
+def _persistent_ids(spark) -> set[int]:
+    return {int(i) for i in spark._jsc.getPersistentRDDs()}
+
+
+def _rdd_id(df) -> int:
+    """The checkpointed RDD a memo frame plans over (what
+    ``_memo._release`` unpersists)."""
+    return df._jdf.queryExecution().analyzed().rdd().id()
 
 
 @pytest.fixture()
@@ -65,20 +71,30 @@ def test_eviction_defers_release_by_one_cycle(spark, tmp_path, clean_memo):
     usable across ONE dataset switch — ADVICE r6: a caller still holding
     the returned frame must not get missing-block errors) and is
     unpersisted deterministically when the NEXT eviction pushes it out,
-    not left for GC."""
-    base = _n_persistent(spark)
+    not left for GC.
+
+    Checks the memo frames' own RDD ids: a global persistent-RDD count
+    can still hold an earlier test's frames, which Spark's
+    ContextCleaner unpersists asynchronously. New ids are compared
+    against the set present before the test; that set only shrinks."""
+    before = _persistent_ids(spark)
+
+    def _new_ids():
+        return _persistent_ids(spark) - before
+
     names = [_dataset(tmp_path, n) for n in ("d1", "d2", "d3", "d4")]
     held = _memo.dataset_memo(spark, names[0], "art", lambda: spark.range(10))
-    _memo.dataset_memo(spark, names[1], "art", lambda: spark.range(10))
-    assert _n_persistent(spark) == base + 2
+    d2 = _memo.dataset_memo(spark, names[1], "art", lambda: spark.range(10))
+    d1_id, d2_id = _rdd_id(held), _rdd_id(d2)
+    assert _new_ids() == {d1_id, d2_id}
     # third generation evicts d1 -> parked, still materialized AND usable
-    _memo.dataset_memo(spark, names[2], "art", lambda: spark.range(10))
+    d3 = _memo.dataset_memo(spark, names[2], "art", lambda: spark.range(10))
     assert len(_memo._MEMO) == 2
-    assert _n_persistent(spark) == base + 3  # d1 parked, not freed
+    assert _new_ids() == {d1_id, d2_id, _rdd_id(d3)}  # d1 parked, not freed
     assert held.count() == 10  # in-flight handle survives the switch
     # fourth generation evicts d2 and finally frees d1's blocks
-    _memo.dataset_memo(spark, names[3], "art", lambda: spark.range(10))
-    assert _n_persistent(spark) == base + 3  # d2 parked, d1 freed
+    d4 = _memo.dataset_memo(spark, names[3], "art", lambda: spark.range(10))
+    assert _new_ids() == {d2_id, _rdd_id(d3), _rdd_id(d4)}  # d2 parked, d1 freed
     assert len(_memo._TOMBSTONE) == 1
 
 
