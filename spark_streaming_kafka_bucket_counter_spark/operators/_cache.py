@@ -1,5 +1,5 @@
 """Cache lifetime: every ``persist()`` in the package lives exactly as
-long as the query, index build or micro-batch that made it.
+long as the query or index build that made it.
 
 DataFrames are lazy, so an operator that persists an intermediate
 (inverted index, candidate set, normalized projection) cannot
@@ -18,7 +18,7 @@ one:
   the caches outlive every select, join or union the query builds.
 - :func:`scope` — the eager boundary: a context manager that always
   opens a fresh scope and releases it on exit. Index builders,
-  training loops, memo builds and each ingest micro-batch use it.
+  training loops and memo builds use it.
 
 :func:`persist` is the package's only ``.persist(`` call, and it
 raises outside a scope: a cache with no owner would either leak or,

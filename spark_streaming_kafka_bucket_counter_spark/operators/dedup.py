@@ -432,10 +432,7 @@ def rebuild_without_lines(
     lines: DataFrame, hot: DataFrame, id_col: str
 ) -> DataFrame:
     """Drop every occurrence of the ``hot`` line set from the exploded
-    ``(id, pos, line)`` rows and rebuild per-doc text in original order
-    (shared by the batch operator and the streaming ingest loop, whose
-    hot set comes from the cumulative persisted segments instead of the
-    input itself)."""
+    ``(id, pos, line)`` rows and rebuild per-doc text in original order."""
     kept = (
         lines.join(hot.select("line", F.lit(1).alias("_hot")), "line", "left")
         .filter(F.col("_hot").isNull())
@@ -1363,64 +1360,3 @@ def minhash_lsh_eval(
         .cast("long")
         .alias("recall_ppm"),
     )
-
-
-def lsh_append_index(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    path: str,
-    num_hashes: int = 8,
-    bands: int = 2,
-    k: int = 3,
-    max_shingle_freq: int | None = None,
-) -> None:
-    """Fold new (already-verified-unique) documents into a persisted LSH
-    index WITHOUT rebuilding: their bands append into the matching
-    (band, bkb) partitions and their shingles append to the inverted
-    index. This is the daily-crawl loop — query the batch
-    (:func:`lsh_query_index`), drop the near-dups, append the survivors
-    — and the index only ever grows by the deduped increment.
-
-    Caller contract: ids must not already exist in the index (append is
-    blind by design — an existence check would re-scan the snapshot,
-    which is what this path avoids; the query step already established
-    novelty)."""
-    from pathlib import Path
-
-    from ..sources.manifest import latest_manifest, manifest_txn
-
-    if latest_manifest(path) is None:
-        # Never append into a half-bootstrapped tree (data written,
-        # manifest commit lost): the caller must re-bootstrap via
-        # lsh_build_index — same rule as ivfpq_append_index.
-        raise RuntimeError(
-            f"lsh_append_index: no published manifest snapshot under "
-            f"{path!r}; bootstrap with lsh_build_index first"
-        )
-    bkb = (F.conv(F.substring("bk", 1, 2), 16, 10) % F.lit(LSH_INDEX_BUCKETS)).cast(
-        "int"
-    )
-    with scope(), manifest_txn(path):
-        sh = persist(doc_shingles(df, id_col, text_col, k, max_shingle_freq))
-        (
-            _minhash_banded(sh, num_hashes, bands).withColumn("bkb", bkb)
-            .write.mode("append")
-            .partitionBy("band", "bkb")
-            .parquet(str(Path(path) / "bands"))
-        )
-        sh.write.mode("append").parquet(str(Path(path) / "shingles"))
-
-
-def lsh_forget(spark, path: str, ids: list[int]) -> int:
-    """Right-to-be-forgotten over the persisted LSH index (round 8):
-    every band row and shingle row for the given doc ids is dropped by
-    rewriting only the files that contain them, published as ONE
-    manifest snapshot (:func:`~..sources.manifest.manifest_forget_rows`).
-    Readers pinned to any recent snapshot finish untouched; after GC's
-    grace window the forgotten docs have no bytes in the index. Query
-    behavior is identical to an index that never saw those docs — the
-    band/shingle rows ARE a doc's entire index footprint."""
-    from ..sources.manifest import manifest_forget_rows
-
-    return manifest_forget_rows(spark, path, "doc", ids, ["bands", "shingles"])

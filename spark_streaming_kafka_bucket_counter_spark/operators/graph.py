@@ -223,39 +223,6 @@ def connected_components(
     )
 
 
-@scoped
-def component_summary(
-    edges: DataFrame, src: str = "doc_a", dst: str = "doc_b"
-) -> DataFrame:
-    """One row per duplicate cluster: canonical keeper (min id), size."""
-    cc = connected_components(edges, src, dst)
-    return cc.groupBy("component").agg(
-        F.count(F.lit(1)).alias("n_members"),
-        F.max("node").alias("max_member"),
-    )
-
-
-@scoped
-def drop_near_duplicate_docs(
-    docs: DataFrame,
-    pairs: DataFrame,
-    id_col: str,
-    src: str = "doc_a",
-    dst: str = "doc_b",
-) -> DataFrame:
-    """The end-to-end near-dup DEDUP transform: keep every document
-    except non-canonical cluster members (component keeper = min id).
-
-    One anti-join of the corpus against the (tiny) non-keeper set — the
-    corpus itself is never shuffled beyond the join, and the non-keeper
-    side is candidates-scale, not corpus-scale."""
-    cc = connected_components(pairs, src, dst)
-    non_keepers = cc.filter(F.col("node") != F.col("component")).select(
-        F.col("node").alias(id_col)
-    )
-    return docs.join(non_keepers, id_col, "left_anti")
-
-
 def transitive_closure_sql(pairs_cte: str, src: str = "doc_a", dst: str = "doc_b") -> str:
     """DuckDB oracle: min reachable id per node via recursive closure.
 

@@ -137,33 +137,6 @@ def tokens_to_ids_sql(
     """
 
 
-def write_training_shards(
-    packed: DataFrame,
-    docs: DataFrame,
-    id_col: str,
-    path: str,
-) -> None:
-    """Materialize packed documents as training shards: parquet
-    partitioned by shard, each shard file sorted by (pack_id, offset) so
-    a loader reads sequences with a straight scan.
-
-    ``packed`` is :func:`pack_documents` output; ``docs`` supplies the
-    payload columns (joined back on ``id_col`` — the packing projection
-    deliberately carries no text so the window shuffle moves only
-    metadata; the payload join is the LAST step, after which data is
-    written straight out with no further shuffle beyond the
-    repartition-by-shard that aligns files with shards).
-    """
-    out = packed.join(docs, id_col)
-    (
-        out.repartition("shard")
-        .sortWithinPartitions("pack_id", "offset")
-        .write.partitionBy("shard")
-        .mode("overwrite")
-        .parquet(path)
-    )
-
-
 def pack_documents_sql(
     table: str,
     id_col: str,

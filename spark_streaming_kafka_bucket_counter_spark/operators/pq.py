@@ -66,7 +66,6 @@ __all__ = [
     "ivfpq_build_index",
     "ivfpq_append_index",
     "ivfpq_query_index",
-    "ivfpq_forget",
     "pq_codes_sql",
     "pq_adc_topk_sql",
     "pq_recall_sql",
@@ -1172,9 +1171,11 @@ def ivfpq_query_index(
     cand = (
         cells.join(F.broadcast(probes), "cid")
         .filter(F.col("id") != F.col("query_id"))
-        # at-least-once replay can duplicate (id, codes) rows in a cell;
-        # codes are a deterministic function of the vector, so the pair
-        # dedup is exact (the IVF twin's dropDuplicates rationale)
+        # a repeated append (e.g. a replayed batch: crash between
+        # ivfpq_append_index and the caller's commit) duplicates
+        # (id, codes) rows in a cell; codes are a deterministic function
+        # of the vector, so the pair dedup is exact (the IVF twin's
+        # dropDuplicates rationale)
         .dropDuplicates(["query_id", "id"])
     )
     scored = cand.join(F.broadcast(lut), "query_id").select(
@@ -1183,18 +1184,6 @@ def ivfpq_query_index(
         F.expr(_adc_dist_sql(m)).alias("adc_dist"),
     )
     return _rank_topk(scored, top_k)
-
-
-def ivfpq_forget(spark, path: str, ids: list[int]) -> int:
-    """Right-to-be-forgotten on the IVFADC index: drop the ids' code
-    rows from the cell files (zone maps prune the candidate files to
-    those whose recorded id range overlaps), publish as one snapshot,
-    GC after the grace window (inside manifest_forget_rows). Codes carry
-    no cross-row state — no stats re-derivation needed (unlike BM25's
-    dfreq). Index rows carry the source id under the name ``id``."""
-    from ..sources.manifest import manifest_forget_rows
-
-    return manifest_forget_rows(spark, path, "id", ids, ["cells"])
 
 
 # ---------------------------------------------------------------------------

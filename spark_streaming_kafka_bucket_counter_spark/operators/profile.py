@@ -15,9 +15,7 @@ accordingly:
   ``TakeOrderedAndProject`` (per-partition heaps) — never a global sort.
   This is also the skew DIAGNOSTIC: the report that tells you which
   keys need salting / AQE skew-split in downstream joins.
-- ``snapshot_diff`` is one full-outer hash join on the key; at scale
-  both snapshots of the same table are typically written bucketed on
-  the key (sources/files.write_bucketed), making the join shuffle-free.
+- ``snapshot_diff`` is one full-outer hash join on the key.
 
 Shares are parts-per-million BIGINTs (exact integer arithmetic), never
 floats.

@@ -48,13 +48,6 @@ def with_split(
     )
 
 
-def sample_fraction(
-    df: DataFrame, id_col: str, pct: int, buckets: int = 100, salt: str = "sample"
-) -> DataFrame:
-    """Deterministic ~pct% sample: rows whose bucket falls below ``pct``."""
-    return df.filter(hash_bucket(F.col(id_col), buckets, salt) < pct)
-
-
 def stratified_sample(
     df: DataFrame,
     id_col: str,

@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.text import tokens, tokens_sql
-from ._cache import persist, scope, scoped
+from ._cache import persist, scoped
 
 
 @scoped
@@ -238,8 +238,7 @@ def bm25_append_index(
     buckets: int = 64,
 ) -> None:
     """Fold new documents into a persisted BM25 index WITHOUT rebuilding
-    — the daily-crawl loop for the lexical leg of the index triad (see
-    ``lsh_append_index`` / ``ivf_append_index``). The batch's postings
+    — the lexical twin of ``ivf_append_index``. The batch's postings
     append into the matching term-bucket partitions, and its dfreq /
     corpus-stats rows land as new SEGMENTS that the query path sums at
     read time — document frequencies and (N, sum dl) totals are additive
@@ -286,11 +285,8 @@ def _bm25_write(
 
 
 def _covered_ranges(meta: dict) -> list[list[int]]:
-    """Covered-batch coverage as merged [lo, hi] ranges; folds the
-    legacy explicit-id list (pre-r9 snapshots) in transparently."""
-    ranges = [list(map(int, r)) for r in meta.get("bm25_covered_ranges", [])]
-    legacy = meta.get("bm25_covered_batches", [])
-    return _ranges_add(ranges, [int(b) for b in legacy]) if legacy else ranges
+    """Covered-batch coverage as merged inclusive [lo, hi] ranges."""
+    return [list(map(int, r)) for r in meta.get("bm25_covered_ranges", [])]
 
 
 def _ranges_add(ranges: list[list[int]], ids) -> list[list[int]]:
@@ -350,14 +346,15 @@ def bm25_write_segment(
     the multi-batch read. Bootstrap and increment use the same call —
     the index is born segmented.
 
-    Caller contract: a doc id must appear in at most one batch (the
-    ingest loop's upstream exact dedup guarantees it); duplicate ids
-    across DIFFERENT batches would double-count like any index append.
+    Caller contract: a doc id must appear in at most one batch (dedup
+    upstream, e.g. ``pipeline.streaming_drop_duplicates``); duplicate
+    ids across DIFFERENT batches would double-count like any index
+    append.
 
     COVERED batches are a manifest-level no-op (round 9): once
     :func:`bm25_merge_segments` has folded this ``batch_id`` into the
     merged base segment, the snapshot's
-    ``meta["bm25_covered_batches"]`` records it, and a
+    ``meta["bm25_covered_ranges"]`` records it, and a
     checkpoint-rollback replay of the batch returns without writing —
     the batch's rows already live in the base segment, and re-writing
     the (now nonexistent) ``batch_id=`` partition would double tf/df/N.
@@ -429,7 +426,7 @@ def bm25_merge_segments(spark, path: str, grace_sec: float = 300.0) -> int:
     serving layer).
 
     Merge math is exact by construction: postings rows move verbatim
-    (doc ids are disjoint across segments by the ingest contract), df
+    (doc ids are disjoint across segments by the write contract), df
     sums per (tb, term), and N / sum(dl) sum — the same additivity the
     query path already exploits at read time, now materialized once so
     reads stop paying it per query. Queries before and after the merge
@@ -439,7 +436,7 @@ def bm25_merge_segments(spark, path: str, grace_sec: float = 300.0) -> int:
     refused: merging away ``batch_id=7`` destroys the partition whose
     replace-scope overwrite made replay idempotent. The merge therefore
     records every folded batch id in the snapshot's
-    ``meta["bm25_covered_batches"]`` (carried forward by all later
+    ``meta["bm25_covered_ranges"]`` (carried forward by all later
     snapshots), and :func:`bm25_write_segment` turns a replay of a
     covered batch into a manifest-level NO-OP. The whole merge is one
     snapshot: pinned readers keep the pre-merge segment files through
@@ -448,8 +445,8 @@ def bm25_merge_segments(spark, path: str, grace_sec: float = 300.0) -> int:
 
     Returns the number of segments folded (0 when the index is flat,
     empty, or already a single segment). Single-maintainer like every
-    mutation here — the ingest loop calls this inside ``foreachBatch``
-    (``merge_every``), which serializes it against segment writes."""
+    mutation here: the caller serializes it against segment writes
+    (e.g. by calling it from the same ``foreachBatch``)."""
     from pathlib import Path
 
     from ..sources.manifest import gc_index_tree, latest_manifest, manifest_txn
@@ -598,212 +595,3 @@ def bm25_query_index(
         F.round(F.col("_s9") / F.lit(1e9), 6).alias("score"),
         F.col("rank").cast("long").alias("rank"),
     )
-
-
-def bm25_query_index_many(
-    spark,
-    queries_df: DataFrame,
-    path: str,
-    query_id_col: str = "query_id",
-    terms_col: str = "terms",
-    k1: float = 1.2,
-    b: float = 0.75,
-    top_k: int = 20,
-    buckets: int = 64,
-    id_col: str = "doc_id",
-    snapshot: dict | None = None,
-) -> DataFrame:
-    """Batched serving over a persisted BM25 index: a whole DataFrame of
-    ``(query_id, terms array<string>)`` answered in ONE plan — real
-    retrieval workloads (RAG corpus joins, eval sweeps) arrive as query
-    batches, not single calls, and a per-query loop would pay the index
-    scan per query instead of once.
-
-    Per-query semantics are IDENTICAL to :func:`bm25_query_index`
-    (lowercased deduped terms, Robertson idf over segment-merged df /
-    stats, nano-unit fixed point, (score desc, id) ties; pytest-pinned
-    against the single-query path). The union of the batch's terms is
-    collected driver-side — bounded by the query batch, the same
-    contract as the single-query tb computation — to build the literal
-    partition + term pushdown filters; the per-(query, term) fanout then
-    joins the pruned postings once, and one (query, doc) aggregation +
-    per-query window produce all rankings. Postings are read ONCE for
-    the whole batch regardless of batch size. Reads resolve one
-    manifest snapshot, same as :func:`bm25_query_index`.
-    """
-    from ..sources.manifest import latest_manifest, manifest_read
-
-    snap = snapshot if snapshot is not None else latest_manifest(path)
-    qt = queries_df.select(
-        F.col(query_id_col).alias("_qid"),
-        F.explode(
-            F.array_distinct(F.transform(F.col(terms_col), F.lower))
-        ).alias("term"),
-    )
-    # bounded driver collect: the distinct term union of ONE query batch
-    terms = sorted({r["term"] for r in qt.select("term").distinct().collect()})
-    if not terms:
-        qid_type = dict(queries_df.dtypes)[query_id_col]
-        return spark.createDataFrame(
-            [], f"{query_id_col} {qid_type}, {id_col} long, score double, rank long"
-        )
-    tbs = sorted({_term_bucket_py(t, buckets) for t in terms})
-    postings = (
-        manifest_read(spark, path, "postings", snapshot=snap)
-        .filter(F.col("tb").isin([int(x) for x in tbs]))
-        .filter(F.col("term").isin(terms))
-    )
-    dfreq = (
-        manifest_read(spark, path, "dfreq", snapshot=snap)
-        .filter(F.col("tb").isin([int(x) for x in tbs]))
-        .filter(F.col("term").isin(terms))
-        .groupBy("term")
-        .agg(F.sum("df").alias("df"))
-    )
-    stats = manifest_read(spark, path, "stats", snapshot=snap).agg(
-        F.sum("_N").alias("_N"), F.sum("_sumdl").alias("_sumdl")
-    )
-    idf = F.log((F.col("_N") - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1.0)
-    avgdl = F.col("_sumdl").cast("double") / F.col("_N")
-    w = (
-        idf
-        * (F.col("tf") * (k1 + 1.0))
-        / (F.col("tf") + k1 * (1.0 - b + b * F.col("_dl") / avgdl))
-    )
-    scored = (
-        postings.join(F.broadcast(qt), "term")
-        .join(F.broadcast(dfreq), "term")
-        .crossJoin(F.broadcast(stats))
-        .select(
-            "_qid", F.col(id_col), F.round(w * F.lit(1e9)).cast("long").alias("_w9")
-        )
-    )
-    per_doc = scored.groupBy("_qid", id_col).agg(F.sum("_w9").alias("_s9"))
-    rk = Window.partitionBy("_qid").orderBy(F.col("_s9").desc(), F.col(id_col))
-    return (
-        per_doc.withColumn("rank", F.row_number().over(rk))
-        .filter(F.col("rank") <= top_k)
-        .select(
-            F.col("_qid").alias(query_id_col),
-            F.col(id_col),
-            F.round(F.col("_s9") / F.lit(1e9), 6).alias("score"),
-            F.col("rank").cast("long").alias("rank"),
-        )
-    )
-
-
-def bm25_forget(
-    spark,
-    path: str,
-    ids: list[int],
-    id_col: str = "doc_id",
-) -> int:
-    """Right-to-be-forgotten over the persisted BM25 index (round 8).
-    BM25 is the index family where a naive row delete CORRUPTS results:
-    dfreq and corpus stats are additive aggregates of the postings, so
-    dropping a doc's postings without re-deriving them leaves idf and
-    avgdl computed over a corpus that no longer exists. The recipe:
-
-    1. drop the ids' postings rows (file-level rewrite of only the
-       files containing them — :func:`~..sources.manifest.
-       manifest_forget_rows`);
-    2. re-derive dfreq and stats for every AFFECTED segment from its
-       remaining postings (df = per-term doc count, N/sumdl from the
-       distinct (doc, dl) pairs — postings carry everything needed),
-       replacing those segments' aggregate files at manifest level.
-
-    Both steps land in ONE published snapshot (r8 ADVICE #4): no reader
-    — including one that plans mid-forget — can ever score post-forget
-    postings against pre-forget df/N/avgdl, because the generation that
-    drops the postings IS the generation that carries the re-derived
-    aggregates. Pinned readers keep the prior generation's fully
-    consistent view through the grace window; queries after the forget
-    are bit-identical to an index whose segments were built without the
-    forgotten docs (pytest-pinned). Works for segmented
-    (``batch_id``-partitioned) and flat build/append layouts alike; an
-    unmanaged (pre-manifest) tree is adopted, never silently no-opped.
-    Returns the number of postings files rewritten or retired."""
-    from pathlib import Path
-
-    from ..sources.manifest import (
-        gc_index_tree,
-        manifest_forget_rows,
-        manifest_txn,
-    )
-
-    idlist = [int(x) for x in ids]
-    if not idlist:
-        return 0
-    rootp = Path(path)
-
-    with manifest_txn(path) as txn:
-        post_files = sorted(txn.current_live("postings"))
-        if not post_files:
-            txn.abort()
-            return 0
-        post = spark.read.option("basePath", str(rootp / "postings")).parquet(
-            *[str(rootp / f) for f in post_files]
-        )
-        segmented = "batch_id" in post.columns
-        # which segments lose rows (before the rows disappear)
-        if segmented:
-            affected = [
-                int(r["batch_id"])
-                for r in post.filter(F.col(id_col).isin(idlist))
-                .select("batch_id").distinct().collect()
-            ]
-        else:
-            affected = (
-                [None]
-                if post.filter(F.col(id_col).isin(idlist)).limit(1).count()
-                else []
-            )
-        if not affected:
-            txn.abort()  # truthful no-op: don't bump the chain
-            return 0
-
-        n = manifest_forget_rows(spark, path, id_col, idlist, ["postings"], txn=txn)
-
-        for bid in affected:
-            rem_files = sorted(txn.current_live("postings"))
-            remaining = spark.read.option(
-                "basePath", str(rootp / "postings")
-            ).parquet(*[str(rootp / f) for f in rem_files])
-            if bid is not None:
-                remaining = remaining.filter(F.col("batch_id") == bid)
-            with scope():
-                remaining = persist(remaining)
-                docs = remaining.select(id_col, "_dl").distinct()
-                stats = docs.agg(
-                    F.count(F.lit(1)).alias("_N"), F.sum("_dl").alias("_sumdl")
-                ).select(
-                    "_N", F.coalesce("_sumdl", F.lit(0)).cast("long").alias("_sumdl")
-                )
-                dfreq = remaining.groupBy("tb", "term").agg(
-                    F.count(F.lit(1)).alias("df")
-                )
-                if bid is not None:
-                    txn.replace(f"stats/batch_id={bid}")
-                    txn.replace(f"dfreq/batch_id={bid}")
-                    bcol = F.lit(bid).cast("long")
-                    (
-                        stats.withColumn("batch_id", bcol).coalesce(1)
-                        .write.mode("append").partitionBy("batch_id")
-                        .parquet(str(rootp / "stats"))
-                    )
-                    (
-                        dfreq.withColumn("batch_id", bcol)
-                        .write.mode("append").partitionBy("batch_id", "tb")
-                        .parquet(str(rootp / "dfreq"))
-                    )
-                else:
-                    txn.replace("stats")
-                    txn.replace("dfreq")
-                    stats.coalesce(1).write.mode("append").parquet(
-                        str(rootp / "stats")
-                    )
-                    dfreq.write.mode("append").partitionBy("tb").parquet(
-                        str(rootp / "dfreq")
-                    )
-    gc_index_tree(path)
-    return n

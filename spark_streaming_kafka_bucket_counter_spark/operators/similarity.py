@@ -264,17 +264,6 @@ def ivf_topk(
     )
 
 
-def normalized(vec: Column, norm_col: Column) -> Column:
-    """Unit-normalized double vector given a PRE-MATERIALIZED norm column.
-
-    The norm must come from a separate ``withColumn`` step: referencing
-    ``norm(vec)`` directly inside the transform lambda would re-evaluate
-    the whole 64-element fold once per element (no CSE through
-    higher-order-function lambdas).
-    """
-    return F.transform(_dvec(vec), lambda x: x / norm_col)
-
-
 @scoped
 def cosine_near_dup_pairs(
     df: DataFrame,
@@ -1058,8 +1047,9 @@ def ivf_query_index(
         F.col(id_col).alias("cand_id"),
         cosine(F.col(vec_col), F.col("qvec")).alias("cosine"),
     )
-    # an at-least-once ingest replay (crash between ivf_append_index and
-    # the checkpoint commit) leaves duplicate (id, vec) rows in a cell;
+    # a repeated append (e.g. a replayed batch: crash between
+    # ivf_append_index and the caller's commit) leaves duplicate
+    # (id, vec) rows in a cell;
     # without this dedup each copy occupies its own rank and displaces a
     # true neighbor from the top-k. Rows for a duplicated id are
     # identical (cosine is a deterministic function of the pair, rounded
@@ -1085,9 +1075,8 @@ def ivf_append_index(
     vec_col: str,
     path: str,
 ) -> None:
-    """Fold new vectors into a persisted IVF index WITHOUT rebuilding —
-    the daily-crawl loop for the ANN leg of the index triad (see
-    ``lsh_append_index`` / ``bm25_append_index``). The batch is assigned
+    """Fold new vectors into a persisted IVF index WITHOUT rebuilding
+    (the ANN twin of ``bm25_append_index``). The batch is assigned
     to the index's EXISTING centroids (read from disk — bounded k x dim
     metadata, never recomputed, so cell geometry is stable across
     appends) and its rows append into the matching cell partitions;
@@ -1106,7 +1095,7 @@ def ivf_append_index(
         # Half-bootstrapped tree (data written, manifest commit lost):
         # the caller must re-bootstrap, not append against whatever
         # centroid files happen to be on disk — same rule as
-        # ivfpq_append_index / lsh_append_index.
+        # ivfpq_append_index.
         raise RuntimeError(
             f"ivf_append_index: no published manifest snapshot under "
             f"{path!r}; bootstrap with ivf_build_index first"
@@ -1282,16 +1271,3 @@ def knn_graph_sql(
       FROM knn_scored
       QUALIFY rank <= {top_k}
     )"""
-
-
-def ivf_forget(spark, path: str, ids: list[int], id_col: str = "vec_id") -> int:
-    """Right-to-be-forgotten over the persisted IVF index (round 8):
-    drop the given ids' rows from their cell partitions by rewriting
-    only the files that hold them — one snapshot publish, pinned
-    readers finish untouched, GC erases the bytes after the grace
-    window. Centroids are untouched: cell geometry is corpus-level
-    metadata, not per-vector data, so queries behave exactly as if the
-    vectors were never appended."""
-    from ..sources.manifest import manifest_forget_rows
-
-    return manifest_forget_rows(spark, path, id_col, ids, ["cells"])

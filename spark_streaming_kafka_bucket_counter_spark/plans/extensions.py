@@ -357,13 +357,6 @@ def verified_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash-LSH candidates (2 bands x 4 rows) verified by exact
-    Jaccard; the pair frame is memoized per dataset (see
-    :func:`verified_lsh_pairs`)."""
-    return verified_lsh_pairs(spark, sf_dir)
-
-
 _H16 = X.token_hash16_sql("token")
 _VOTES = ", ".join(
     f"SUM(CASE WHEN (h >> {b}) & 1 = 1 THEN 1 ELSE -1 END) AS v_{b}" for b in range(16)

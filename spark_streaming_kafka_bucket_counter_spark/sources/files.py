@@ -1,10 +1,5 @@
 """File-based sources: parquet test tables, the events file stream, document files.
 
-``load_tables`` registers the driver-generated tables as temp views so the
-serving layer's arbitrary-SQL endpoint (reference H2, ``GET /c/<sql>``)
-can query them by name — the Spark analog of the reference's ATTACHed
-SQLite databases (models.py:189-224).
-
 Every parquet read whose schema Spark would take from one footer goes
 through :func:`read_parquet`: the schema is read on the driver from that
 footer and handed to the reader, so planning a read runs no Spark job
@@ -26,20 +21,6 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
-
-TABLE_NAMES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
-
 
 NANOS_AS_LONG = "spark.sql.legacy.parquet.nanosAsLong"
 
@@ -160,19 +141,6 @@ def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _micros_ts(stream)
 
 
-def load_tables(
-    spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLE_NAMES, register: bool = True
-) -> dict[str, DataFrame]:
-    """Load every test table; optionally register temp views for SQL."""
-    out: dict[str, DataFrame] = {}
-    for name in names:
-        df = load_table(spark, sf_dir, name)
-        if register:
-            df.createOrReplaceTempView(name)
-        out[name] = df
-    return out
-
-
 def fan_out_scan(df: DataFrame, key_col: str | list[str]) -> DataFrame:
     """Scale-adaptive fan-out of a narrow input ahead of heavy per-row
     work (optimization guide §2.5, "input skew ... repartition
@@ -280,26 +248,6 @@ def _size_bytes(value: str, default: int) -> int:
         return default
 
 
-def write_bucketed(
-    df: DataFrame, table: str, key: str, buckets: int = 32, sort: bool = True
-) -> None:
-    """Persist a table bucketed (and sorted) by its join key — the
-    co-located-join layout: two tables bucketed the same way join with
-    NO exchange (and no sort, when sorted), because each bucket pair is
-    already partition-aligned on disk.
-
-    This is the 100 TB lever for repeated fact-fact joins (e.g.
-    orders x lineitem on the order key): pay one layout-time shuffle,
-    then every downstream join skips both sides' exchanges. Parquet
-    managed table in the session warehouse (`saveAsTable` — bucketing
-    metadata lives in the catalog).
-    """
-    writer = df.write.format("parquet").mode("overwrite").bucketBy(buckets, key)
-    if sort:
-        writer = writer.sortBy(key)
-    writer.saveAsTable(table)
-
-
 def cached_index_dir(
     kind: str, sf_dir: str, params: str, build, layout_version: int = 0
 ) -> str:
@@ -382,68 +330,6 @@ def open_or_none(path: str | None) -> str | None:
             return fh.read()
     except OSError:
         return None
-
-
-def zorder_key(cols: list[str], bits: int = 16) -> "F.Column":
-    """Z-order (Morton) clustering key over numeric columns: each column
-    is min/max-normalized to ``bits`` bits, then the bits are
-    interleaved — rows close in EVERY dimension get close keys, so
-    sorting by the key co-locates them in the same files/row groups and
-    parquet min/max statistics prune multi-column range predicates that
-    a single-column sort can only serve for its leading column.
-
-    Pure integer Column expressions (shift/or chains, whole-stage
-    codegen); the per-column min/max is a 1-row broadcast. 2 cols x 16
-    bits = a 32-bit key — plenty of distinct values for range
-    partitioning while keeping the expression chain short.
-
-    Expects the per-column bounds to be present as ``_mn_<col>`` /
-    ``_mx_<col>`` companion columns (a 1-row broadcast join —
-    :func:`write_zordered` wires this).
-    """
-    if not 1 <= bits * len(cols) <= 63:
-        raise ValueError("bits * len(cols) must fit in a signed 64-bit key")
-    scale = (1 << bits) - 1
-    key = F.lit(0).cast("long")
-    for i, c in enumerate(cols):
-        rng = F.col(f"_mx_{c}") - F.col(f"_mn_{c}")
-        v = F.when(rng > 0,
-                   F.floor((F.col(c) - F.col(f"_mn_{c}")) * scale / rng)
-                   ).otherwise(0).cast("long")
-        for b in range(bits):
-            bit = F.shiftright(v, b).bitwiseAND(F.lit(1))
-            key = key.bitwiseOR(F.shiftleft(bit, b * len(cols) + i))
-    return key
-
-
-def write_zordered(
-    df: DataFrame,
-    path: str,
-    cols: list[str],
-    bits: int = 16,
-    partitions: int = 32,
-) -> None:
-    """Write ``df`` as parquet clustered by the Z-order key of ``cols``:
-    range-partition on the key (balanced output files via sampled range
-    bounds), sort within partitions, drop the helper columns. The
-    result is the multi-dimensional data-skipping layout — downstream
-    range predicates on ANY of ``cols`` prune files/row groups by
-    footer min/max stats instead of scanning.
-    """
-    stats = df.agg(
-        *[a for c in cols for a in (F.min(F.col(c)).alias(f"_mn_{c}"),
-                                    F.max(F.col(c)).alias(f"_mx_{c}"))]
-    )
-    keyed = df.join(F.broadcast(stats)).withColumn(
-        "_zkey", zorder_key(cols, bits)
-    )
-    (
-        keyed.repartitionByRange(partitions, F.col("_zkey"))
-        .sortWithinPartitions("_zkey")
-        .drop("_zkey", *[f"_mn_{c}" for c in cols], *[f"_mx_{c}" for c in cols])
-        .write.mode("overwrite")
-        .parquet(path)
-    )
 
 
 # ---------------------------------------------------------------------------

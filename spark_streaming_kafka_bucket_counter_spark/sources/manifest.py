@@ -31,8 +31,9 @@ The manifest inverts the contract — the same shape the table formats
   once older than the grace window. Replay regenerates their content.
 
 Single-MAINTAINER contract: one
-writer/compactor at a time per index root — the streaming ingest loops
-serialize maintenance inside ``foreachBatch``. Readers need nothing.
+writer/compactor at a time per index root — the serving store's
+``foreachBatch`` commit serializes its own maintenance. Readers need
+nothing.
 Round 9 makes the contract ENFORCED, not just documented: every
 mutation holds a lease file (``_manifest/_lease``, O_EXCL create;
 broken automatically when the holder pid is dead on this host or the
@@ -52,10 +53,7 @@ crash debris.
 Round 9 also moved the SERVING STORE onto this substrate
 (streaming/serving.py) — appends, compaction, predicate deletes, and
 retention cleans all publish snapshots, so store readers gained the
-same 0-transient contract — and, in the second half, the line-count
-segment tree (streaming/pipeline.py start_line_dedup_ingest): the
-quintet soak caught its legacy directory-listing reader racing
-compaction for real, closing the last non-manifest index tree.
+same 0-transient contract.
 
 Scale notes: a publish costs O(live files) — one JSON dump plus one
 tree scan — and readers pay one JSON parse. That holds comfortably to
@@ -119,14 +117,11 @@ def _lease_is_stale(lease: Path, timeout_sec: float) -> bool:
     (see :func:`_maintainer_lease`), so the timeout only fires on a
     crashed or wedged holder, not on a long-running mutation."""
     try:
-        parts = lease.read_text().split()
-        pid = int(parts[1])
-        # legacy 3-field leases (token pid ts) predate the hostname and
-        # were same-host by construction
-        host = parts[2] if len(parts) > 3 else _HOSTNAME
+        _token, pid, host, _ts = lease.read_text().split()
+        pid = int(pid)
         st = lease.stat()
-    except (OSError, IndexError, ValueError):
-        return True  # unreadable/vanished: treat as breakable
+    except (OSError, ValueError):
+        return True  # unreadable/malformed/vanished: treat as breakable
     if st.st_mtime <= time.time() - timeout_sec:
         return True
     if host == _HOSTNAME:
@@ -261,55 +256,13 @@ def manifest_at(root: str | Path, generation: int) -> dict | None:
         return None
 
 
-def manifest_added_since(root: str | Path, since_generation: int,
-                         snapshot: dict | None = None) -> list[str] | None:
-    """Relative paths of data files LIVE in the current (or given)
-    snapshot but absent from generation ``since_generation`` — the
-    incremental-consumer primitive: a downstream job records the
-    generation it last processed and, next run, reads only the files
-    new appends/segments landed since. Compaction rewrites are included
-    (their files are new) — consumers doing exactly-once row processing
-    should track row identity, or schedule incremental pulls between
-    compactions (the ingest loops' ``compact_every`` cadence makes that
-    a contract, not luck). Returns None when either generation's
-    manifest is gone (pruned history): the caller falls back to a full
-    read rather than silently missing data."""
-    base = manifest_at(root, since_generation)
-    cur = snapshot if snapshot is not None else latest_manifest(root)
-    if base is None or cur is None:
-        return None
-    return sorted(set(cur["files"]) - set(base["files"]))
-
-
-def manifest_diff_read(spark: SparkSession, root: str | Path,
-                       since_generation: int, sub: str = "",
-                       snapshot: dict | None = None) -> DataFrame | None:
-    """Plan a parquet read over ONLY the files added after
-    ``since_generation`` under ``sub`` (see :func:`manifest_added_since`
-    for the contract). Returns None when the baseline generation is
-    pruned or no new files exist under the subtree — both cases where
-    the caller must decide (full re-read vs no-op), not silently get an
-    empty or complete scan."""
-    rootp = Path(root)
-    added = manifest_added_since(rootp, since_generation, snapshot=snapshot)
-    if added is None:
-        return None
-    want = sub.rstrip("/") + "/" if sub else ""
-    paths = [str(rootp / f) for f in added if f.startswith(want)]
-    if not paths:
-        return None
-    base = rootp / sub if sub else rootp
-    return read_parquet(spark, *paths, base=str(base))
-
-
 def scan_parquet_files(root: str | Path) -> set[str]:
     """Relative POSIX paths of every VISIBLE ``*.parquet`` under root
     (hidden ``_``/``.`` components excluded — staging dirs, the manifest
-    dir itself, ``_SUCCESS`` debris). Follows symlinks so legacy
-    compaction leaves are seen through their live slot."""
+    dir itself, ``_SUCCESS`` debris)."""
     rootp = Path(root)
     out: set[str] = set()
-    for dirpath, dirnames, filenames in os.walk(rootp, followlinks=True):
+    for dirpath, dirnames, filenames in os.walk(rootp):
         dirnames[:] = [d for d in dirnames if not d.startswith(("_", "."))]
         rel = Path(dirpath).relative_to(rootp).parts
         if _is_hidden(rel):
@@ -627,7 +580,7 @@ class ManifestTxnHandle:
         of the published snapshot, which won't exist until commit.
 
         A scoped call walks ONLY that subtree: callers that iterate
-        leaves (compaction, per-segment forget re-derive) would
+        leaves (compaction, the BM25 segment merge) would
         otherwise pay O(leaves x whole-tree walk) in stat calls — the
         dominant cost of a metadata-cheap maintenance pass on remote
         filesystems (r9 review catch)."""
@@ -745,8 +698,7 @@ def manifest_read(spark: SparkSession, root: str | Path, sub: str = "",
         # A manifest exists but lists no live files under the subtree.
         # NEVER fall back to the directory read: retired files awaiting
         # GC still sit there, and reading them would resurrect rows a
-        # forget just deleted (and double-count stats a rederive just
-        # rewrote). Schema comes from a retired/orphan file if one is
+        # forget just deleted. Schema comes from a retired/orphan file if one is
         # still on disk (schema-only — no rows are exposed); once GC
         # has emptied the subtree this raises the same PATH_NOT_FOUND
         # an empty directory read would.
@@ -836,8 +788,7 @@ def _rewrite_dropping_rows(spark: SparkSession, rootp: Path, live: set[str],
 def manifest_forget_rows(spark: SparkSession, root: str | Path,
                          id_col: str, ids: Sequence[int],
                          subtrees: Sequence[str],
-                         grace_sec: float = 300.0,
-                         txn: ManifestTxnHandle | None = None) -> int:
+                         grace_sec: float = 300.0) -> int:
     """Row-level delete across a manifest-managed index: drop every row
     whose ``id_col`` is in ``ids`` from the given subtrees, rewriting
     ONLY the data files that actually contain such rows and publishing
@@ -853,23 +804,11 @@ def manifest_forget_rows(spark: SparkSession, root: str | Path,
     rows. An UNMANAGED (pre-manifest) tree is adopted first — the
     forget is honored against the directory state, never silently
     no-opped. Returns the number of files rewritten or retired.
-
-    Pass an open ``txn`` (from :func:`manifest_txn`) to fold the
-    postings drop into a LARGER single-snapshot mutation — e.g. BM25's
-    forget, whose segment stat re-derivations must land in the SAME
-    snapshot so no reader ever plans post-forget postings against
-    pre-forget df/N/avgdl. With ``txn`` the caller publishes and GCs.
     """
     if not ids:
         return 0
     rootp = Path(root)
     idlist = [int(x) for x in ids]
-    if txn is not None:
-        touched, _added = _rewrite_dropping_rows(
-            spark, rootp, set(txn.live_files), id_col, idlist, subtrees
-        )
-        txn.retire(touched)
-        return len(touched)
     with manifest_txn(rootp) as t:
         touched, _added = _rewrite_dropping_rows(
             spark, rootp, set(t.live_files), id_col, idlist, subtrees

@@ -590,7 +590,7 @@ class ServingStore:
 
     def forget(self, id_col: str, ids: list[int]) -> int:
         """Right-to-be-forgotten on serving rows (free on the manifest
-        substrate, same primitive as ``lsh_forget`` / ``ivf_forget``):
+        substrate, :func:`~..sources.manifest.manifest_forget_rows`):
         rewrite ONLY the data files containing the given ids
         (pushdown-pruned discovery scan), publish as one snapshot, GC
         after the grace window — after which the forgotten rows have no

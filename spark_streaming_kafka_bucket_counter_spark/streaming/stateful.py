@@ -1,10 +1,10 @@
 """Custom stateful streaming operator: cross-batch running bucket-count
-via ``applyInPandasWithState`` with optional TTL state eviction.
+via ``applyInPandasWithState``.
 
 This is the "custom operator" escape hatch the engine offers where the
 built-in stateful aggregation (pipeline.start_merged_counter) can't
-express the semantics — e.g. per-key TTLs independent of watermarks, or
-arbitrary per-group Python logic. It reproduces the reference's
+express the semantics — arbitrary per-group Python logic over explicit
+group state. It reproduces the reference's
 MySQL-upsert running count (main.py:410-467, ``ON DUPLICATE KEY UPDATE
 count = count + v``) as explicit group state:
 
@@ -12,9 +12,9 @@ count = count + v``) as explicit group state:
 - state     = one LongType running count per key
 - per batch = count the key's new rows (Arrow batches, vectorized),
   add to state, emit the updated total (update-mode row)
-- TTL       = ProcessingTimeTimeout; an idle key's state is dropped and a
-  tombstone row (count = -1) emitted — the retention knob the reference
-  lacks (its MySQL table grows forever).
+
+The catalog's ``stateful_running_count`` drains it through
+``pipeline.drain_to_table``.
 
 Scale notes: state lives in the executors' state store partitioned by
 group key (one shuffle per batch, same as the built-in agg); Arrow moves
@@ -29,11 +29,8 @@ from typing import Iterable, Tuple
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import LongType, StructField, StructType
-
-from .pipeline import start_writer
 
 
 def _output_schema(records: DataFrame, keys: list[str]) -> StructType:
@@ -47,7 +44,7 @@ def _output_schema(records: DataFrame, keys: list[str]) -> StructType:
 STATE_SCHEMA = StructType([StructField("n", LongType(), False)])
 
 
-def make_running_count_func(keys: list[str], ttl_ms: int | None):
+def make_running_count_func(keys: list[str]):
     """Build the (key, batches, state) -> rows function. Module-level
     builder (not a closure over DataFrames) so it pickles cleanly to
     executors."""
@@ -55,20 +52,10 @@ def make_running_count_func(keys: list[str], ttl_ms: int | None):
     def fn(
         key: Tuple, pdfs: Iterable[pd.DataFrame], state: GroupState
     ) -> Iterable[pd.DataFrame]:
-        if state.hasTimedOut:
-            # TTL eviction: drop state, emit a tombstone the sink can use
-            # to retract the key (count = -1 sentinel).
-            state.remove()
-            row = dict(zip(keys, key))
-            row["count"] = -1
-            yield pd.DataFrame([row])
-            return
         new = sum(len(pdf) for pdf in pdfs)
         (prev,) = state.get if state.exists else (0,)
         total = prev + new
         state.update((total,))
-        if ttl_ms is not None:
-            state.setTimeoutDuration(ttl_ms)
         row = dict(zip(keys, key))
         row["count"] = total
         yield pd.DataFrame([row])
@@ -76,43 +63,14 @@ def make_running_count_func(keys: list[str], ttl_ms: int | None):
     return fn
 
 
-def running_bucket_count(
-    records: DataFrame,
-    group_cols: list[str],
-    ttl_ms: int | None = None,
-) -> DataFrame:
+def running_bucket_count(records: DataFrame, group_cols: list[str]) -> DataFrame:
     """records (already bucketed) -> update-mode stream of running counts
     per (group_cols, bucket_start, bucket_end)."""
     keys = [*group_cols, "bucket_start", "bucket_end"]
-    timeout = (
-        GroupStateTimeout.ProcessingTimeTimeout
-        if ttl_ms is not None
-        else GroupStateTimeout.NoTimeout
-    )
     return records.groupBy(*keys).applyInPandasWithState(
-        make_running_count_func(keys, ttl_ms),
+        make_running_count_func(keys),
         outputStructType=_output_schema(records, keys),
         stateStructType=STATE_SCHEMA,
         outputMode="update",
-        timeoutConf=timeout,
+        timeoutConf=GroupStateTimeout.NoTimeout,
     )
-
-
-def start_stateful_counter(
-    records: DataFrame,
-    group_cols: list[str],
-    checkpoint_dir: str,
-    query_name: str = "stateful_counts",
-    ttl_ms: int | None = None,
-    trigger: dict | None = None,
-) -> StreamingQuery:
-    """Wire :func:`running_bucket_count` to the in-memory sink (swap for
-    Kafka/JDBC in production)."""
-    counts = running_bucket_count(records, group_cols, ttl_ms)
-    writer = (
-        counts.writeStream.outputMode("update")
-        .format("memory")
-        .queryName(query_name)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    return start_writer(writer, trigger)

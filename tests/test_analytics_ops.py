@@ -6,7 +6,6 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from spark_streaming_kafka_bucket_counter_spark.operators.graph import (
-    component_summary,
     connected_components,
 )
 from spark_streaming_kafka_bucket_counter_spark.operators.sessions import session_summary
@@ -132,15 +131,6 @@ def test_pagerank_empty_edges_returns_empty(spark):
     assert out.count() == 0
 
 
-def test_component_summary_shape(spark):
-    df = spark.createDataFrame([(5, 9), (9, 7), (1, 2)], "doc_a long, doc_b long")
-    rows = {
-        (r["component"], r["n_members"], r["max_member"])
-        for r in component_summary(df).collect()
-    }
-    assert rows == {(5, 3, 9), (1, 2, 2)}
-
-
 def test_session_summary_gap_and_ties(spark):
     rows = [
         # user 1: two sessions (gap 100 > 30), with a timestamp tie
@@ -188,36 +178,6 @@ def test_asof_join_semantics(spark):
         20: (None, None),      # user with no purchases
     }
     assert out.count() == 4  # every left row survives
-
-
-def test_write_training_shards_layout(spark, tmp_path):
-    """Shard writer: parquet partitioned by shard, rows inside each
-    shard ordered by (pack_id, offset) for straight-scan loading."""
-    import os
-
-    from spark_streaming_kafka_bucket_counter_spark.operators.packing import (
-        pack_documents,
-        write_training_shards,
-    )
-
-    docs = spark.createDataFrame(
-        [(i, f"text-{i}") for i in range(40)], "doc_id long, text string"
-    )
-    sized = docs.selectExpr("doc_id", "10 + doc_id % 7 as n_tokens")
-    packed = pack_documents(sized, "doc_id", "n_tokens", budget=64, n_shards=4)
-    out = str(tmp_path / "shards")
-    write_training_shards(packed, docs, "doc_id", out)
-
-    shards = sorted(d for d in os.listdir(out) if d.startswith("shard="))
-    assert len(shards) >= 2  # 40 docs over 4 hash shards
-    back = spark.read.parquet(out)
-    assert back.count() == 40
-    assert {"doc_id", "n_tokens", "offset", "pack_id", "text", "shard"} <= set(back.columns)
-    # within every file, rows are (pack_id, offset)-sorted
-    for shard_dir in shards:
-        pdf = spark.read.parquet(f"{out}/{shard_dir}").toPandas()
-        ordered = pdf.sort_values(["pack_id", "offset"]).reset_index(drop=True)
-        assert (pdf[["pack_id", "offset"]].values == ordered[["pack_id", "offset"]].values).all()
 
 
 def test_tokens_to_ids_vocab_and_order(spark):

@@ -8,15 +8,10 @@ ONE snapshot, queries are bit-identical across the merge, folded batch
 ids live in the snapshot's `bm25_covered_ranges` provenance (merged
 [lo, hi] ranges — O(1) regardless of total batch count) so a
 checkpoint-rollback replay of a covered batch is a manifest-level
-no-op, and the streaming loop's `merge_every` keeps live file count
-bounded as batches accumulate.
+no-op.
 """
 
 from __future__ import annotations
-
-import json
-import os
-import time
 
 from spark_streaming_kafka_bucket_counter_spark.operators.search import (
     BM25_MERGED_SEGMENT,
@@ -26,7 +21,6 @@ from spark_streaming_kafka_bucket_counter_spark.operators.search import (
     bm25_write_segment,
 )
 from spark_streaming_kafka_bucket_counter_spark.sources.manifest import (
-    gc_index_tree,
     latest_manifest,
     manifest_read,
     scan_parquet_files,
@@ -126,78 +120,9 @@ def test_replay_of_covered_batch_is_manifest_noop(spark, tmp_path):
     assert 100 in {r["doc_id"] for r in hits}
 
 
-def test_streaming_merge_every_bounds_live_files(spark, tmp_path):
-    """8 micro-batches with merge_every=4 + compact_every=4: live BM25
-    file count stays bounded by (segments <= merge_every + base) x
-    leaves, instead of growing a segment per batch forever — and the
-    final index scores identically to the batch operator over the
-    union corpus (the VERDICT's 'done' shape for Next #2)."""
-    from spark_streaming_kafka_bucket_counter_spark.streaming.pipeline import (
-        start_search_index_ingest,
-    )
-
-    src = tmp_path / "msrc"
-    src.mkdir()
-    rows = [
-        {"doc_id": i, "text": f"shared tok{i} extra{i % 3} apple"}
-        for i in range(8)
-    ]
-    now = time.time()
-    for i, r in enumerate(rows):
-        f = src / f"{i:02d}.json"
-        f.write_text(json.dumps(r))
-        os.utime(f, (now - 80 + 10 * i, now - 80 + 10 * i))
-
-    stream = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", 1)
-        .json(str(src))
-    )
-    idx = str(tmp_path / "bm25m")
-    q = start_search_index_ingest(
-        stream,
-        "doc_id",
-        "text",
-        idx,
-        str(tmp_path / "mck"),
-        buckets=8,
-        merge_every=4,
-        compact_every=4,
-        gc_grace_sec=0,
-    )
-    assert q.awaitTermination(300)
-    gc_index_tree(idx, grace_sec=0)
-
-    m = latest_manifest(idx)
-    segs = {
-        f.split("/")[1] for f in m["files"] if f.startswith("postings/")
-    }
-    # batches 0-3 merged at batch 3, 0-7 merged at batch 7: only base
-    assert segs == {f"batch_id={BM25_MERGED_SEGMENT}"}
-    assert m["meta"]["bm25_covered_ranges"] == [[0, 7]]
-    # bounded: base segment compacted to <= 1 file per (tb) leaf per
-    # table + 1 stats file — far under the 8-segments-uncompacted shape
-    assert len(m["files"]) <= 2 * 8 + 1
-
-    corpus = spark.createDataFrame(
-        [(r["doc_id"], r["text"]) for r in rows], "doc_id long, text string"
-    )
-    for ts in (["shared"], ["apple", "extra1"], ["tok3"]):
-        via_index = [
-            (r["doc_id"], r["score"], r["rank"])
-            for r in bm25_query_index(spark, idx, ts, top_k=10, buckets=8).collect()
-        ]
-        direct = [
-            (r["doc_id"], r["score"], r["rank"])
-            for r in bm25_topk(corpus, "doc_id", "text", ts, top_k=10).collect()
-        ]
-        assert via_index == direct, ts
-
-
-def test_covered_ranges_coalesce_and_legacy_compat():
+def test_covered_ranges_coalesce():
     """Coverage provenance is O(#ranges), not O(#batches): contiguous
-    ids coalesce, gaps stay separate, and pre-r9 snapshots' explicit
-    bm25_covered_batches lists are still honored."""
+    ids coalesce and gaps stay separate."""
     from spark_streaming_kafka_bucket_counter_spark.operators.search import (
         _covered_contains,
         _ranges_add,
@@ -211,7 +136,3 @@ def test_covered_ranges_coalesce_and_legacy_compat():
     assert _covered_contains(meta, 500) and _covered_contains(meta, 5000)
     assert not _covered_contains(meta, 1001)
     assert not _covered_contains(meta, 1003)
-    legacy = {"bm25_covered_batches": [3, 4, 5, 9]}
-    assert _covered_contains(legacy, 4) and not _covered_contains(legacy, 6)
-    mixed = {"bm25_covered_ranges": [[0, 2]], "bm25_covered_batches": [3]}
-    assert _covered_contains(mixed, 3)

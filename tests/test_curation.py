@@ -358,30 +358,3 @@ def test_lsh_index_query_matches_cross_pairs(spark, tmp_path):
     assert via_index == direct
     assert any(r[0] == 200 and r[1] == 100 for r in via_index)  # dup found
     assert not any(r[0] == 201 for r in via_index)  # unrelated stays clean
-
-
-def test_lsh_append_index_equals_full_rebuild(spark, tmp_path):
-    """build(half) + append(other half) must answer queries identically
-    to build(full) — the incremental maintenance contract."""
-    from spark_streaming_kafka_bucket_counter_spark.operators.dedup import (
-        lsh_append_index,
-        lsh_build_index,
-        lsh_query_index,
-    )
-
-    rows = [(i, f"some shared words plus topic {i % 7} and filler {i}") for i in range(40)]
-    full = spark.createDataFrame(rows, "doc_id long, text string")
-    first = spark.createDataFrame(rows[:20], "doc_id long, text string")
-    second = spark.createDataFrame(rows[20:], "doc_id long, text string")
-    batch = spark.createDataFrame(
-        [(900, "some shared words plus topic 3 and filler 31")],
-        "doc_id long, text string",
-    )
-    p_inc = str(tmp_path / "inc")
-    p_full = str(tmp_path / "full")
-    lsh_build_index(first, "doc_id", "text", p_inc)
-    lsh_append_index(second, "doc_id", "text", p_inc)
-    lsh_build_index(full, "doc_id", "text", p_full)
-    a = {tuple(r) for r in lsh_query_index(spark, p_inc, batch, "doc_id", "text").collect()}
-    b = {tuple(r) for r in lsh_query_index(spark, p_full, batch, "doc_id", "text").collect()}
-    assert a == b and len(a) >= 1

@@ -240,45 +240,6 @@ def test_snapshot_time_travel_on_bm25(spark, tmp_path):
     assert manifest_at(idx, 10_000) is None
 
 
-def test_incremental_diff_read(spark, tmp_path):
-    """manifest_added_since / manifest_diff_read: an incremental
-    consumer that remembers its last processed generation reads exactly
-    the rows later appends landed — and gets an explicit None (never a
-    silently wrong scan) when the baseline is pruned or nothing new
-    exists under the subtree."""
-    from spark_streaming_kafka_bucket_counter_spark.sources.manifest import (
-        manifest_added_since,
-        manifest_diff_read,
-    )
-
-    root = tmp_path / "idx"
-    root.mkdir()
-    with manifest_txn(root):
-        spark.range(5).selectExpr("id", "id*2 as v").write.mode(
-            "append"
-        ).parquet(str(root / "t"))
-    g1 = latest_manifest(root)["generation"]
-
-    with manifest_txn(root):
-        spark.range(5, 9).selectExpr("id", "id*2 as v").write.mode(
-            "append"
-        ).parquet(str(root / "t"))
-        spark.range(3).selectExpr("id as k").write.mode("append").parquet(
-            str(root / "other")
-        )
-
-    inc = manifest_diff_read(spark, root, g1, "t")
-    assert inc is not None
-    assert sorted(r["id"] for r in inc.collect()) == [5, 6, 7, 8]
-    # subtree with no additions since g-now -> None (no-op), not empty scan
-    g2 = latest_manifest(root)["generation"]
-    assert manifest_diff_read(spark, root, g2, "t") is None
-    # other subtree's additions visible under its own prefix
-    assert manifest_diff_read(spark, root, g1, "other").count() == 3
-    # pruned baseline -> None (full-read fallback signal)
-    assert manifest_added_since(root, 999) is None
-
-
 @pytest.mark.parametrize("seed", [1, 7, 42, 1234, 99991])
 def test_model_based_random_op_sequences(tmp_path, seed):
     """Model-based robustness: random interleavings of append /
@@ -413,7 +374,10 @@ def test_stale_lease_from_dead_pid_is_broken(tmp_path):
     root.mkdir()
     mdir = root / "_manifest"
     mdir.mkdir()
-    (mdir / "_lease").write_text("deadbeef 999999999 0.0")  # impossible pid
+    from spark_streaming_kafka_bucket_counter_spark.sources.manifest import _HOSTNAME
+
+    # a fresh lease on this host whose pid cannot exist
+    (mdir / "_lease").write_text(f"deadbeef 999999999 {_HOSTNAME} {time.time()}")
     with manifest_txn(root):
         _touch(root, "a/part-1.parquet")
     assert latest_manifest(root)["generation"] == 1

@@ -167,21 +167,29 @@ def test_index_append_equals_rebuild(spark, emb, books, tmp_path):
     assert spark_signature(grown) == spark_signature(two)
 
 
-def test_index_forget_removes_ids(spark, emb, books, tmp_path):
-    path = str(tmp_path / "fidx")
-    PQ.ivfpq_build_index(emb, "vec_id", "embedding", path, DIM, m=M, ksub=KSUB)
-    before = PQ.ivfpq_query_index(
-        spark, path, emb.filter(F.col("vec_id") < 3), "vec_id", "embedding",
-        DIM, m=M, ksub=KSUB, top_k=5,
-    ).collect()
-    gone = {r["cand_id"] for r in before if r["rank"] == 1}
-    n = PQ.ivfpq_forget(spark, path, sorted(gone))
-    assert n >= 1
-    after = PQ.ivfpq_query_index(
-        spark, path, emb.filter(F.col("vec_id") < 3), "vec_id", "embedding",
-        DIM, m=M, ksub=KSUB, top_k=5,
-    ).collect()
-    assert not ({r["cand_id"] for r in after} & gone)
+def test_index_repeated_append_answers_as_one_append(spark, emb, books, tmp_path):
+    # the same batch appended twice duplicates (id, codes) rows in the
+    # cells; the served query still ranks each candidate once, exactly
+    # as after a single append
+    lo = emb.filter(F.col("vec_id") < 40)
+    hi = emb.filter(F.col("vec_id") >= 40)
+    queries = emb.filter(F.col("vec_id") < 5)
+    path = str(tmp_path / "idx")
+    PQ.ivfpq_build_index(lo, "vec_id", "embedding", path, DIM, m=M, ksub=KSUB)
+    answers = []
+    for _ in range(2):
+        PQ.ivfpq_append_index(
+            spark, hi, "vec_id", "embedding", path, DIM, m=M, ksub=KSUB
+        )
+        answers.append(
+            PQ.ivfpq_query_index(
+                spark, path, queries, "vec_id", "embedding", DIM, m=M, ksub=KSUB
+            ).collect()
+        )
+    once, twice = answers
+    assert sorted(map(tuple, twice)) == sorted(map(tuple, once))
+    pairs = [(r["query_id"], r["cand_id"]) for r in twice]
+    assert pairs and len(set(pairs)) == len(pairs)
 
 
 def test_residual_frame_exact(spark, emb):

@@ -32,9 +32,12 @@ def test_split_partitions_and_rate(spark):
 
 def test_different_salts_give_different_samples(spark):
     docs = load_table(spark, SF_DIR, "documents").select("doc_id")
-    s1 = {r[0] for r in SP.sample_fraction(docs, "doc_id", 50, salt="a").collect()}
-    s2 = {r[0] for r in SP.sample_fraction(docs, "doc_id", 50, salt="b").collect()}
-    assert s1 != s2  # independent hash families
+
+    def half(salt):
+        keep = SP.hash_bucket(F.col("doc_id"), 100, salt) < 50
+        return {r[0] for r in docs.filter(keep).collect()}
+
+    assert half("a") != half("b")  # independent hash families
 
 
 def test_stratified_rates_respected(spark):
@@ -158,6 +161,39 @@ def test_ivf_append_index_equals_full_rebuild(spark, tmp_path):
     assert a == b and len(a) == 25
 
 
+def test_ivf_repeated_append_answers_as_one_append(spark, tmp_path):
+    """Appending the same batch twice leaves duplicate (id, vec) rows in
+    the cells; ivf_query_index must still answer as after one append:
+    each candidate once per query, at its true rank."""
+    from spark_streaming_kafka_bucket_counter_spark.operators.similarity import (
+        ivf_append_index,
+        ivf_build_index,
+        ivf_query_index,
+    )
+
+    emb = load_table(spark, SF_DIR, "embeddings")
+    first = emb.filter("vec_id % 2 = 0 OR vec_id < 16")
+    second = emb.subtract(first)
+    path = str(tmp_path / "ivf")
+    queries = emb.filter("vec_id < 5")
+    ivf_build_index(first, "vec_id", "embedding", path, n_centroids=16)
+    answers = []
+    for _ in range(2):
+        ivf_append_index(spark, second, "vec_id", "embedding", path)
+        answers.append(
+            sorted(
+                tuple(r)
+                for r in ivf_query_index(
+                    spark, path, queries, "vec_id", "embedding", nprobe=2, top_k=5
+                ).collect()
+            )
+        )
+    once, twice = answers
+    assert twice == once and len(once) == 25
+    pairs = [(q, c) for q, c, _cos, _rank in twice]
+    assert len(set(pairs)) == len(pairs)
+
+
 def test_bm25_append_index_equals_full_rebuild(spark, tmp_path):
     """build(half) + append(other half) must score identically to
     build(full): per-segment dfreq and corpus-stats rows are summed at
@@ -189,52 +225,6 @@ def test_bm25_append_index_equals_full_rebuild(spark, tmp_path):
         for r in bm25_query_index(spark, p_full, terms, top_k=10).collect()
     ]
     assert a == b and len(a) == 10
-
-
-def test_bm25_query_index_many_matches_single_query_loop(spark, tmp_path):
-    """One batched plan over the index must rank every query exactly as
-    the single-query serving path does (same scoring, same ties), while
-    reading the postings once for the whole batch."""
-    from spark_streaming_kafka_bucket_counter_spark.operators.search import (
-        bm25_build_index,
-        bm25_query_index,
-        bm25_query_index_many,
-    )
-    from spark_streaming_kafka_bucket_counter_spark.sources.files import load_table
-    from tests.conftest import SF_DIR
-
-    docs = load_table(spark, SF_DIR, "documents")
-    idx = str(tmp_path / "bm25_many")
-    bm25_build_index(docs, "doc_id", "text", idx, buckets=64)
-    batches = {
-        1: ["data", "model", "training"],
-        2: ["the", "Data"],  # mixed case -> lowercased like the single path
-        3: ["zzznotaterm"],  # no postings -> no rows for this query
-    }
-    qdf = spark.createDataFrame(
-        [(qid, ts) for qid, ts in batches.items()],
-        "query_id long, terms array<string>",
-    )
-    batched = bm25_query_index_many(spark, qdf, idx, top_k=7)
-    # the batch's term union must still prune postings partitions and
-    # push the term predicate — one pruned scan for the WHOLE batch
-    plan = batched._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters: [tb#" in plan.replace(
-        "PartitionFilters: [tb IN", "PartitionFilters: [tb#"
-    ) or "tb IN" in plan
-    assert "PushedFilters" in plan and "term" in plan
-    got = {}
-    for r in batched.collect():
-        got.setdefault(r["query_id"], []).append((r["doc_id"], r["score"], r["rank"]))
-    for qid in got:
-        got[qid].sort(key=lambda x: x[2])
-    for qid, terms in batches.items():
-        single = [
-            (r["doc_id"], r["score"], r["rank"])
-            for r in bm25_query_index(spark, idx, terms, top_k=7).collect()
-        ]
-        assert got.get(qid, []) == single, qid
-    assert 3 not in got  # unseen term -> empty result, not an error
 
 
 def test_compact_index_tree_preserves_index_answers(spark, tmp_path):

@@ -169,38 +169,6 @@ def test_parse_and_bucket_dropped_bucket_field_still_buckets(spark):
     assert [tuple(r) for r in out.collect()] == [("click", 40, 60)]
 
 
-def test_sliding_counter_store_parity(spark, store, tmp_path):
-    """start_sliding_counter: hopping-window counts drained through a real
-    availableNow stream into the serving store must equal the batch
-    sliding_bucket_count over the same rows."""
-    from spark_streaming_kafka_bucket_counter_spark.operators.count import (
-        sliding_bucket_count,
-    )
-    from spark_streaming_kafka_bucket_counter_spark.streaming.pipeline import (
-        start_sliding_counter,
-    )
-
-    events = load_table(spark, SF_DIR, "events").limit(400).select("event_type", "ts")
-    src = tmp_path / "slide_src"
-    events.write.mode("overwrite").parquet(str(src))
-
-    stream = spark.readStream.schema(events.schema).parquet(str(src))
-    q = start_sliding_counter(
-        stream, store, ["event_type"], "ts",
-        window=60, slide=20,
-        checkpoint_dir=str(tmp_path / "ckpt"),
-    )
-    assert q.awaitTermination(120), "stream did not drain in time"
-
-    got = sorted(
-        map(tuple, store.view().drop(RST_COL).collect())
-    )
-    want = sorted(
-        map(tuple, sliding_bucket_count(events, ["event_type"], "ts", 60, 20).collect())
-    )
-    assert got == want and len(got) > 0
-
-
 def test_store_compact_frozen_partitions(spark, tmp_path):
     """Round 9 (manifest substrate): compaction publishes ONE snapshot
     whose frozen partitions are single-file; the displaced fragments

@@ -1,5 +1,5 @@
 """Custom stateful operator (applyInPandasWithState running bucket-count):
-cross-batch accumulation parity with the batch groupBy, and TTL plumbing."""
+cross-batch accumulation parity with the batch groupBy."""
 
 from __future__ import annotations
 
@@ -8,8 +8,9 @@ from pyspark.sql import functions as F
 from spark_streaming_kafka_bucket_counter_spark.functions.buckets import with_bucket
 from spark_streaming_kafka_bucket_counter_spark.functions.buckets import ts_epoch_seconds
 from spark_streaming_kafka_bucket_counter_spark.sources.files import load_table
+from spark_streaming_kafka_bucket_counter_spark.streaming.pipeline import start_writer
 from spark_streaming_kafka_bucket_counter_spark.streaming.stateful import (
-    start_stateful_counter,
+    running_bucket_count,
 )
 from tests.conftest import SF_DIR
 
@@ -37,10 +38,15 @@ def test_stateful_running_count_merges_batches(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(str(src))
     )
-    q = start_stateful_counter(
-        stream, ["event_type"], str(tmp_path / "ckpt"), query_name="stateful_test"
+    writer = (
+        running_bucket_count(stream, ["event_type"])
+        .writeStream.outputMode("update")
+        .format("memory")
+        .queryName("stateful_test")
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
     )
-    q.awaitTermination(120)
+    q = start_writer(writer)
+    assert q.awaitTermination(120)
 
     # update-mode memory sink: the max per key is the last (= merged) total
     got = spark.sql(
@@ -56,37 +62,3 @@ def test_stateful_running_count_merges_batches(spark, tmp_path):
         .count()
     )
     assert sorted(map(tuple, got.collect())) == sorted(map(tuple, expected.collect()))
-
-
-def test_stateful_counter_ttl_emits_totals_then_tombstones(spark, tmp_path):
-    """TTL mode (ProcessingTimeTimeout): every key emits its running total;
-    keys whose timers fire during the availableNow drain additionally emit
-    a count = -1 tombstone (the retraction signal for downstream sinks).
-    Ignoring tombstones, totals must still equal the batch groupBy."""
-    src = tmp_path / "src"
-    _bucketed(spark, 200).coalesce(1).write.mode("append").parquet(str(src))
-    stream = spark.readStream.schema(
-        "event_type string, bucket_start long, bucket_end long"
-    ).parquet(str(src))
-    q = start_stateful_counter(
-        stream,
-        ["event_type"],
-        str(tmp_path / "ckpt"),
-        query_name="stateful_ttl_test",
-        ttl_ms=60_000,
-    )
-    q.awaitTermination(120)
-    got = spark.sql(
-        """
-        SELECT event_type, bucket_start, bucket_end, max(count) AS count
-        FROM stateful_ttl_test GROUP BY 1, 2, 3
-        """
-    )
-    expected = _bucketed(spark, 200).groupBy(
-        "event_type", "bucket_start", "bucket_end"
-    ).count()
-    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, expected.collect()))
-    bad = spark.sql(
-        "SELECT count(*) AS n FROM stateful_ttl_test WHERE count < 1 AND count <> -1"
-    ).collect()[0].n
-    assert bad == 0

@@ -95,42 +95,3 @@ def test_same_ts_name_rejected(spark):
         assert "distinct" in str(e)
     else:
         raise AssertionError("expected ValueError")
-
-
-def test_stream_static_dim_enrichment(spark, tmp_path):
-    import json as _json
-
-    from spark_streaming_kafka_bucket_counter_spark.streaming.pipeline import (
-        enrich_with_dim,
-    )
-
-    src = tmp_path / "esrc"
-    src.mkdir()
-    (src / "a.json").write_text(
-        "\n".join(
-            _json.dumps(r)
-            for r in [
-                {"user_id": 1, "n": 10},
-                {"user_id": 2, "n": 20},
-                {"user_id": 9, "n": 30},  # no dim row -> left join keeps it
-            ]
-        )
-    )
-    dim = spark.createDataFrame(
-        [(1, "gold"), (2, "silver")], "user_id long, tier string"
-    )
-    stream = spark.readStream.schema("user_id long, n long").json(str(src))
-    enriched = enrich_with_dim(stream, dim, "user_id")
-    q = (
-        enriched.writeStream.format("memory")
-        .queryName("enriched")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    assert q.awaitTermination(120)
-    got = {
-        r["user_id"]: r["tier"]
-        for r in spark.sql("SELECT user_id, tier FROM enriched").collect()
-    }
-    assert got == {1: "gold", 2: "silver", 9: None}
