@@ -781,11 +781,3 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 def oracle_sql() -> dict[str, str]:
     return _priority_ordered(ORACLES)
 
-
-# Extension operators (dedup / similarity / text / multimodal, then
-# sessions / clustering / sketches / vocab) register themselves into the
-# same catalog on import.
-from . import extensions  # noqa: E402,F401
-from . import analytics  # noqa: E402,F401
-from . import insights  # noqa: E402,F401
-from . import corpus  # noqa: E402,F401

@@ -5,8 +5,8 @@ and ``ss_kafka_bucket_counter``, main.py:91-133).
 Reference dataflow: Kafka -> drop keys -> JSON parse + project + bucket ->
 per-batch reduceByKey count -> accumulator flip -> mp.Queue -> SQLite.
 Here: ``readStream`` -> ``from_json`` projection -> bucket columns ->
-``foreachBatch`` (per-batch groupBy().count() + a serving-store commit
-of the counts under ``RST_ID=batch_id``). One process, one lineage,
+``foreachBatch`` (per-batch count + a serving-store commit of the
+counts under ``RST_ID=batch_id``). One process, one lineage,
 checkpointed.
 
 Two count semantics (SURVEY §2.11), both supported:
@@ -16,13 +16,19 @@ Two count semantics (SURVEY §2.11), both supported:
   ``groupBy().count()`` in update mode; optionally watermarked so state
   is evicted at scale (the reference grows state forever).
 
-Scale: the only shuffle is the per-batch partial->final hash aggregation;
-source parallelism = Kafka partition count (vs the reference's single
-receiver, main.py:115). The sink commit brings each batch's counts to
-the driver in one Arrow collect and writes them with pyarrow under the
+Scale: source parallelism = Kafka partition count (vs the reference's
+single receiver, main.py:115). A micro-batch Spark sizes at no more than
+:data:`DRIVER_COUNT_MAX_BYTES` (64 MB) is counted on the driver
+(:func:`count_batch`): one
+Arrow collect of its key columns, one Spark job with no exchange, and a
+pyarrow group-by, so driver memory is O(events x key width) below that
+gate. A larger batch, or one whose source reports no size (Kafka, the
+``rate`` source), is counted by Spark's partial->final hash aggregation,
+the only shuffle.
+Either way the sink commit writes the counts with pyarrow under the
 batch's ``RST_ID`` partition (``ServingStore.append``), so a micro-batch
 runs no Spark write job; the counts are O(distinct keys per batch), and
-``spark.driver.maxResultSize`` bounds them.
+``spark.driver.maxResultSize`` bounds their collect.
 """
 
 from __future__ import annotations
@@ -32,8 +38,18 @@ import tempfile
 import uuid
 from typing import Callable
 
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
+from pyspark.sql.types import (
+    BooleanType,
+    ByteType,
+    IntegerType,
+    LongType,
+    ShortType,
+    StringType,
+)
 
 from ..functions.buckets import with_bucket
 from ..functions.projection import decode_json_values
@@ -100,9 +116,10 @@ def start_bucket_counter(
     """Per-batch count -> serving store append (reference K1 semantics).
 
     ``records`` is the output of :func:`parse_and_bucket`. Each micro-batch
-    is counted independently (groupBy inside foreachBatch) and appended
-    under its batch_id partition — K7/K8 tagged bulk insert, with the
-    store's clean_freq-driven retention.
+    is counted independently (:func:`count_batch` inside foreachBatch:
+    on the driver below the size gate, else a Spark groupBy) and
+    appended under its batch_id partition — K7/K8 tagged bulk insert,
+    with the store's clean_freq-driven retention.
 
     ``trigger`` defaults to the reference's cadence
     (``processingTime=bucket_interval+5 s``, main.py:111) when
@@ -112,8 +129,7 @@ def start_bucket_counter(
     keys = [*group_cols, "bucket_start", "bucket_end"]
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
-        counts = merged_count(batch_df, keys)
-        store.append(counts, batch_id)
+        store.append(count_batch(batch_df, keys), batch_id)
 
     writer = records.writeStream.foreachBatch(_process).option(
         "checkpointLocation", checkpoint_dir
@@ -121,6 +137,75 @@ def start_bucket_counter(
     if trigger is None and bucket_interval is not None:
         trigger = {"processingTime": f"{bucket_interval + 5} seconds"}
     return start_writer(writer, trigger)
+
+
+#: the largest batch, by Spark's size estimate of its plan, that
+#: :func:`count_batch` counts on the driver: the Arrow collect holds the
+#: batch's key columns in driver memory. 64 MB is the data Spark's
+#: adaptive execution gives one task by default.
+DRIVER_COUNT_MAX_BYTES = 64 << 20
+
+#: key types whose pyarrow group-by equality is Spark's grouping
+#: equality: binary-collated strings, integrals and booleans. Spark
+#: normalizes NaN and -0.0 in float keys before grouping, and collated
+#: strings group by their collation, so those and every other type are
+#: counted by Spark.
+_DRIVER_KEY_TYPES = (
+    StringType(), ByteType(), ShortType(), IntegerType(), LongType(),
+    BooleanType(),
+)
+
+
+def _fits_driver(batch_df: DataFrame, keys: list[str]) -> bool:
+    """True when ``batch_df`` may be counted on the driver: every key is
+    one of :data:`_DRIVER_KEY_TYPES` and Spark's size estimate of the
+    batch plan is at most :data:`DRIVER_COUNT_MAX_BYTES`. Inside
+    ``foreachBatch`` the plan is a ``LogicalRDD`` carrying the source's
+    statistics; a source that reports none (Kafka, ``rate``) gets
+    Spark's default estimate, far above the bound. The estimate is the
+    analyzed plan's, which needs no optimizer run (for a ``LogicalRDD``
+    the two plans are the same)."""
+    schema = batch_df.schema
+    if any(schema[k].dataType not in _DRIVER_KEY_TYPES for k in keys):
+        return False
+    size = batch_df._jdf.queryExecution().analyzed().stats().sizeInBytes()
+    return size <= DRIVER_COUNT_MAX_BYTES
+
+
+def count_batch(batch_df: DataFrame, keys: list[str]) -> DataFrame | pa.Table:
+    """Count one micro-batch per ``keys``: the rows and schema of
+    :func:`~..operators.count.merged_count`, for
+    :meth:`~.serving.ServingStore.append`.
+
+    A batch that passes :func:`_fits_driver` is counted on the driver:
+    one Arrow collect of the key columns (one Spark job, one stage, a
+    parallel scan, no exchange), then a pyarrow group-by, in
+    ``merged_count``'s schema (keys as Spark types them, ``count``
+    bigint NOT NULL). It returns that Arrow table. Any other batch
+    returns ``merged_count``'s lazy frame, which the store collects.
+
+    The group-by runs over each key's dictionary indices, with NULL
+    encoded as an index of its own, and takes the key values back from
+    the dictionaries: pyarrow 16's hash grouper splits groups of a
+    multi-column key that holds NULLs (one group counted as several).
+    """
+    if not _fits_driver(batch_df, keys):
+        return merged_count(batch_df, keys)
+    table = batch_df.select(*keys).toArrow()
+    schema = pa.schema([
+        *(table.schema.field(k) for k in keys),
+        pa.field("count", pa.int64(), nullable=False),
+    ])
+    codes = [
+        pc.dictionary_encode(table[k].combine_chunks(), null_encoding="encode")
+        for k in keys
+    ]
+    index = pa.table({str(i): c.indices for i, c in enumerate(codes)})
+    groups = index.group_by(index.column_names).aggregate([([], "count_all")])
+    return pa.table([
+        *(c.dictionary.take(groups[str(i)]) for i, c in enumerate(codes)),
+        groups["count_all"],
+    ], schema=schema)
 
 
 DRAIN_TIMEOUT_S = 300

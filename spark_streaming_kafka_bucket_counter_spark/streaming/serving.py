@@ -10,12 +10,14 @@ HTTP (models.py:155-187).
 Spark-first redesign:
 - storage is a parquet directory **partitioned by rst_id**; one streaming
   micro-batch appends exactly one partition directory, committed from
-  the driver: one Arrow collect of the batch, then one pyarrow file per
-  non-empty Spark partition carrying Spark's footer keys, so the files
-  are indistinguishable to every reader from a Spark write — but no
-  Spark write job (and none of Hadoop's per-write ``chmod`` spawns)
-  runs per batch. Appends are file-level (no read-modify-write) and
-  queries prune partitions on ``rst_id`` predicates.
+  the driver: the counts arrive as an Arrow table the pipeline already
+  computed on the driver (one file), or as a DataFrame brought over in
+  one Arrow collect (one pyarrow file per non-empty Spark partition).
+  Every file carries Spark's footer keys, so the files are
+  indistinguishable to every reader from a Spark write — but no Spark
+  write job (and none of Hadoop's per-write ``chmod`` spawns) runs per
+  batch. Appends are file-level (no read-modify-write) and queries
+  prune partitions on ``rst_id`` predicates.
 - scale: a batch's counts are O(distinct keys in the batch), so the
   driver commit holds far past the service's input rates; its bound is
   driver memory (``spark.driver.maxResultSize`` caps the collect).
@@ -55,8 +57,10 @@ import time
 import uuid
 from pathlib import Path
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
 from pyspark.sql.types import StructType
 
 RST_COL = "RST_ID"
@@ -70,6 +74,21 @@ _SPARK_ROW_METADATA = "org.apache.spark.sql.parquet.row.metadata"
 _SPARK_VERSION_METADATA = "org.apache.spark.version"
 
 _log = logging.getLogger(__name__)
+
+
+def _spark_partitions(table: pa.Table) -> list[pa.Table]:
+    """Split a collect tagged with :data:`_PID_COL` into one table per
+    non-empty Spark partition, dropping the tag."""
+    import numpy as np
+
+    n = table.num_rows
+    if n == 0:
+        return []
+    # toArrow returns partitions in order, so each partition is one run
+    pids = table.column(_PID_COL).to_numpy()
+    table = table.drop_columns([_PID_COL])
+    starts = [0, *(np.flatnonzero(pids[1:] != pids[:-1]) + 1).tolist()]
+    return [table.slice(lo, hi - lo) for lo, hi in zip(starts, [*starts[1:], n])]
 
 
 class CommandRejected(ValueError):
@@ -253,21 +272,27 @@ class ServingStore:
         return latest_manifest(self.path)
 
     # -- K7/K8: tagged (bulk) insert ------------------------------------
-    def append(self, df: DataFrame, batch_id: int) -> None:
+    def append(self, counts: DataFrame | pa.Table, batch_id: int) -> None:
         """Append one micro-batch under partition ``RST_ID=batch_id``.
 
-        The batch reaches the driver in ONE Arrow collect, taken before
-        the maintainer lease, tagged with each row's Spark partition id.
-        Inside a manifest transaction whose replace scope is this
-        batch's partition, pyarrow then writes one snappy parquet file
-        per non-empty Spark partition (the layout Spark's writer gives),
-        each staged under a hidden ``_commitstage_`` directory and
-        renamed into the leaf, with Spark's footer keys so every reader
-        sees the schema a Spark-written file gives. No Spark write job
-        runs: on a local filesystem without the native Hadoop library
-        each Spark write spawns ``chmod`` subprocesses, the largest
-        per-batch cost of a small batch. ``RST_ID`` lives in the
-        directory name only, as with a partitioned Spark write.
+        ``counts`` is a DataFrame or an Arrow table already on the
+        driver (the pipeline's driver-side count,
+        :func:`~.pipeline.count_batch`). A DataFrame reaches the driver
+        in ONE Arrow collect, taken before the maintainer lease, tagged
+        with each row's Spark partition id, and is written as one file
+        per non-empty Spark partition (the layout Spark's writer
+        gives); an Arrow table is written as one file, with the Spark
+        schema :func:`~pyspark.sql.pandas.types.from_arrow_schema`
+        derives from its Arrow schema (no JVM call). Inside a manifest
+        transaction whose replace scope is this batch's partition,
+        pyarrow writes each snappy parquet file staged under a hidden
+        ``_commitstage_`` directory and renamed into the leaf, with
+        Spark's footer keys so every reader sees the schema a
+        Spark-written file gives. No Spark write job runs: on a local
+        filesystem without the native Hadoop library each Spark write
+        spawns ``chmod`` subprocesses, the largest per-batch cost of a
+        small batch. ``RST_ID`` lives in the directory name only, as
+        with a partitioned Spark write.
 
         A checkpoint-rollback REPLAY retires the prior attempt's files
         at manifest level and publishes its own — exactly-once serving
@@ -279,23 +304,30 @@ class ServingStore:
         column type Arrow cannot convert raises. The batch must fit in
         driver memory (``spark.driver.maxResultSize`` bounds the
         collect). Logs one INFO record per commit on this module's
-        logger: ``batch_id``, ``rows``, ``files``, ``collect_ms``,
-        ``write_ms``, ``publish_ms``.
+        logger: ``batch_id``, ``rows``, ``files``, ``collect_ms`` (~0
+        for an Arrow table), ``write_ms``, ``publish_ms``.
         """
         from ..sources.manifest import manifest_txn
 
         b = int(batch_id)
         t0 = time.perf_counter()
-        table = df.withColumn(_PID_COL, F.spark_partition_id()).toArrow()
+        if isinstance(counts, DataFrame):
+            schema = counts.schema
+            parts = _spark_partitions(
+                counts.withColumn(_PID_COL, F.spark_partition_id()).toArrow()
+            )
+        else:
+            schema = from_arrow_schema(counts.schema)
+            parts = [counts] if counts.num_rows else []
         t1 = time.perf_counter()
         leaf = f"{RST_COL}={b}"
         with manifest_txn(self.path, replace_prefixes=[leaf]):
             t2 = time.perf_counter()
-            files = self._write_leaf(table, df.schema, leaf)
+            files = self._write_leaf(parts, schema, leaf)
             t3 = time.perf_counter()
         t4 = time.perf_counter()
         rec = {
-            "batch_id": b, "rows": table.num_rows, "files": files,
+            "batch_id": b, "rows": sum(p.num_rows for p in parts), "files": files,
             "collect_ms": round((t1 - t0) * 1e3, 1),
             "write_ms": round((t3 - t2) * 1e3, 1),
             "publish_ms": round((t4 - t1 - (t3 - t2)) * 1e3, 1),
@@ -306,36 +338,33 @@ class ServingStore:
             self.clean()
             self._batches_since_clean = 0
 
-    def _write_leaf(self, table, schema: StructType, leaf: str) -> int:
-        """Write ``table`` (collected with its :data:`_PID_COL` tag) into
-        ``leaf`` as one parquet file per Spark partition; returns the
-        number of files. Each file is written whole under a hidden
+    def _write_leaf(self, parts: list[pa.Table], schema: StructType, leaf: str) -> int:
+        """Write each table of ``parts`` into ``leaf`` as one parquet
+        file carrying ``schema`` in Spark's footer keys; returns
+        the number of files. Each file is written whole under a hidden
         staging directory and then renamed into the leaf, so the leaf
         never holds a partial file — unmanaged-tree adoption would
         publish one as live."""
-        import numpy as np
         import pyarrow.parquet as pq
 
         from ..sources.manifest import COMMIT_STAGE_PREFIX
 
-        n = table.num_rows
-        if n == 0:
+        if not parts:
             return 0
-        # toArrow returns partitions in order, so each partition is one run
-        pids = table.column(_PID_COL).to_numpy()
-        table = table.drop_columns([_PID_COL]).replace_schema_metadata({
+        footer = {
             _SPARK_ROW_METADATA: schema.json(),
             _SPARK_VERSION_METADATA: self.spark.version,
-        })
-        starts = [0, *(np.flatnonzero(pids[1:] != pids[:-1]) + 1).tolist()]
+        }
         job = uuid.uuid4()
         stage = self.path / f"{COMMIT_STAGE_PREFIX}{job.hex[:8]}"
         stage.mkdir()
         names = []
-        for i, (start, end) in enumerate(zip(starts, [*starts[1:], n])):
+        for i, part in enumerate(parts):
             name = f"part-{i:05d}-{job}.c000.snappy.parquet"
-            pq.write_table(table.slice(start, end - start), stage / name,
-                           compression="snappy", store_schema=False)
+            # pyarrow writes schema metadata as footer keys only together
+            # with its own ARROW:schema key, which Spark ignores
+            pq.write_table(part.replace_schema_metadata(footer), stage / name,
+                           compression="snappy")
             names.append(name)
         (self.path / leaf).mkdir(exist_ok=True)
         for name in names:

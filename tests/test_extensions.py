@@ -800,9 +800,12 @@ def test_png_batch_decode_throughput_pinned():
     round-5 per-byte kernel was flagged as the one design-level perf
     weak; this pins the fix so it can't regress). Corpus: cycle-filtered
     images — every unfilter branch runs — at the catalog thumbnail shape
-    (9x8 RGB, the phash input) and a tile shape (48x48 RGBA). Best-of-3
-    timing on both sides to shrug off CI noise; the measured margin is
-    ~2x the asserted bar."""
+    (9x8 RGB, the phash input) and a tile shape (48x48 RGBA). Both sides
+    are timed in this thread's CPU time, interleaved, best of 5: time
+    spent preempted, and CPU used by the process's other threads (a
+    whole-process clock read 5.0x once in a full suite run), counts on
+    neither side. Both decoders run on the calling thread; the measured
+    margin is ~1.3x the asserted bar."""
     import random
     import time
 
@@ -816,12 +819,12 @@ def test_png_batch_decode_throughput_pinned():
     ]
     M.decode_png_pixels_batch(corpus)  # warm numpy/zlib
     best_scalar = best_batch = float("inf")
-    for _ in range(3):
-        t0 = time.perf_counter()
+    for _ in range(5):
+        t0 = time.thread_time()
         scalar = [M.decode_png_pixels(p) for p in corpus]
-        t1 = time.perf_counter()
+        t1 = time.thread_time()
         batch = M.decode_png_pixels_batch(corpus)
-        t2 = time.perf_counter()
+        t2 = time.thread_time()
         assert scalar == batch  # identical bytes, every payload
         best_scalar = min(best_scalar, t1 - t0)
         best_batch = min(best_batch, t2 - t1)

@@ -206,3 +206,43 @@ def test_streaming_and_sources_have_no_unserved_entry_points():
         if mod.startswith((f"{pkg}.streaming.", f"{pkg}.sources."))
     ]
     assert left == []
+
+
+_IMPORT_EACH = """
+import importlib, pkgutil, sys
+import {pkg} as pkg
+
+names = [m.name for m in pkgutil.walk_packages(pkg.__path__, pkg.__name__ + ".")
+         if not m.name.endswith(".__main__")]
+failed = []
+for name in names:
+    for mod in [m for m in sys.modules if m.split(".")[0] == pkg.__name__]:
+        del sys.modules[mod]
+    try:
+        importlib.import_module(name)
+    except Exception as e:
+        failed.append(f"{{name}}: {{type(e).__name__}}: {{e}}")
+print(len(names))
+print("\\n".join(failed))
+"""
+
+
+def test_every_module_imports_on_its_own():
+    """Spark-free: each package module (``__main__`` aside) imports with
+    no other package module loaded before it, in ``pkgutil.walk_packages``
+    order, so no import cycle depends on which module a caller names
+    first. One subprocess; the package's modules are dropped from
+    ``sys.modules`` before each import."""
+    import subprocess
+    import sys
+
+    root = PLANS_DIR.parents[1]
+    out = subprocess.run(
+        [sys.executable, "-c", _IMPORT_EACH.format(pkg=PLANS_DIR.parent.name)],
+        cwd=root, capture_output=True, text=True, timeout=60,
+        env={**os.environ, "PYTHONPATH": str(root)},
+    )
+    assert out.returncode == 0, out.stderr[-3000:]
+    count, *failed = out.stdout.splitlines()
+    assert int(count) > 40
+    assert [f for f in failed if f] == []

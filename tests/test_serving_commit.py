@@ -3,7 +3,10 @@ collects each batch with one Arrow collect and writes its parquet files
 with pyarrow. These tests pin that the files are indistinguishable from
 Spark-written ones to every reader (schema, zone maps, mixed stores),
 that the layout and replay contract are those of a partitioned Spark
-write, and that staging debris is swept by GC."""
+write, and that staging debris is swept by GC. The pipeline's
+driver-side count (``pipeline.count_batch``) must commit exactly what
+``merged_count`` commits, in one Spark job with no shuffle, and must
+leave Spark's count in place above its size gate and for float keys."""
 
 from __future__ import annotations
 
@@ -12,7 +15,10 @@ import decimal
 import logging
 import os
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
@@ -28,6 +34,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from spark_streaming_kafka_bucket_counter_spark.operators.count import merged_count
 from spark_streaming_kafka_bucket_counter_spark.sources.files import footer_schema
 from spark_streaming_kafka_bucket_counter_spark.sources.manifest import (
     COMMIT_STAGE_PREFIX,
@@ -35,6 +42,12 @@ from spark_streaming_kafka_bucket_counter_spark.sources.manifest import (
     gc_index_tree,
     latest_manifest,
     manifest_txn,
+)
+from spark_streaming_kafka_bucket_counter_spark.streaming import pipeline
+from spark_streaming_kafka_bucket_counter_spark.streaming.pipeline import (
+    count_batch,
+    parse_and_bucket,
+    start_bucket_counter,
 )
 from spark_streaming_kafka_bucket_counter_spark.streaming.serving import (
     RST_COL,
@@ -214,3 +227,141 @@ def test_gc_sweeps_aged_commit_staging(spark, tmp_path):
     gc_index_tree(store.path, grace_sec=0)
     assert not stage.exists()
     assert store.view().count() == 5
+
+
+# -- the pipeline's driver-side count -----------------------------------
+_KEYS = ["etype", "uid", "flag", "bucket_start", "bucket_end"]
+
+
+def _batch(spark, tmp_path, name: str, rows: list[tuple]):
+    """A parquet-backed batch (the shape a file source hands
+    ``foreachBatch``) with nullable string, int, boolean and bigint
+    keys."""
+    path = tmp_path / f"{name}.parquet"
+    cols = list(zip(*rows)) if rows else [[]] * 5
+    pq.write_table(pa.table({
+        "etype": pa.array(cols[0], pa.string()),
+        "uid": pa.array(cols[1], pa.int32()),
+        "flag": pa.array(cols[2], pa.bool_()),
+        "bucket_start": pa.array(cols[3], pa.int64()),
+        "bucket_end": pa.array(cols[4], pa.int64()),
+    }), path)
+    return spark.read.parquet(str(path))
+
+
+def _events(n: int, lo: int = 0) -> list[tuple]:
+    return [
+        (
+            (None, "click", "view")[i % 3],
+            None if i % 5 == 0 else i % 4,
+            None if i % 7 == 0 else i % 2 == 0,
+            lo + 20 * (i % 3) if i % 11 else None,
+            lo + 20 * (i % 3) + 20,
+        )
+        for i in range(n)
+    ]
+
+
+def _row_metadata(store: ServingStore) -> set[bytes]:
+    return {
+        pq.read_metadata(store.path / f).metadata[
+            b"org.apache.spark.sql.parquet.row.metadata"
+        ]
+        for f in latest_manifest(store.path)["files"]
+    }
+
+
+@pytest.mark.parametrize("case", ["null_keys", "empty_batch", "replay"])
+def test_driver_count_commits_what_merged_count_commits(spark, tmp_path, case):
+    batches = {
+        "null_keys": [(_events(300), 0)],
+        "empty_batch": [(_events(40), 0), ([], 1)],
+        "replay": [(_events(60), 0), (_events(90, lo=1000), 0)],
+    }[case]
+    driver = ServingStore(spark, str(tmp_path / "driver"), clean_freq=0)
+    spark_count = ServingStore(spark, str(tmp_path / "spark"), clean_freq=0)
+    for i, (rows, b) in enumerate(batches):
+        df = _batch(spark, tmp_path, f"b{i}", rows)
+        counts = count_batch(df, _KEYS)
+        assert isinstance(counts, pa.Table)
+        driver.append(counts, b)
+        spark_count.append(merged_count(df, _KEYS), b)
+    want, got = spark_count.view(), driver.view()
+    assert got.schema == want.schema
+    assert sorted(map(str, got.collect())) == sorted(map(str, want.collect()))
+    footers = _row_metadata(driver)
+    assert footers == _row_metadata(spark_count)
+    assert footers == {merged_count(df, _KEYS).schema.json().encode()}
+    for store in (driver, spark_count):
+        m = latest_manifest(store.path)
+        assert store._ids_of(m) == [0]
+        assert m["generation"] == len(batches)
+        assert not (store.path / f"{RST_COL}=1").exists()
+    if case == "replay":
+        assert sum(r["count"] for r in got.collect()) == 90
+
+
+def test_small_batch_commit_runs_one_job_and_no_shuffle(spark, tmp_path):
+    df = _batch(spark, tmp_path, "b", _events(500))
+    store = ServingStore(spark, str(tmp_path / "store"), clean_freq=0)
+    sc = spark.sparkContext
+    group = "driver-count-probe"
+    sc.setJobGroup(group, group)
+    try:
+        store.append(count_batch(df, _KEYS), 0)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert len(jobs) == 1
+    assert len(sc.statusTracker().getJobInfo(jobs[0]).stageIds) == 1
+    assert _leaf_files(store, 0) and len(_leaf_files(store, 0)) == 1
+
+
+def test_spark_counts_above_the_size_gate_and_for_float_keys(
+    spark, tmp_path, monkeypatch
+):
+    df = _batch(spark, tmp_path, "b", _events(50))
+    monkeypatch.setattr(pipeline, "DRIVER_COUNT_MAX_BYTES", 1)
+    big = count_batch(df, _KEYS)
+    monkeypatch.undo()
+    assert not isinstance(big, pa.Table)
+    floats = df.withColumn("uid", F.col("uid").cast("double"))
+    assert not isinstance(count_batch(floats, _KEYS), pa.Table)
+    assert sorted(map(str, big.collect())) == sorted(
+        map(str, merged_count(df, _KEYS).collect())
+    )
+
+
+def test_source_without_statistics_keeps_the_spark_count(spark, tmp_path):
+    """Kafka reports no size for a micro-batch; neither does the
+    ``rate-micro-batch`` source, so Spark's default estimate sends
+    every batch the pipeline commits to ``merged_count``."""
+    rate = (
+        spark.readStream.format("rate-micro-batch")
+        .option("rowsPerBatch", 200).load()
+    )
+    events = rate.select(F.to_json(F.struct(
+        F.when(F.col("value") % 2 == 0, "click").otherwise("view")
+        .alias("event_type"),
+        (F.col("value") % 7).alias("user_id"),
+        (F.col("value") % 60 + 1_700_000_000).alias("epoch_ts"),
+    )).alias("value"))
+    records = parse_and_bucket(
+        events, {"etype": "event_type", "uid": "user_id"}, "epoch_ts", 20
+    )
+    store = ServingStore(spark, str(tmp_path / "store"), clean_freq=0)
+    seen = []
+    append = store.append
+
+    def traced(counts, batch_id):
+        seen.append(isinstance(counts, DataFrame))
+        return append(counts, batch_id)
+
+    store.append = traced
+    q = start_bucket_counter(
+        records, store, ["etype", "uid"], str(tmp_path / "ckpt")
+    )
+    assert q.awaitTermination(120)
+    assert seen and all(seen)
+    assert sum(r["count"] for r in store.view().collect()) == 200
