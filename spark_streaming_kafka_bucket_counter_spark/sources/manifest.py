@@ -2,7 +2,7 @@
 
 Why this exists: Spark plans a parquet read by LISTING the directory
 tree, then executes against the listed file paths. Any maintenance that
-deletes or renames a listed file between those two moments — compaction
+deletes or renames a listed file between those two moments — row-rewrite
 swaps, partition-overwrite replays — surfaces to a concurrent reader as
 ``FAILED_READ_FILE.FILE_NOT_EXIST`` (the r7 soak measured 6–31 such
 transients per reader thread on the LSH/IVF/BM25 indexes, while the
@@ -19,19 +19,19 @@ The manifest inverts the contract — the same shape the table formats
 * readers resolve the LATEST snapshot once and plan directly over those
   explicit file paths (``basePath`` preserves the partition columns, so
   ``tb``/``band``/``cid`` pruning is unchanged);
-* a logical overwrite (segment replay, compaction) RETIRES the
+* a logical overwrite (segment replay, row rewrite) RETIRES the
   displaced files in the manifest instead of deleting them; GC removes
   retired files only after a grace window, so a reader pinned to any
   recent snapshot never observes a missing file — no reader-side retry,
   no coordination;
 * files never published (a write that crashed before its commit, a
-  compaction that crashed before its publish) are ORPHANS: invisible to
+  row rewrite that crashed before its publish) are ORPHANS: invisible to
   readers, never adopted into a snapshot — scan-diff adoption would
   silently double additive stats like BM25 tf/df/N — and deleted by GC
   once older than the grace window. Replay regenerates their content.
 
 Single-MAINTAINER contract: one
-writer/compactor at a time per index root — the serving store's
+writer at a time per index root — the serving store's
 ``foreachBatch`` commit serializes its own maintenance. Readers need
 nothing.
 Round 9 makes the contract ENFORCED, not just documented: every
@@ -51,15 +51,15 @@ applies once a manifest exists — then unpublished files really are
 crash debris.
 
 Round 9 also moved the SERVING STORE onto this substrate
-(streaming/serving.py) — appends, compaction, predicate deletes, and
+(streaming/serving.py) — appends, predicate deletes, row forgets and
 retention cleans all publish snapshots, so store readers gained the
 same 0-transient contract.
 
 Scale notes: a publish costs O(live files) — one JSON dump plus one
 tree scan — and readers pay one JSON parse. That holds comfortably to
 ~10^5 files (a few MB of manifest); the indexes here stay far under it
-because compaction bounds files-per-leaf and segment count equals
-batch count by contract. Past that, the standard next step is the
+because segment count equals batch count by contract, and the serving
+store writes one file per batch. Past that, the standard next step is the
 Iceberg shape (a manifest LIST pointing at per-subtree manifest
 files), which this layout can grow into without changing the reader
 contract — snapshot resolution stays one fetch of the newest
@@ -75,7 +75,7 @@ import threading
 import time
 import uuid
 from pathlib import Path
-from typing import Collection, Iterator, Sequence
+from typing import Iterator, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -101,8 +101,8 @@ class ConcurrentMaintainerError(RuntimeError):
     The single-maintainer contract is load-bearing: two concurrent
     publishers would race generation numbers and one's snapshot (and
     the files only it references) would silently vanish. Raising here
-    turns an operator mistake (compaction run beside a live ingest
-    loop) into a loud, retryable failure instead of corruption."""
+    turns an operator mistake (a maintenance pass run beside a live
+    ingest loop) into a loud, retryable failure instead of corruption."""
 
 
 def _lease_path(root: str | Path) -> Path:
@@ -184,7 +184,7 @@ def _maintainer_lease(root: str | Path,
                 continue
             raise ConcurrentMaintainerError(
                 f"index {root} is being mutated by another maintainer "
-                f"(lease {lease}); one writer/compactor at a time"
+                f"(lease {lease}); one writer at a time"
             )
     else:
         raise ConcurrentMaintainerError(
@@ -580,7 +580,7 @@ class ManifestTxnHandle:
         of the published snapshot, which won't exist until commit.
 
         A scoped call walks ONLY that subtree: callers that iterate
-        leaves (compaction, the BM25 segment merge) would
+        leaves (the BM25 segment merge) would
         otherwise pay O(leaves x whole-tree walk) in stat calls — the
         dominant cost of a metadata-cheap maintenance pass on remote
         filesystems (r9 review catch)."""
@@ -883,7 +883,7 @@ def _gc(rootp: Path, grace_sec: float) -> int:
                 d.rmdir()  # fails (kept) unless truly empty
             except OSError:
                 pass
-    # staging debris from a compaction or a driver-side commit that
+    # staging debris from a row rewrite or a driver-side commit that
     # crashed before its publish (hidden from readers and scans; safe to
     # sweep once aged)
     import shutil
@@ -910,71 +910,3 @@ def _gc(rootp: Path, grace_sec: float) -> int:
         except OSError:
             pass
     return len(drop)
-
-
-def compact_index_tree(spark: SparkSession, root: str | Path,
-                       target_files: int = 1, grace_sec: float = 300.0,
-                       leaves: Collection[str] | None = None) -> int:
-    """Small-files maintenance for a manifest-managed index: rewrite
-    every leaf holding more than ``target_files`` live data files down
-    to ``target_files``, publish the snapshot that swaps them in, then
-    GC. ``leaves`` (relative leaf directories, e.g. ``"RST_ID=3"``)
-    restricts the rewrite to that subset — the serving store compacts
-    only its frozen batches; None rewrites every leaf. Readers never
-    coordinate: until the new snapshot lands they plan over the old
-    files (which stay on disk through the grace window); after it,
-    over the compacted ones. A crash at any point
-    leaves either the old snapshot fully intact (moved-but-unpublished
-    files are orphans GC removes) or the new one. File contents merge
-    verbatim — partition values live in directory names — so query
-    results are bit-identical (pytest-pinned). Returns leaves rewritten.
-    """
-    rootp = Path(root)
-    with _maintainer_lease(rootp):
-        m = latest_manifest(rootp)
-        if m is None:
-            # adopt an unmanaged tree: first snapshot = what a directory
-            # reader sees today
-            m = _commit(rootp, scan_parquet_files(rootp))
-        retired = dict(m["retired"])
-        by_leaf: dict[str, list[str]] = {}
-        for f in m["files"]:
-            by_leaf.setdefault(os.path.dirname(f), []).append(f)
-
-        rewritten = 0
-        displaced: set[str] = set()
-        added: list[str] = []
-        now = time.time()
-        for leaf, leaf_files in sorted(by_leaf.items()):
-            if len(leaf_files) <= target_files:
-                continue
-            if leaves is not None and leaf not in leaves:
-                continue
-            df = spark.read.parquet(*[str(rootp / f) for f in leaf_files])
-            staged = rootp / f"{COMPACT_STAGE_PREFIX}{uuid.uuid4().hex[:8]}"
-            df.coalesce(target_files).write.mode("overwrite").parquet(str(staged))
-            leaf_dir = rootp / leaf if leaf else rootp
-            for pf in sorted(staged.glob("*.parquet")):
-                dest = leaf_dir / pf.name  # part-...-<uuid> names never collide
-                crc = staged / f".{pf.name}.crc"
-                if crc.exists():
-                    os.replace(crc, leaf_dir / crc.name)
-                os.replace(pf, dest)
-                added.append(f"{leaf}/{pf.name}" if leaf else pf.name)
-            import shutil
-
-            shutil.rmtree(staged, ignore_errors=True)
-            displaced.update(leaf_files)
-            retired.update((f, now) for f in leaf_files)
-            rewritten += 1
-
-        if rewritten:
-            files = [f for f in m["files"] if f not in displaced] + added
-            # zone maps: keep every surviving file's stats, harvest the
-            # freshly merged replacements (O(rewritten files) footer reads)
-            stats = dict(m.get("stats", {}))
-            stats.update(_harvest_stats(rootp, sorted(added)))
-            _publish(rootp, files, retired, m["generation"] + 1,
-                     meta=m.get("meta"), stats=stats)
-        _gc(rootp, grace_sec)
-        return rewritten

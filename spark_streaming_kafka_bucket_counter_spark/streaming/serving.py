@@ -9,20 +9,21 @@ HTTP (models.py:155-187).
 
 Spark-first redesign:
 - storage is a parquet directory **partitioned by rst_id**; one streaming
-  micro-batch appends exactly one partition directory, committed from
-  the driver: the counts arrive as an Arrow table the pipeline already
-  computed on the driver (one file), or as a DataFrame brought over in
-  one Arrow collect (one pyarrow file per non-empty Spark partition).
-  Every file carries Spark's footer keys, so the files are
-  indistinguishable to every reader from a Spark write — but no Spark
-  write job (and none of Hadoop's per-write ``chmod`` spawns) runs per
-  batch. Appends are file-level (no read-modify-write) and queries
-  prune partitions on ``rst_id`` predicates.
+  micro-batch appends exactly one partition directory holding one
+  parquet file, committed from the driver: the counts arrive as an
+  Arrow table the pipeline already computed on the driver, or as a
+  DataFrame brought over in one Arrow collect. The file carries
+  Spark's footer keys, so it is indistinguishable to every reader from
+  a Spark write — but no Spark write job (and none of Hadoop's
+  per-write ``chmod`` spawns) runs per batch. Appends are file-level
+  (no read-modify-write) and queries prune partitions on ``rst_id``
+  predicates.
 - scale: a batch's counts are O(distinct keys in the batch), so the
   driver commit holds far past the service's input rates; its bound is
   driver memory (``spark.driver.maxResultSize`` caps the collect).
-  Maintenance (``compact``, ``delete``, ``forget``) rewrites through
-  Spark writes on the executors.
+  Maintenance (``delete``, ``forget``) rewrites through Spark writes
+  on the executors, one file per rewritten partition, so every leaf
+  of the store holds one live file and there is nothing to compact.
 - ``RST_ID`` ≙ the ``batch_id`` Structured Streaming hands to
   ``foreachBatch`` — monotone and checkpoint-recovered, reproducing the
   reference's ``MAX(RST_ID)+1`` crash-recovery init (models.py:526-536)
@@ -31,9 +32,8 @@ Spark-first redesign:
   O(#batches), not O(#rows), vs the reference's row-scan DELETE.
 - the manifest is the store's only truth: every mutation publishes a
   snapshot and every read resolves one, so a store without a manifest
-  is empty. Compaction is the index trees' ``compact_index_tree`` over
-  the frozen partitions. Stores written before round 9 upgrade once
-  through ``tools/migrate_store.py``; the store refuses to open them.
+  is empty. Stores written before round 9 upgrade once through
+  ``tools/migrate_store.py``; the store refuses to open them.
 - idempotence: re-running a batch after crash REPLACES its own
   partition at manifest level (scoped snapshot commit, the same
   substrate as the LSH/IVF/BM25 indexes), giving effectively-once
@@ -64,9 +64,6 @@ from pyspark.sql.pandas.types import from_arrow_schema
 from pyspark.sql.types import StructType
 
 RST_COL = "RST_ID"
-#: reserved column carrying each row's Spark partition id through the
-#: driver collect in :meth:`ServingStore.append`; never written
-_PID_COL = "__ssbc_spark_partition_id__"
 #: footer keys Spark's parquet writer sets (``ParquetWriteSupport``):
 #: readers take the Spark schema from the first, so driver-written and
 #: Spark-written files infer and merge to the same schema
@@ -74,21 +71,6 @@ _SPARK_ROW_METADATA = "org.apache.spark.sql.parquet.row.metadata"
 _SPARK_VERSION_METADATA = "org.apache.spark.version"
 
 _log = logging.getLogger(__name__)
-
-
-def _spark_partitions(table: pa.Table) -> list[pa.Table]:
-    """Split a collect tagged with :data:`_PID_COL` into one table per
-    non-empty Spark partition, dropping the tag."""
-    import numpy as np
-
-    n = table.num_rows
-    if n == 0:
-        return []
-    # toArrow returns partitions in order, so each partition is one run
-    pids = table.column(_PID_COL).to_numpy()
-    table = table.drop_columns([_PID_COL])
-    starts = [0, *(np.flatnonzero(pids[1:] != pids[:-1]) + 1).tolist()]
-    return [table.slice(lo, hi - lo) for lo, hi in zip(starts, [*starts[1:], n])]
 
 
 class CommandRejected(ValueError):
@@ -212,12 +194,11 @@ class ServingStore:
     during the very first commit leaves such a leaf; the replayed
     batch's commit retires it).
 
-    Every mutation (append / compact / delete / clean / forget) runs
-    inside a :func:`~..sources.manifest.manifest_txn` (compaction inside
-    :func:`~..sources.manifest.compact_index_tree`) and publishes the
-    next snapshot; reads resolve ONE snapshot and plan over its
-    explicit file list, so a concurrent replace, compaction, or
-    retention clean can never yank a planned file. Displaced and
+    Every mutation (append / delete / clean / forget) runs inside a
+    :func:`~..sources.manifest.manifest_txn` and publishes the next
+    snapshot; reads resolve ONE snapshot and plan over its explicit
+    file list, so a concurrent replace, delete, or retention clean can
+    never yank a planned file. Displaced and
     dropped files RETIRE and are GC'd after ``gc_grace_sec``;
     generation time travel (:meth:`snapshot` + :meth:`view_at`) and
     row-level right-to-be-forgotten (:meth:`forget`) come with the
@@ -278,17 +259,18 @@ class ServingStore:
         ``counts`` is a DataFrame or an Arrow table already on the
         driver (the pipeline's driver-side count,
         :func:`~.pipeline.count_batch`). A DataFrame reaches the driver
-        in ONE Arrow collect, taken before the maintainer lease, tagged
-        with each row's Spark partition id, and is written as one file
-        per non-empty Spark partition (the layout Spark's writer
-        gives); an Arrow table is written as one file, with the Spark
-        schema :func:`~pyspark.sql.pandas.types.from_arrow_schema`
-        derives from its Arrow schema (no JVM call). Inside a manifest
-        transaction whose replace scope is this batch's partition,
-        pyarrow writes each snappy parquet file staged under a hidden
-        ``_commitstage_`` directory and renamed into the leaf, with
-        Spark's footer keys so every reader sees the schema a
-        Spark-written file gives. No Spark write job runs: on a local
+        in ONE Arrow collect, taken before the maintainer lease, and
+        keeps its own Spark schema (a schema derived from the collect
+        would read ``TimestampNTZType`` as ``TimestampType`` and a
+        collated string as ``StringType()``); an Arrow table takes the
+        Spark schema :func:`~pyspark.sql.pandas.types.from_arrow_schema`
+        derives from its Arrow schema (no JVM call). Either way the
+        batch is ONE file: inside a manifest transaction whose replace
+        scope is this batch's partition, pyarrow writes one snappy
+        parquet file staged under a hidden ``_commitstage_`` directory
+        and renamed into the leaf, with Spark's footer keys so every
+        reader sees the schema a Spark-written file gives. No Spark
+        write job runs: on a local
         filesystem without the native Hadoop library each Spark write
         spawns ``chmod`` subprocesses, the largest per-batch cost of a
         small batch. ``RST_ID`` lives in the directory name only, as
@@ -312,22 +294,18 @@ class ServingStore:
         b = int(batch_id)
         t0 = time.perf_counter()
         if isinstance(counts, DataFrame):
-            schema = counts.schema
-            parts = _spark_partitions(
-                counts.withColumn(_PID_COL, F.spark_partition_id()).toArrow()
-            )
+            schema, table = counts.schema, counts.toArrow()
         else:
-            schema = from_arrow_schema(counts.schema)
-            parts = [counts] if counts.num_rows else []
+            schema, table = from_arrow_schema(counts.schema), counts
         t1 = time.perf_counter()
         leaf = f"{RST_COL}={b}"
         with manifest_txn(self.path, replace_prefixes=[leaf]):
             t2 = time.perf_counter()
-            files = self._write_leaf(parts, schema, leaf)
+            files = self._write_leaf(table, schema, leaf)
             t3 = time.perf_counter()
         t4 = time.perf_counter()
         rec = {
-            "batch_id": b, "rows": sum(p.num_rows for p in parts), "files": files,
+            "batch_id": b, "rows": table.num_rows, "files": files,
             "collect_ms": round((t1 - t0) * 1e3, 1),
             "write_ms": round((t3 - t2) * 1e3, 1),
             "publish_ms": round((t4 - t1 - (t3 - t2)) * 1e3, 1),
@@ -338,18 +316,18 @@ class ServingStore:
             self.clean()
             self._batches_since_clean = 0
 
-    def _write_leaf(self, parts: list[pa.Table], schema: StructType, leaf: str) -> int:
-        """Write each table of ``parts`` into ``leaf`` as one parquet
-        file carrying ``schema`` in Spark's footer keys; returns
-        the number of files. Each file is written whole under a hidden
-        staging directory and then renamed into the leaf, so the leaf
-        never holds a partial file — unmanaged-tree adoption would
-        publish one as live."""
+    def _write_leaf(self, table: pa.Table, schema: StructType, leaf: str) -> int:
+        """Write ``table`` into ``leaf`` as one parquet file carrying
+        ``schema`` in Spark's footer keys; returns the number of files
+        (0 for an empty table, which writes nothing). The file is
+        written whole under a hidden staging directory and then renamed
+        into the leaf, so the leaf never holds a partial file —
+        unmanaged-tree adoption would publish one as live."""
         import pyarrow.parquet as pq
 
         from ..sources.manifest import COMMIT_STAGE_PREFIX
 
-        if not parts:
+        if not table.num_rows:
             return 0
         footer = {
             _SPARK_ROW_METADATA: schema.json(),
@@ -358,19 +336,15 @@ class ServingStore:
         job = uuid.uuid4()
         stage = self.path / f"{COMMIT_STAGE_PREFIX}{job.hex[:8]}"
         stage.mkdir()
-        names = []
-        for i, part in enumerate(parts):
-            name = f"part-{i:05d}-{job}.c000.snappy.parquet"
-            # pyarrow writes schema metadata as footer keys only together
-            # with its own ARROW:schema key, which Spark ignores
-            pq.write_table(part.replace_schema_metadata(footer), stage / name,
-                           compression="snappy")
-            names.append(name)
+        name = f"part-00000-{job}.c000.snappy.parquet"
+        # pyarrow writes schema metadata as footer keys only together
+        # with its own ARROW:schema key, which Spark ignores
+        pq.write_table(table.replace_schema_metadata(footer), stage / name,
+                       compression="snappy")
         (self.path / leaf).mkdir(exist_ok=True)
-        for name in names:
-            os.replace(stage / name, self.path / leaf / name)
+        os.replace(stage / name, self.path / leaf / name)
         stage.rmdir()
-        return len(names)
+        return 1
 
     # -- catalog (D1-D3) -------------------------------------------------
     @staticmethod
@@ -392,7 +366,7 @@ class ServingStore:
     def snapshot(self) -> dict | None:
         """The latest manifest snapshot — pass to :meth:`view_at` (or
         hold across several queries) to pin ONE consistent store state
-        while ingestion, compaction, and retention keep running behind
+        while ingestion, deletes, and retention keep running behind
         it; valid as long as the GC grace window. None until the first
         commit."""
         return self._snapshot()
@@ -541,46 +515,14 @@ class ServingStore:
         gc_index_tree(self.path, self.gc_grace_sec)
         return len(drop)
 
-    def compact(self, keep_recent: int = 10, target_files: int = 1) -> int:
-        """Small-files maintenance: rewrite frozen batch partitions
-        (everything older than the most recent ``keep_recent``) down to
-        ``target_files`` parquet files each. Returns the number of
-        partitions rewritten.
-
-        Streaming appends leave one file per micro-batch writer task;
-        at 100 TB that accretes into the classic small-files problem
-        (file-open overhead dominates scans, metadata listings balloon).
-        Recent partitions are left alone — they are still inside the
-        retention/serving hot window and may be replayed (overwritten)
-        by the stream; frozen ones are immutable, so the rewrite is
-        safe. The rewrite is the index trees' compactor,
-        :func:`~..sources.manifest.compact_index_tree`, over the frozen
-        leaves: each leaf is staged, renamed beside its old files and
-        all of them publish as ONE snapshot, so a concurrent reader
-        plans against either the whole pre-compaction state or the
-        whole rewritten one, never a missing/partial leaf — displaced
-        files retire and survive until GC's grace window expires so
-        readers mid-scan finish cleanly (racing-reader pytest pins it).
-        """
-        from ..sources.manifest import compact_index_tree
-
-        m = self._snapshot()
-        if m is None:
-            return 0
-        ids = self._ids_of(m)
-        frozen = ids[:-keep_recent] if keep_recent > 0 else ids
-        return compact_index_tree(
-            self.spark, self.path, target_files, self.gc_grace_sec,
-            leaves={f"{RST_COL}={b}" for b in frozen},
-        )
-
     def delete(self, conditions: dict[str, object]) -> int:
         """Q3: DELETE with ANDed equality predicates (models.py:447-481).
 
         Lakehouse-style delete: one aggregate over the snapshot's view
         finds the partitions holding matching rows, and only those are
         rewritten (anti-filter of the same view -> one partitioned
-        write); untouched batches are untouched files. All partition
+        write, one file per rewritten partition); untouched batches are
+        untouched files. All partition
         rewrites land in ONE snapshot — racing readers see pre- or
         post-delete rows, nothing between. Rows where a condition is
         NULL are kept. Returns #rows deleted.
@@ -608,6 +550,7 @@ class ServingStore:
                 (
                     view.filter(F.col(RST_COL).isin(list(hits)))
                     .filter(~cond | cond.isNull())
+                    .repartition(RST_COL)
                     .write.mode("append")
                     .partitionBy(RST_COL)
                     .parquet(str(self.path))

@@ -1,8 +1,8 @@
 """Unit pins for the index manifest layer (r7 VERDICT ask #2 + #6):
 txn atomicity, scoped replace, orphan non-adoption, GC convergence and
-manifest-history pruning. The integration stories (compaction under a
+manifest-history pruning. The integration stories (replay under a
 racing reader, streaming replay, crash debris on a real index) live in
-test_sampling_ivf.py / test_streaming_dedup.py / the soak."""
+test_serving_streaming.py / test_streaming_dedup.py / the soak."""
 
 from __future__ import annotations
 

@@ -227,82 +227,6 @@ def test_bm25_append_index_equals_full_rebuild(spark, tmp_path):
     assert a == b and len(a) == 10
 
 
-def test_compact_index_tree_preserves_index_answers(spark, tmp_path):
-    """Manifest-aware compaction (r7 VERDICT ask #2): after several
-    appends, compaction shrinks every multi-file leaf to one LIVE file
-    in the snapshot while query results stay bit-identical; the
-    displaced files remain on disk (retired) through the grace window
-    and a zero-grace GC converges disk to exactly the manifest. Crash
-    debris — an unpublished orphan file and an interrupted staging dir
-    — is never adopted into a snapshot and is swept by GC."""
-    import os
-    import shutil
-
-    from spark_streaming_kafka_bucket_counter_spark.operators.search import (
-        bm25_append_index,
-        bm25_build_index,
-        bm25_query_index,
-    )
-    from spark_streaming_kafka_bucket_counter_spark.sources.files import load_table
-    from spark_streaming_kafka_bucket_counter_spark.sources.manifest import (
-        compact_index_tree,
-        gc_index_tree,
-        latest_manifest,
-        scan_parquet_files,
-    )
-    from tests.conftest import SF_DIR
-
-    docs = load_table(spark, SF_DIR, "documents")
-    idx = str(tmp_path / "bm25_c")
-    bm25_build_index(docs.filter("doc_id % 3 = 0"), "doc_id", "text", idx)
-    bm25_append_index(docs.filter("doc_id % 3 = 1"), "doc_id", "text", idx)
-    bm25_append_index(docs.filter("doc_id % 3 = 2"), "doc_id", "text", idx)
-    terms = ["data", "model", "training"]
-    before = [tuple(r) for r in bm25_query_index(spark, idx, terms, top_k=10).collect()]
-
-    m0 = latest_manifest(idx)
-    by_leaf: dict[str, int] = {}
-    for f in m0["files"]:
-        by_leaf[os.path.dirname(f)] = by_leaf.get(os.path.dirname(f), 0) + 1
-    assert any(n > 1 for n in by_leaf.values()), "appends -> multi-file leaves"
-
-    n = compact_index_tree(spark, idx, grace_sec=3600)
-    assert n >= sum(1 for v in by_leaf.values() if v > 1)
-    m1 = latest_manifest(idx)
-    for f in m1["files"]:
-        assert (
-            sum(1 for g in m1["files"] if os.path.dirname(g) == os.path.dirname(f))
-            == 1
-        )
-    # displaced files retired, still on disk for pinned readers
-    assert m1["retired"] and set(m1["retired"]).issubset(scan_parquet_files(idx))
-    after = [tuple(r) for r in bm25_query_index(spark, idx, terms, top_k=10).collect()]
-    assert after == before
-
-    # crash debris: (a) an unpublished orphan (a write that died before
-    # its commit) — copy a live file under a new name; (b) a staging
-    # dir from a compaction that died before its publish. Neither may
-    # change answers, and GC sweeps both.
-    live0 = m1["files"][0]
-    orphan = os.path.join(
-        os.path.dirname(live0), "part-99999-deadbeef.c000.snappy.parquet"
-    )
-    shutil.copyfile(os.path.join(idx, live0), os.path.join(idx, orphan))
-    os.makedirs(os.path.join(idx, "_compactstage_dead"), exist_ok=True)
-    assert [
-        tuple(r) for r in bm25_query_index(spark, idx, terms, top_k=10).collect()
-    ] == before
-
-    gc_index_tree(idx, grace_sec=0)
-    m2 = latest_manifest(idx)
-    assert not m2["retired"]
-    assert scan_parquet_files(idx) == set(m2["files"])  # orphan swept too
-    assert not os.path.isdir(os.path.join(idx, "_compactstage_dead"))
-    assert [
-        tuple(r) for r in bm25_query_index(spark, idx, terms, top_k=10).collect()
-    ] == before
-
-
 def test_term_bucket_python_matches_spark(spark):
     """bm25_query_index prunes partitions with a PURE-PYTHON md5 bucket
     (no Spark job per serving query) — it must equal the Column recipe
@@ -509,73 +433,3 @@ def test_cached_index_dir_crash_safe_publish(tmp_path, monkeypatch):
     p2 = Path(cached_index_dir("kc", str(sf), "p", good_build))
     assert p2 == p and (p2 / "_BUILT").exists()
     assert (p2 / "index.bin").exists() and not (p2 / "stale.bin").exists()
-
-
-def test_compact_index_tree_is_reader_atomic(spark, tmp_path):
-    """The manifest snapshot makes index maintenance reader-atomic for
-    EXTERNAL readers (r7 VERDICT ask #2 — the soak's FILE_NOT_EXIST
-    fix): a query PLANNED before a compaction/append cycle must still
-    collect correctly afterwards (its pinned files are retired, not
-    deleted, through the grace window), a racing reader thread looping
-    plan+collect across two full append+compact cycles must see zero
-    errors and only complete snapshots, and fragmented leaves must be
-    re-compacted after later appends."""
-    import threading
-
-    from spark_streaming_kafka_bucket_counter_spark.operators.search import (
-        bm25_append_index,
-        bm25_build_index,
-        bm25_query_index,
-    )
-    from spark_streaming_kafka_bucket_counter_spark.sources.files import load_table
-    from spark_streaming_kafka_bucket_counter_spark.sources.manifest import (
-        compact_index_tree,
-    )
-    from tests.conftest import SF_DIR
-
-    docs = load_table(spark, SF_DIR, "documents")
-    idx = str(tmp_path / "bm25_atomic")
-    bm25_build_index(docs.filter("doc_id % 3 = 0"), "doc_id", "text", idx)
-    for m in (1, 2):
-        bm25_append_index(docs.filter(f"doc_id % 3 = {m}"), "doc_id", "text", idx)
-    terms = ["data", "model", "training"]
-    before = [tuple(r) for r in bm25_query_index(spark, idx, terms, top_k=10).collect()]
-
-    # reader pinned BEFORE maintenance, collected AFTER it
-    pinned = bm25_query_index(spark, idx, terms, top_k=10)
-    assert compact_index_tree(spark, idx, grace_sec=3600) > 0
-    assert [tuple(r) for r in pinned.collect()] == before
-
-    stop = threading.Event()
-    errors: list[str] = []
-    reads = [0]
-
-    def reader():
-        while not stop.is_set():
-            try:
-                rows = bm25_query_index(spark, idx, terms, top_k=10).collect()
-            except Exception as exc:  # noqa: BLE001 - the pin IS "no errors"
-                errors.append(f"{type(exc).__name__}: {exc}"[:200])
-                return
-            if len(rows) != len(before):
-                errors.append(f"partial snapshot: {len(rows)} rows")
-                return
-            reads[0] += 1
-
-    t = threading.Thread(target=reader)
-    t.start()
-    try:
-        # two full fragment+compact cycles under the racing reader; the
-        # corpus is large enough that top_k stays saturated, so every
-        # complete snapshot answers with exactly len(before) rows
-        bm25_append_index(docs.filter("doc_id % 5 = 0"), "doc_id", "text", idx)
-        assert compact_index_tree(spark, idx, grace_sec=3600) > 0
-        bm25_append_index(docs.filter("doc_id % 7 = 0"), "doc_id", "text", idx)
-        assert compact_index_tree(spark, idx, grace_sec=3600) > 0
-    finally:
-        stop.set()
-        t.join()
-    assert not errors, errors[0]
-    assert reads[0] >= 1, "racing reader made no progress"
-    after = bm25_query_index(spark, idx, terms, top_k=10).collect()
-    assert len(after) == len(before)

@@ -1,9 +1,10 @@
 """The serving store's driver-side commit: ``ServingStore.append``
-collects each batch with one Arrow collect and writes its parquet files
-with pyarrow. These tests pin that the files are indistinguishable from
-Spark-written ones to every reader (schema, zone maps, mixed stores),
-that the layout and replay contract are those of a partitioned Spark
-write, and that staging debris is swept by GC. The pipeline's
+collects each batch with one Arrow collect and writes it as one parquet
+file with pyarrow. These tests pin that the files are indistinguishable
+from Spark-written ones to every reader (schema, including the types
+Arrow has no name for, zone maps, mixed stores), that each batch is one
+file and replays like a partitioned Spark write, and that staging
+debris is swept by GC. The pipeline's
 driver-side count (``pipeline.count_batch``) must commit exactly what
 ``merged_count`` commits, in one Spark job with no shuffle, and must
 leave Spark's count in place above its size gate and for float keys."""
@@ -91,7 +92,13 @@ def _counts(spark, n: int, lo: int = 0):
 
 
 def test_schema_and_rows_match_a_spark_write(spark, tmp_path):
-    df = spark.createDataFrame(_ALL_ROWS, _ALL_TYPES).repartition(2)
+    # a schema derived from the collect's Arrow schema would read the
+    # last two columns as TimestampType and StringType()
+    df = spark.createDataFrame(_ALL_ROWS, _ALL_TYPES).repartition(2).select(
+        "*",
+        F.col("ts").cast("timestamp_ntz").alias("ntz"),
+        F.collate("s", "UTF8_LCASE").alias("lcase"),
+    )
     ref = str(tmp_path / "spark_written")
     (
         df.withColumn(RST_COL, F.lit(0).cast("long"))
@@ -117,7 +124,7 @@ def test_schema_and_rows_match_a_spark_write(spark, tmp_path):
 def test_driver_and_spark_written_partitions_read_together(spark, tmp_path):
     store = ServingStore(spark, str(tmp_path / "store"), clean_freq=0)
     # batch 5: a raw single-file Spark partitioned write, adopted through
-    # manifest_txn (compaction leaves it alone)
+    # manifest_txn
     with manifest_txn(store.path, replace_prefixes=[f"{RST_COL}=5"]):
         (
             _counts(spark, 40).coalesce(1).withColumn(RST_COL, F.lit(5).cast("long"))
@@ -125,8 +132,6 @@ def test_driver_and_spark_written_partitions_read_together(spark, tmp_path):
         )
     for b in range(6, 9):
         store.append(_counts(spark, 40, lo=100 * b).repartition(3), b)
-    # batches 6 and 7 become Spark-written compaction output
-    assert store.compact(keep_recent=1) == 2
     per_batch = {
         r[0]: (r[1], r[2])
         for r in store.view().groupBy(RST_COL)
@@ -145,7 +150,7 @@ def test_one_file_per_non_empty_partition_and_no_debris(spark, tmp_path):
     store.append(_counts(spark, 100).repartition(4).coalesce(1), 1)
     store.append(spark.range(0, 3, 1, numPartitions=8).select(
         F.col("id").alias("bucket_start")), 2)
-    assert [len(_leaf_files(store, b)) for b in range(3)] == [4, 1, 3]
+    assert [len(_leaf_files(store, b)) for b in range(3)] == [1, 1, 1]
     # no _SUCCESS, _temporary, .crc or staging directory anywhere
     for b in range(3):
         for name in _leaf_files(store, b):
@@ -208,7 +213,7 @@ def test_one_structured_log_record_per_commit(spark, tmp_path, caplog):
     assert len(recs) == 1
     r = recs[0]
     assert r.levelno == logging.INFO
-    assert (r.batch_id, r.rows, r.files) == (4, 30, 2)
+    assert (r.batch_id, r.rows, r.files) == (4, 30, 1)
     for k in ("collect_ms", "write_ms", "publish_ms"):
         assert isinstance(getattr(r, k), float) and getattr(r, k) >= 0
 

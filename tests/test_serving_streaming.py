@@ -169,57 +169,6 @@ def test_parse_and_bucket_dropped_bucket_field_still_buckets(spark):
     assert [tuple(r) for r in out.collect()] == [("click", 40, 60)]
 
 
-def test_store_compact_frozen_partitions(spark, tmp_path):
-    """Round 9 (manifest substrate): compaction publishes ONE snapshot
-    whose frozen partitions are single-file; the displaced fragments
-    RETIRE (still on disk for readers pinned to the prior snapshot)
-    and a zero-grace GC converges the directory to exactly the live
-    set — the retire-then-GC twin of the old 'swept next maintenance'
-    contract."""
-    from spark_streaming_kafka_bucket_counter_spark.sources.manifest import (
-        gc_index_tree,
-        latest_manifest,
-    )
-
-    store = ServingStore(spark, str(tmp_path / "cstore"), clean_freq=0)
-    df = spark.range(100).withColumnRenamed("id", "v")
-    for b in range(4):
-        store.append(df.repartition(4), b)  # 4 files per partition
-
-    before = store.view().groupBy().sum("v").collect()[0][0]
-    # freeze everything but the most recent 2
-    assert store.compact(keep_recent=2) == 2
-
-    def _live_per_batch():
-        m = latest_manifest(tmp_path / "cstore")
-        out = {}
-        for f in m["files"]:
-            b = int(f.split("/", 1)[0].split("=", 1)[1])
-            out[b] = out.get(b, 0) + 1
-        return out
-
-    live = _live_per_batch()
-    for b in range(2):  # frozen -> single live file
-        assert live[b] == 1, live
-    for b in range(2, 4):  # hot window untouched
-        assert live[b] == 4, live
-    # data unchanged, retired fragments invisible to the view
-    assert store.view().groupBy().sum("v").collect()[0][0] == before
-    assert store._batch_ids() == [0, 1, 2, 3]
-    # idempotent: second run finds nothing to do
-    assert store.compact(keep_recent=2) == 0
-
-    # GC with expired grace converges disk to the live set exactly
-    import glob
-
-    gc_index_tree(tmp_path / "cstore", grace_sec=0)
-    for b in range(2):
-        assert len(glob.glob(str(tmp_path / "cstore" / f"RST_ID={b}" / "*.parquet"))) == 1
-    for b in range(2, 4):
-        assert len(glob.glob(str(tmp_path / "cstore" / f"RST_ID={b}" / "*.parquet"))) == 4
-    assert store.view().groupBy().sum("v").collect()[0][0] == before
-
-
 def test_store_time_travel(spark, tmp_path):
     store = ServingStore(spark, str(tmp_path / "ttstore"), clean_freq=0)
     for b in range(3):
@@ -255,15 +204,15 @@ def test_store_recent_answers_from_one_snapshot(spark, tmp_path, monkeypatch):
     assert committed == [3] and store.rst() == 3
 
 
-def test_store_compact_is_reader_atomic(spark, tmp_path):
-    """Racing readers during compaction never observe a partial store
-    (VERDICT r5 ask #8). Two readers race repeated compactions: a Spark
-    reader re-aggregating the full view (must always see every row), and
-    a high-frequency filesystem lister resolving every partition the way
-    Spark's file index does (every RST_ID must always be present,
-    resolvable, and non-empty — the round-5 two-rename swap had a window
-    where a partition was absent). The symlink publish makes the swap a
-    single atomic rename, so both loops must be clean."""
+def test_store_replay_is_reader_atomic(spark, tmp_path):
+    """Racing readers during batch replays never observe a partial
+    store (VERDICT r5 ask #8). Two readers race repeated replays of
+    every batch id: a Spark reader re-aggregating the full view (must
+    always see every row), and a high-frequency filesystem lister
+    resolving every partition the way Spark's file index does (every
+    RST_ID must always be present, resolvable, and non-empty). A replay
+    renames its new file into the leaf before it publishes and retires
+    the old file instead of deleting it, so both loops must be clean."""
     import glob
     import os
     import threading
@@ -307,11 +256,10 @@ def test_store_compact_is_reader_atomic(spark, tmp_path):
         t.start()
     try:
         for _ in range(5):
-            # re-fragment every partition, then compact all of them: each
-            # round performs n_parts atomic swaps under the racing readers
+            # replay every batch id: each round performs n_parts atomic
+            # swaps under the racing readers
             for b in range(n_parts):
                 store.append(df.repartition(4), b)
-            assert store.compact(keep_recent=0) == n_parts
     finally:
         stop.set()
         for t in threads:

@@ -5,6 +5,9 @@ from __future__ import annotations
 
 import uuid
 
+from pyspark.sql import functions as F
+
+from spark_streaming_kafka_bucket_counter_spark.sources.manifest import manifest_txn
 from spark_streaming_kafka_bucket_counter_spark.streaming.serving import (
     RST_COL,
     ServingStore,
@@ -45,9 +48,21 @@ def test_delete_discovery_jobs_do_not_grow_with_batches(spark, tmp_path):
 
 def test_delete_rewrites_only_matching_batches(spark, tmp_path):
     store = _store(spark, tmp_path / "s", 4)
+    # batch 2 as a Spark write leaves it: one file per Spark partition,
+    # so the rewrite reads it in several tasks
+    with manifest_txn(store.path, replace_prefixes=[f"{RST_COL}=2"]):
+        (
+            spark.createDataFrame(
+                [("click", 2), ("view", 2), (None, 2)], "etype string, count long"
+            )
+            .repartition(3).withColumn(RST_COL, F.lit(2).cast("long"))
+            .write.mode("append").partitionBy(RST_COL).parquet(str(store.path))
+        )
     before = store.snapshot()["files"]
+    assert sum(f.startswith(f"{RST_COL}=2/") for f in before) > 1
     assert store.delete({"etype": "view", "count": 2}) == 1
     after = store.snapshot()["files"]
+    assert sum(f.startswith(f"{RST_COL}=2/") for f in after) == 1
     untouched = [f for f in before if not f.startswith(f"{RST_COL}=2/")]
     assert set(untouched) <= set(after)
     assert not any(f in after for f in before if f.startswith(f"{RST_COL}=2/"))

@@ -69,8 +69,8 @@ def test_cross_batch_duplicate_records_dropped(spark, tmp_path):
 
 def test_ivf_index_crash_mid_compaction_recovers(spark, tmp_path):
     """Kill-mid-compaction story for the IVF index, manifest edition
-    (r8): stage both crash shapes compact_index_tree can leave behind —
-    (1) compacted files MOVED into a leaf but never published (the
+    (r8): stage both crash shapes a staged rewrite can leave behind —
+    (1) rewritten files MOVED into a leaf but never published (the
     publish is the commit point, so they are orphans no snapshot
     references) and (2) an abandoned ``_compactstage_`` dir — and prove
     queries keep answering from the intact snapshot, GC sweeps both

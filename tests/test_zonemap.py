@@ -204,34 +204,28 @@ def test_http_routes_prune_and_match(spark, tmp_path):
     assert [r["bucket_start"] for r in rows] == [25]
 
 
-def test_stats_survive_gc_and_compaction(spark, tmp_path):
-    # review catch: maintenance publishes (GC, compaction) must carry
-    # zone maps forward and harvest merged replacements — losing them
-    # silently defeats the O(manifest) pruning after the first routine
-    # maintenance pass
+def test_stats_survive_gc(spark, tmp_path):
+    # review catch: a GC publish must carry zone maps forward — losing
+    # them silently defeats the O(manifest) pruning after the first
+    # routine maintenance pass
     from spark_streaming_kafka_bucket_counter_spark.sources.manifest import (
-        compact_index_tree,
         gc_index_tree,
     )
 
     root = tmp_path / "maint"
     _write_range(spark, root, "data", 0, 100)
     _write_range(spark, root, "data", 100, 200)
-    compact_index_tree(spark, root, target_files=1, grace_sec=0.0)
-    m = glue = latest_manifest(root)
-    files = [f for f in m["files"] if f.startswith("data/")]
-    assert len(files) == 1  # merged
-    st = m["stats"][files[0]]["cols"]["id"]
-    assert (st["mn"], st["mx"]) == (0, 199)  # harvested for the merged file
-    _write_range(spark, root, "data", 200, 300)
+    _write_range(spark, root, "gone", 0, 10)
+    with manifest_txn(root, replace_prefixes=["gone"]):
+        pass  # retires the "gone" file; GC then has something to drop
+    m = latest_manifest(root)
     gc_index_tree(root, grace_sec=0.0)
     m2 = latest_manifest(root)
-    assert all(
-        "id" in m2["stats"][f]["cols"]
+    assert m2["generation"] == m["generation"] + 1 and not m2["retired"]
+    assert sorted(
+        (m2["stats"][f]["cols"]["id"]["mn"], m2["stats"][f]["cols"]["id"]["mx"])
         for f in m2["files"]
-        if f.startswith("data/")
-    )
-    assert glue is not m2
+    ) == [(0, 99), (100, 199)]
 
 
 def test_nan_predicate_never_prunes(ranged):
