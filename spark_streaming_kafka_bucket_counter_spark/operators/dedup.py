@@ -1271,7 +1271,7 @@ def lsh_query_index(
     from ..sources.manifest import latest_manifest, manifest_read
 
     # one snapshot pins BOTH subtrees: bands and shingles from the same
-    # manifest generation, and a concurrent append/forget can't
+    # manifest generation, and a concurrent append or GC can't
     # yank a planned file (retired files outlive readers' grace window).
     # ``snapshot`` (from latest_manifest/manifest_at) time-travels the
     # read to that generation instead. No snapshot at all means the

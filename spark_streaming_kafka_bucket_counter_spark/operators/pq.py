@@ -764,7 +764,7 @@ def ivfpq_recall_eval(
 # cells/cid=*/ holds (id, codes) rows (8 bytes of payload per vector
 # instead of the raw embedding), centroids/ + codebook/ hold the bounded
 # model metadata. Same manifest-snapshot contract as the LSH/IVF/BM25
-# indexes (reader-atomic under append/forget, GC grace window).
+# indexes (reader-atomic under append, GC grace window).
 # ---------------------------------------------------------------------------
 
 

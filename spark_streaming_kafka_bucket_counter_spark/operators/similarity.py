@@ -1022,7 +1022,7 @@ def ivf_query_index(
     from ..sources.manifest import latest_manifest, manifest_read
 
     # centroids + cells pinned to ONE manifest generation (reader-atomic
-    # under concurrent append/forget — r7 soak's FILE_NOT_EXIST fix);
+    # under a concurrent append);
     # ``snapshot`` (latest_manifest/manifest_at) time-travels the read.
     # No snapshot at all = lost bootstrap commit (crash window): raise
     # rather than fall through to an unpinned plain-directory read.

@@ -1,46 +1,41 @@
-"""Snapshot manifests for the on-disk serving indexes (LSH / IVF / BM25).
+"""Snapshot manifests for parquet trees that are read while they change:
+the serving store (streaming/serving.py) and the on-disk LSH / IVF /
+BM25 indexes.
 
 Why this exists: Spark plans a parquet read by LISTING the directory
 tree, then executes against the listed file paths. Any maintenance that
-deletes or renames a listed file between those two moments — row-rewrite
-swaps, partition-overwrite replays — surfaces to a concurrent reader as
-``FAILED_READ_FILE.FILE_NOT_EXIST`` (the r7 soak measured 6–31 such
-transients per reader thread on the LSH/IVF/BM25 indexes, while the
-line-count tree's never-rewritten partitions measured 0). Pushing a
-retry loop onto every consumer does not survive 100× scale.
+deletes or renames a listed file between those two moments — a batch
+replay, a delete rewrite, a retention clean — surfaces to a concurrent
+reader as ``FAILED_READ_FILE.FILE_NOT_EXIST``. Pushing a retry loop
+onto every consumer does not survive 100× scale.
 
 The manifest inverts the contract — the same shape the table formats
 (Iceberg's snapshot + manifest list, Delta's transaction log) use:
 
-* every index mutation runs inside :func:`manifest_txn`, which records
+* every mutation runs inside :func:`manifest_txn`, which records
   exactly the files that write produced and publishes them as the next
   ``_manifest/v{N}.json`` snapshot — an atomic tmp + rename, so any
   snapshot a reader resolves is complete;
 * readers resolve the LATEST snapshot once and plan directly over those
   explicit file paths (``basePath`` preserves the partition columns, so
-  ``tb``/``band``/``cid`` pruning is unchanged);
-* a logical overwrite (segment replay, row rewrite) RETIRES the
-  displaced files in the manifest instead of deleting them; GC removes
-  retired files only after a grace window, so a reader pinned to any
-  recent snapshot never observes a missing file — no reader-side retry,
-  no coordination;
-* files never published (a write that crashed before its commit, a
-  row rewrite that crashed before its publish) are ORPHANS: invisible to
-  readers, never adopted into a snapshot — scan-diff adoption would
-  silently double additive stats like BM25 tf/df/N — and deleted by GC
-  once older than the grace window. Replay regenerates their content.
+  ``RST_ID``/``tb``/``band``/``cid`` pruning is unchanged);
+* a logical overwrite RETIRES the files under its replace prefixes in
+  the manifest instead of deleting them; GC removes retired files only
+  after a grace window, so a reader pinned to any recent snapshot never
+  observes a missing file — no reader-side retry, no coordination;
+* files never published (a write that crashed before its commit) are
+  ORPHANS: invisible to readers, never adopted into a snapshot —
+  scan-diff adoption would silently double additive stats like BM25
+  tf/df/N — and deleted by GC once older than the grace window. Replay
+  regenerates their content.
 
-Single-MAINTAINER contract: one
-writer at a time per index root — the serving store's
-``foreachBatch`` commit serializes its own maintenance. Readers need
-nothing.
-Round 9 makes the contract ENFORCED, not just documented: every
-mutation holds a lease file (``_manifest/_lease``, O_EXCL create;
-broken automatically when the holder pid is dead on this host or the
-lease ages past its timeout) and the snapshot publish itself is
+Single-MAINTAINER contract, enforced: every mutation holds a lease
+file (``_manifest/_lease``, O_EXCL create; broken automatically when
+the holder pid is dead on this host or the lease ages past
+:data:`LEASE_TIMEOUT_SEC`) and the snapshot publish itself is
 fail-if-exists (``os.link``), so a misconfigured second maintainer
-raises :class:`ConcurrentMaintainerError` loudly instead of silently
-last-writer-wins corrupting the snapshot chain.
+raises :class:`ConcurrentMaintainerError` instead of silently
+corrupting the snapshot chain. Readers need nothing.
 
 Pre-existing UNMANAGED trees (built by older writers, no ``_manifest``)
 are ADOPTED on first mutation: the transaction's pre-scan file set
@@ -49,11 +44,6 @@ index that predates the manifest layer never vanishes its legacy data
 (and never lets GC sweep it as orphans). Orphan non-adoption only
 applies once a manifest exists — then unpublished files really are
 crash debris.
-
-Round 9 also moved the SERVING STORE onto this substrate
-(streaming/serving.py) — appends, predicate deletes, row forgets and
-retention cleans all publish snapshots, so store readers gained the
-same 0-transient contract.
 
 Scale notes: a publish costs O(live files) — one JSON dump plus one
 tree scan — and readers pay one JSON parse. That holds comfortably to
@@ -86,9 +76,8 @@ MANIFEST_DIR = "_manifest"
 #: trail; readers only ever resolve the latest)
 KEEP_GENERATIONS = 4
 LEASE_NAME = "_lease"
-#: hidden root-level staging directories: files are written here, then
-#: renamed into their leaf; a crash leaves the directory for GC
-COMPACT_STAGE_PREFIX = "_compactstage_"
+#: hidden root-level staging directory: a file is written here, then
+#: renamed into its leaf; a crash leaves the directory for GC
 COMMIT_STAGE_PREFIX = "_commitstage_"
 #: a dead maintainer's lease is broken after this long even when its
 #: pid can't be probed (cross-host; pid-liveness handles same-host)
@@ -150,8 +139,7 @@ def _break_stale_lease(lease: Path) -> None:
 
 
 @contextlib.contextmanager
-def _maintainer_lease(root: str | Path,
-                      timeout_sec: float | None = None) -> Iterator[None]:
+def _maintainer_lease(root: str | Path) -> Iterator[None]:
     """Hold the index's single-maintainer lease for one mutation.
     O_EXCL create is the acquisition; a live second maintainer raises
     :class:`ConcurrentMaintainerError` immediately (no blocking — the
@@ -160,11 +148,8 @@ def _maintainer_lease(root: str | Path,
     longer than the timeout (a full BM25 merge at scale) never have a
     LIVE lease broken out from under them — the timeout only ever
     breaks a holder that crashed (heartbeat died with the process) or
-    wedged. Override via ``SSBC_LEASE_TIMEOUT_SEC``."""
-    if timeout_sec is None:
-        timeout_sec = float(
-            os.environ.get("SSBC_LEASE_TIMEOUT_SEC", LEASE_TIMEOUT_SEC)
-        )
+    wedged. The timeout is :data:`LEASE_TIMEOUT_SEC`, read per call."""
+    timeout_sec = LEASE_TIMEOUT_SEC
     mdir = _mdir(root)
     mdir.mkdir(parents=True, exist_ok=True)
     lease = _lease_path(root)
@@ -488,15 +473,12 @@ def _publish(root: str | Path, files: Sequence[str], retired: dict[str, float],
 def _commit(root: str | Path, added: set[str],
             replace_prefixes: Sequence[str] = (),
             adopt: Sequence[str] = (),
-            extra_retire: frozenset[str] | set[str] = frozenset(),
             meta_updates: dict | None = None) -> dict:
     """Publish the next snapshot: ``added`` files become live; live
     files under ``replace_prefixes`` that predate this write are
     RETIRED (kept on disk for pinned readers until GC's grace window
     expires) — append-mode writes + a scoped commit is the reader-safe
-    spelling of a partition overwrite. ``extra_retire`` retires an
-    explicit file set the same way (row-level rewrites name their
-    displaced files instead of a prefix). Live files the writer itself
+    spelling of a partition overwrite. Live files the writer itself
     hard-deleted (a full ``mode("overwrite")`` rebuild) drop out; a
     rebuild is not reader-atomic under any scheme — build into a fresh
     directory and swap paths instead. On-disk files that are neither
@@ -525,7 +507,7 @@ def _commit(root: str | Path, added: set[str],
             continue
         if not (rootp / f).exists():
             continue  # hard-deleted by the writer; nothing to protect
-        if _in_scope(f) or f in extra_retire:
+        if _in_scope(f):
             retired[f] = now
         else:
             kept.append(f)
@@ -548,8 +530,6 @@ class ManifestTxnHandle:
     """Mutable view of an open :func:`manifest_txn`. Callers that do
     more than plain writes use it to shape the commit:
 
-    * :meth:`retire` — retire an explicit displaced-file set (row-level
-      rewrites that replace individual files, not whole prefixes);
     * :meth:`replace` — add a replace scope discovered mid-transaction
       (e.g. per affected segment);
     * :meth:`set_meta` — merge a key into the snapshot's ``meta`` dict
@@ -563,27 +543,22 @@ class ManifestTxnHandle:
         self.live_files = set(live_files)
         self._root = root
         self._pre = set(pre)
-        self._extra_retire: set[str] = set()
         self._scopes: list[str] = []
         self._meta: dict = {}
         self._aborted = False
 
-    def retire(self, files) -> None:
-        self._extra_retire.update(files)
-
     def current_live(self, sub: str = "") -> set[str]:
         """The live set AS OF NOW inside the open transaction — prior
-        live files minus retirements recorded so far, plus files the
-        transaction has written so far (optionally restricted to a
-        subtree). Multi-step mutations (rewrite postings, then
-        re-derive stats from the REWRITTEN postings) read this instead
-        of the published snapshot, which won't exist until commit.
+        live files plus files the transaction has written so far
+        (optionally restricted to a subtree). Multi-step mutations
+        (rewrite postings, then re-derive stats from the REWRITTEN
+        postings) read this instead of the published snapshot, which
+        won't exist until commit.
 
         A scoped call walks ONLY that subtree: callers that iterate
-        leaves (the BM25 segment merge) would
-        otherwise pay O(leaves x whole-tree walk) in stat calls — the
-        dominant cost of a metadata-cheap maintenance pass on remote
-        filesystems (r9 review catch)."""
+        leaves (the BM25 segment merge) would otherwise pay O(leaves x
+        whole-tree walk) in stat calls — the dominant cost of a
+        metadata-cheap maintenance pass on remote filesystems."""
         if sub:
             want = sub.rstrip("/") + "/"
             subdir = self._root / sub.rstrip("/")
@@ -592,13 +567,9 @@ class ManifestTxnHandle:
                 if subdir.is_dir()
                 else set()
             )
-            now_live = (self.live_files - self._extra_retire) | (
-                scanned - self._pre
-            )
+            now_live = self.live_files | (scanned - self._pre)
             return {f for f in now_live if f.startswith(want)}
-        return (self.live_files - self._extra_retire) | (
-            scan_parquet_files(self._root) - self._pre
-        )
+        return self.live_files | (scan_parquet_files(self._root) - self._pre)
 
     def replace(self, prefix: str) -> None:
         self._scopes.append(prefix)
@@ -624,8 +595,8 @@ def manifest_txn(root: str | Path,
             df.write.mode("append").parquet(...)
         with manifest_txn(path, replace_prefixes=[...]): # replace scope
             df.write.mode("append").parquet(...)
-        with manifest_txn(path) as txn:                  # shaped commit
-            ...rewrite files...; txn.retire(displaced)
+        with manifest_txn(path) as txn:                  # scopes found
+            ...write files...; txn.replace(prefix)       # mid-write
 
     The files that appear between entry and exit — and ONLY those —
     become live in the next snapshot; with ``replace_prefixes`` (or
@@ -652,14 +623,12 @@ def manifest_txn(root: str | Path,
             scan_parquet_files(rootp) - pre,
             tuple(replace_prefixes) + tuple(txn._scopes),
             adopt=sorted(pre),
-            extra_retire=frozenset(txn._extra_retire),
             meta_updates=txn._meta or None,
         )
 
 
 def manifest_read(spark: SparkSession, root: str | Path, sub: str = "",
-                  snapshot: dict | None = None,
-                  predicate: Sequence[tuple] = ()) -> DataFrame:
+                  snapshot: dict | None = None) -> DataFrame:
     """Plan a parquet read over the latest snapshot's files under
     ``sub`` (a relative subtree, e.g. ``"postings"``). ``basePath``
     anchors partition-column discovery, so partition pruning and DPP
@@ -669,36 +638,19 @@ def manifest_read(spark: SparkSession, root: str | Path, sub: str = "",
     :func:`latest_manifest` ONCE and passes it as ``snapshot`` so all
     its reads pin the same generation. The schema is the first listed
     file's, read from its footer on the driver
-    (:func:`~.files.read_parquet`), so planning the read runs no Spark job.
-
-    ``predicate`` — ``(col, op, value)`` conjuncts — prunes files by
-    the snapshot's zone maps BEFORE Spark ever lists or opens them
-    (see :func:`files_matching`); at object-store scale that turns a
-    selective point/range read from O(files) footer round-trips into
-    O(manifest). The caller must still apply the real filter: pruning
-    only removes files that provably contain no match. When every live
-    file is pruned the read degrades to the empty-subtree path below
-    (schema preserved)."""
+    (:func:`~.files.read_parquet`), so planning the read runs no Spark job."""
     rootp = Path(root)
     m = snapshot if snapshot is not None else latest_manifest(rootp)
     base = rootp / sub if sub else rootp
     if m is None:
         return spark.read.parquet(str(base))
     want = sub.rstrip("/") + "/" if sub else ""
-    matched = (files_matching(m, sub, predicate) if predicate
-               else [f for f in m["files"] if f.startswith(want)])
-    paths = [str(rootp / f) for f in matched]
-    if not paths and predicate and any(f.startswith(want) for f in m["files"]):
-        # live files exist but all were zone-map-pruned: empty result
-        # with the real schema (from a live file, schema-only)
-        first_live = next(f for f in m["files"] if f.startswith(want))
-        schema = read_parquet(spark, str(rootp / first_live), base=str(base)).schema
-        return spark.createDataFrame([], schema)
+    paths = [str(rootp / f) for f in m["files"] if f.startswith(want)]
     if not paths:
         # A manifest exists but lists no live files under the subtree.
         # NEVER fall back to the directory read: retired files awaiting
         # GC still sit there, and reading them would resurrect rows a
-        # forget just deleted. Schema comes from a retired/orphan file if one is
+        # replace scope just retired. Schema comes from a retired/orphan file if one is
         # still on disk (schema-only — no rows are exposed); once GC
         # has emptied the subtree this raises the same PATH_NOT_FOUND
         # an empty directory read would.
@@ -714,111 +666,6 @@ def manifest_read(spark: SparkSession, root: str | Path, sub: str = "",
             f"{m['generation']} has no live files under {base}"
         )
     return read_parquet(spark, *paths, base=str(base))
-
-
-def _rewrite_dropping_rows(spark: SparkSession, rootp: Path, live: set[str],
-                           id_col: str, idlist: list[int],
-                           subtrees: Sequence[str]) -> tuple[set[str], list[str]]:
-    """Rewrite, in place (new part files beside the old), every live
-    data file under ``subtrees`` that contains rows whose ``id_col`` is
-    in ``idlist`` — candidates are first pruned by the snapshot's zone
-    maps (files whose recorded [min, max] id range contains none of the
-    ids are never even opened), then confirmed with one pushdown-pruned
-    scan per subtree (parquet row-group stats skip the rest). Files
-    whose rows are ALL forgotten get no replacement. Returns (displaced
-    files, replacement files); the CALLER publishes — until it does,
-    replacements are orphans and readers keep resolving the old files,
-    so a crash here loses nothing."""
-    touched: set[str] = set()
-    added: list[str] = []
-    from pyspark.sql import functions as F  # local: keep module import-light
-
-    m = latest_manifest(rootp)
-    stats = m.get("stats", {}) if m else {}
-    for sub in subtrees:
-        base = rootp / sub
-        want = sub.rstrip("/") + "/"
-        paths = [
-            f for f in live
-            if f.startswith(want)
-            and _satisfiable(stats.get(f), id_col, "in", idlist)
-        ]
-        if not paths:
-            continue
-        hit_rows = (
-            spark.read.option("basePath", str(base))
-            .parquet(*[str(rootp / f) for f in sorted(paths)])
-            .filter(F.col(id_col).isin(idlist))
-            .select(F.input_file_name().alias("_f"))
-            .distinct()
-            .collect()
-        )
-        prefix = str(rootp) + "/"
-        for r in hit_rows:
-            f = r["_f"]
-            if f.startswith("file:"):
-                f = f[5:]
-                while f.startswith("//"):
-                    f = f[1:]
-            rel = f[len(prefix):] if f.startswith(prefix) else None
-            if rel is None or rel not in live or rel in touched:
-                continue
-            touched.add(rel)
-            keep = spark.read.parquet(str(rootp / rel)).filter(
-                ~F.col(id_col).isin(idlist)
-            )
-            if keep.limit(1).count() == 0:
-                continue  # whole file forgotten: retire, no replacement
-            staged = rootp / f"{COMPACT_STAGE_PREFIX}{uuid.uuid4().hex[:8]}"
-            keep.coalesce(1).write.mode("overwrite").parquet(str(staged))
-            leaf_dir = (rootp / rel).parent
-            leaf_rel = os.path.dirname(rel)
-            for pf in sorted(staged.glob("*.parquet")):
-                crc = staged / f".{pf.name}.crc"
-                if crc.exists():
-                    os.replace(crc, leaf_dir / crc.name)
-                os.replace(pf, leaf_dir / pf.name)
-                added.append(f"{leaf_rel}/{pf.name}" if leaf_rel else pf.name)
-            import shutil
-
-            shutil.rmtree(staged, ignore_errors=True)
-    return touched, added
-
-
-def manifest_forget_rows(spark: SparkSession, root: str | Path,
-                         id_col: str, ids: Sequence[int],
-                         subtrees: Sequence[str],
-                         grace_sec: float = 300.0) -> int:
-    """Row-level delete across a manifest-managed index: drop every row
-    whose ``id_col`` is in ``ids`` from the given subtrees, rewriting
-    ONLY the data files that actually contain such rows and publishing
-    the swap as ONE snapshot. The right-to-be-forgotten primitive:
-    readers pinned to any recent snapshot keep resolving the old files
-    through the grace window, so a delete never blocks or breaks a
-    concurrent query; after GC the forgotten rows have no bytes on disk
-    anywhere.
-
-    Files whose rows are all forgotten simply retire with no
-    replacement. Partition values live in directory names, so rewrites
-    stay in their leaf and contents merge verbatim minus the dropped
-    rows. An UNMANAGED (pre-manifest) tree is adopted first — the
-    forget is honored against the directory state, never silently
-    no-opped. Returns the number of files rewritten or retired.
-    """
-    if not ids:
-        return 0
-    rootp = Path(root)
-    idlist = [int(x) for x in ids]
-    with manifest_txn(rootp) as t:
-        touched, _added = _rewrite_dropping_rows(
-            spark, rootp, set(t.live_files), id_col, idlist, subtrees
-        )
-        if not touched:
-            t.abort()  # nothing matched: truthful no-op, no publish
-        t.retire(touched)
-    if touched:
-        gc_index_tree(rootp, grace_sec)
-    return len(touched)
 
 
 def _unlink_with_crc(rootp: Path, rel: str) -> None:
@@ -883,15 +730,13 @@ def _gc(rootp: Path, grace_sec: float) -> int:
                 d.rmdir()  # fails (kept) unless truly empty
             except OSError:
                 pass
-    # staging debris from a row rewrite or a driver-side commit that
-    # crashed before its publish (hidden from readers and scans; safe to
-    # sweep once aged)
+    # staging debris from a driver-side commit that crashed before its
+    # publish (hidden from readers and scans; safe to sweep once aged)
     import shutil
 
     for name in os.listdir(rootp):
         p = rootp / name
-        stage = name.startswith((COMPACT_STAGE_PREFIX, COMMIT_STAGE_PREFIX))
-        if stage and p.is_dir():
+        if name.startswith(COMMIT_STAGE_PREFIX) and p.is_dir():
             try:
                 if p.stat().st_mtime <= cutoff:
                     shutil.rmtree(p, ignore_errors=True)

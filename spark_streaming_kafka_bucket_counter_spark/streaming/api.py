@@ -25,7 +25,7 @@ from typing import Any
 from pyspark.sql import DataFrame
 
 from ..functions import predicates as P
-from .serving import ServingStore
+from .serving import ServingStore, reject_foreign_reads
 
 
 # Driver-OOM guard for the collecting endpoints: the reference fetchall'd
@@ -62,10 +62,12 @@ def select_all(
     store: ServingStore, table: str = "*", max_rows: int | None = None
 ) -> list[dict]:
     """H1: ``GET /a/<table>`` — '*' means the default serving table
-    (http_endpoint.py:69-76)."""
+    (http_endpoint.py:69-76); any other name resolves through
+    ``spark.table`` under the same check as ``/c``
+    (:func:`~.serving.reject_foreign_reads`)."""
     if table in ("*", store.table_name):
         return _rows(store.select_all(), max_rows)
-    return _rows(store.spark.table(table), max_rows)
+    return _rows(reject_foreign_reads(store.spark.table(table), store.path), max_rows)
 
 
 def custom_sql(store: ServingStore, sql: str, max_rows: int | None = None) -> list[dict]:

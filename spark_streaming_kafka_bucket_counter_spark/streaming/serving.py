@@ -21,9 +21,9 @@ Spark-first redesign:
 - scale: a batch's counts are O(distinct keys in the batch), so the
   driver commit holds far past the service's input rates; its bound is
   driver memory (``spark.driver.maxResultSize`` caps the collect).
-  Maintenance (``delete``, ``forget``) rewrites through Spark writes
-  on the executors, one file per rewritten partition, so every leaf
-  of the store holds one live file and there is nothing to compact.
+  Maintenance (``delete``, Q3) rewrites through one Spark write on
+  the executors, one file per rewritten partition, so every leaf of
+  the store holds one live file and there is nothing to compact.
 - ``RST_ID`` ≙ the ``batch_id`` Structured Streaming hands to
   ``foreachBatch`` — monotone and checkpoint-recovered, reproducing the
   reference's ``MAX(RST_ID)+1`` crash-recovery init (models.py:526-536)
@@ -35,17 +35,20 @@ Spark-first redesign:
   is empty. Stores written before round 9 upgrade once through
   ``tools/migrate_store.py``; the store refuses to open them.
 - idempotence: re-running a batch after crash REPLACES its own
-  partition at manifest level (scoped snapshot commit, the same
-  substrate as the LSH/IVF/BM25 indexes), giving effectively-once
+  partition at manifest level (scoped snapshot commit,
+  :mod:`..sources.manifest`), giving effectively-once
   serving output on top of at-least-once delivery — strictly better than
   the reference's double-buffer accumulator flip (main.py:204-237) —
   while readers pinned to the prior snapshot keep a complete file set
   through the GC grace window.
 - arbitrary SQL (Q2/H2) runs through ``spark.sql`` against a registered
-  view — Spark SQL replaces SQLite as the strict-superset dialect.
+  view — Spark SQL replaces SQLite as the strict-superset dialect. The
+  surface is read-only: see :func:`reject_non_query` and
+  :func:`reject_foreign_reads`.
 
-An in-memory variant backs unit tests and the reference's ``:memory:``
-default (``main.py:61`` db_uri default); same API.
+There is one store kind, on disk: ``cli.run`` maps the reference's
+``:memory:`` default (``main.py:61`` db_uri default) to a temporary
+directory.
 """
 
 from __future__ import annotations
@@ -58,6 +61,7 @@ import uuid
 from pathlib import Path
 
 import pyarrow as pa
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import from_arrow_schema
@@ -74,14 +78,15 @@ _log = logging.getLogger(__name__)
 
 
 class CommandRejected(ValueError):
-    """A non-query SQL statement was refused by the serving surface.
+    """The read-only serving surface refused a SQL statement (HTTP 403).
 
     The reference served "full SQL calls" over HTTP (README:3,
     http_endpoint.py:88-92) where the blast radius was a throwaway
     SQLite file; here the same string reaches a SparkSession whose
-    catalog and filesystem outlive the request, so the query surface is
-    gated to read-only statements unless the owner opts out
-    (``allow_commands=True``).
+    catalog and filesystem outlive the request, so the query surface
+    runs queries only (:func:`reject_non_query`), and those queries
+    read the store and the session's tables, never other files or JVM
+    methods (:func:`reject_foreign_reads`).
     """
 
 
@@ -142,7 +147,7 @@ def reject_non_query(spark: SparkSession, sql: str) -> None:
                 continue  # EXPLAIN/DESCRIBE never execute their payload
             raise CommandRejected(
                 f"statement kind {name} is not a query; this surface is "
-                "read-only (pass allow_commands=True to opt out)"
+                "read-only"
             )
         if (
             name.startswith("InsertInto")
@@ -151,7 +156,7 @@ def reject_non_query(spark: SparkSession, sql: str) -> None:
         ):
             raise CommandRejected(
                 f"statement kind {name} writes data; this surface is "
-                "read-only (pass allow_commands=True to opt out)"
+                "read-only"
             )
         # children covers CTE bodies (UnresolvedWith's child IS the
         # wrapped statement); innerChildren covers the cteRelations and
@@ -165,11 +170,78 @@ def reject_non_query(spark: SparkSession, sql: str) -> None:
                 pass  # expression leaves / API drift: nothing to descend
 
 
+def _seq(seq) -> list:
+    """A Scala ``Seq`` held by the JVM as a Python list of its elements."""
+    return [seq.apply(i) for i in range(seq.length())]
+
+
+def reject_foreign_reads(df: DataFrame, root: str | Path) -> DataFrame:
+    """Return ``df`` unless its analyzed plan, subqueries included,
+    reads files or runs JVM code the serving surface must not expose;
+    then raise :class:`CommandRejected`. Two shapes are refused:
+
+    - a file relation with no catalog table whose root paths lie
+      outside ``root`` — SQL on files (``text.`/etc/passwd```, also
+      spelled ``IDENTIFIER('text.`…`')``, or a ``spark.table`` name);
+      the store's own view and the session's catalog tables pass;
+    - a ``CallMethodViaReflection`` expression (``reflect``,
+      ``java_method``, ``try_reflect``), which calls any static Java
+      method.
+
+    ``spark.sql`` and ``spark.table`` analyze a query without running
+    it, so the check runs on their result before any row is produced.
+    The root paths are matched JVM-side (carrying a 100-file list
+    through Py4J costs ~40 ms); the expression walk is skipped for a
+    deterministic plan, since ``CallMethodViaReflection`` is
+    ``Nondeterministic``.
+    """
+    jvm = df.sparkSession._jvm
+    plan = df._jdf.queryExecution().analyzed()
+    trees = [plan, *_seq(plan.subqueriesAll())]
+    regex = jvm.java.util.regex.Pattern
+    # a line (one root path) that does not start with the store's prefix
+    outside = regex.compile(
+        "(?:^|\n)(?!" + regex.quote(f"file:{os.path.abspath(root)}/") + ")"
+    )
+    for tree in trees:
+        for leaf in _seq(tree.collectLeaves()):
+            if leaf.nodeName() != "LogicalRelation" or leaf.catalogTable().isDefined():
+                continue
+            try:
+                paths = leaf.relation().location().rootPaths()
+            except Py4JError:
+                continue  # not a file relation (JDBC, ...)
+            lines = jvm.scala.collection.mutable.StringBuilder()
+            paths.addString(lines, "\n")
+            if outside.matcher(lines).find():
+                raise CommandRejected(
+                    "query reads files outside the serving store; this "
+                    "surface is read-only"
+                )
+    if plan.deterministic():
+        return df
+    nodes = list(trees)
+    exprs = []
+    while nodes:
+        node = nodes.pop()
+        nodes += _seq(node.children())
+        exprs += [e for e in _seq(node.expressions()) if not e.deterministic()]
+    while exprs:
+        expr = exprs.pop()
+        if expr.nodeName() == "CallMethodViaReflection":
+            raise CommandRejected(
+                "query calls JVM methods through reflection; this surface "
+                "is read-only"
+            )
+        exprs += [c for c in _seq(expr.children()) if not c.deterministic()]
+    return df
+
+
 class EmptyStoreError(ValueError):
     """A read found no committed batch: the store has no manifest yet
     (nothing was ever committed, or only a crashed first commit's
     files sit on disk) or its snapshot lists no files (everything was
-    cleaned, forgotten or reset). The HTTP surface answers ``[]``, as
+    cleaned, deleted or reset). The HTTP surface answers ``[]``, as
     the reference's freshly reset table does."""
 
 
@@ -181,29 +253,25 @@ class LegacyStoreLayoutError(RuntimeError):
     layouts itself."""
 
 
-#: root entries only the pre-manifest layouts wrote (current staging
-#: directories are ``_compactstage_``/``_commitstage_``, not matched)
+#: root entries only the pre-manifest layouts wrote (the current
+#: staging directory prefix, ``_commitstage_``, is not matched)
 _LEGACY_PREFIXES = ("_data_", "_gc_", "_compact_", "_old_")
 
 
 class ServingStore:
     """Parquet-backed, rst_id-partitioned serving table on the MANIFEST
-    substrate (:mod:`..sources.manifest`, shared with the LSH/IVF/BM25
-    indexes). The manifest is the store's only truth: a store without
-    one is empty, whatever ``RST_ID=`` directories sit on disk (a crash
-    during the very first commit leaves such a leaf; the replayed
-    batch's commit retires it).
+    substrate (:mod:`..sources.manifest`). The manifest is the store's
+    only truth: a store without one is empty, whatever ``RST_ID=``
+    directories sit on disk (a crash during the very first commit
+    leaves such a leaf; the replayed batch's commit retires it).
 
-    Every mutation (append / delete / clean / forget) runs inside a
+    Every mutation (append / delete / clean) runs inside a
     :func:`~..sources.manifest.manifest_txn` and publishes the next
     snapshot; reads resolve ONE snapshot and plan over its explicit
     file list, so a concurrent replace, delete, or retention clean can
-    never yank a planned file. Displaced and
-    dropped files RETIRE and are GC'd after ``gc_grace_sec``;
-    generation time travel (:meth:`snapshot` + :meth:`view_at`) and
-    row-level right-to-be-forgotten (:meth:`forget`) come with the
-    substrate. A read resolves one snapshot and never lists the root,
-    takes the maintainer lease or changes the filesystem.
+    never yank a planned file. Displaced and dropped files RETIRE and
+    are GC'd after ``gc_grace_sec``. A read never lists the root, takes
+    the maintainer lease or changes the filesystem.
 
     Opening a root that still holds a pre-manifest layout raises
     :class:`LegacyStoreLayoutError` naming ``tools/migrate_store.py``.
@@ -219,7 +287,6 @@ class ServingStore:
         table_name: str = "default",
         clean_interval: int = 100,
         clean_freq: int = 10,
-        allow_commands: bool = False,
         gc_grace_sec: float = 300.0,
     ) -> None:
         self.spark = spark
@@ -227,9 +294,6 @@ class ServingStore:
         self.table_name = table_name
         self.clean_interval = clean_interval
         self.clean_freq = clean_freq
-        # reference-compat escape hatch: the reference's run_cmd executed
-        # any SQL (models.py:155-187); default here is query-only
-        self.allow_commands = allow_commands
         self.gc_grace_sec = gc_grace_sec
         self.path.mkdir(parents=True, exist_ok=True)
         self._batches_since_clean = 0
@@ -364,18 +428,9 @@ class ServingStore:
         return bool(self._batch_ids())
 
     def snapshot(self) -> dict | None:
-        """The latest manifest snapshot — pass to :meth:`view_at` (or
-        hold across several queries) to pin ONE consistent store state
-        while ingestion, deletes, and retention keep running behind
-        it; valid as long as the GC grace window. None until the first
-        commit."""
+        """The latest manifest snapshot (its files, retired files,
+        zone maps and generation); None until the first commit."""
         return self._snapshot()
-
-    def view_at(self, snapshot: dict) -> DataFrame:
-        """The serving table exactly as a given :meth:`snapshot` (or
-        ``manifest_at`` generation) recorded it — generation time
-        travel, complementing the batch-id-based :meth:`view_asof`."""
-        return self._view_from(snapshot)
 
     def _view_from(self, m: dict | None, predicate: list | tuple = ()) -> DataFrame:
         if not m or not m["files"]:
@@ -440,21 +495,20 @@ class ServingStore:
         """Q1/H1: SELECT * (models.py:309-333)."""
         return self.view()
 
-    def run_cmd(self, sql: str, allow_commands: bool | None = None) -> DataFrame:
+    def run_cmd(self, sql: str) -> DataFrame:
         """Q2/H2: arbitrary SQL against the registered serving view
         (run_cmd, models.py:155-187). Spark SQL parses/plans — no eval,
         no string-spliced execution.
 
-        Query-only by default: mutating statements (DDL, INSERT, SET,
-        ADD JAR, ...) raise :class:`CommandRejected` before anything
-        executes — see :func:`reject_non_query`. ``allow_commands``
-        overrides the store default (reference-compat full-SQL mode).
+        Query-only: mutating statements (DDL, INSERT, SET, ADD JAR, ...)
+        raise :class:`CommandRejected` before anything executes (see
+        :func:`reject_non_query`), and a query that reads files outside
+        the store or calls JVM methods raises it before any row is
+        produced (see :func:`reject_foreign_reads`).
         """
-        permit = self.allow_commands if allow_commands is None else allow_commands
-        if not permit:
-            reject_non_query(self.spark, sql)
+        reject_non_query(self.spark, sql)
         self.register()
-        return self.spark.sql(sql)
+        return reject_foreign_reads(self.spark.sql(sql), self.path)
 
     def rst(self) -> int:
         """H5: current batch counter — max committed RST_ID (models.py:667-700).
@@ -479,15 +533,6 @@ class ServingStore:
     def batch(self, batch_id: int) -> DataFrame:
         """H7: a single batch by id (http_endpoint.py:178-184)."""
         return self.view().filter(F.col(RST_COL) == F.lit(batch_id))
-
-    def view_asof(self, batch_id: int) -> DataFrame:
-        """Time travel: the table as it stood when ``batch_id`` was the
-        newest batch — every partition with ``RST_ID <= batch_id``.
-        Partition pruning makes this a metadata operation (reads only
-        the qualifying directories); combined with the idempotent
-        per-partition appends, any historical state inside the retention
-        window is reproducible exactly."""
-        return self.view().filter(F.col(RST_COL) <= F.lit(int(batch_id)))
 
     # -- retention (R1-R4) ----------------------------------------------
     def clean(self, clean_interval: int | None = None) -> int:
@@ -559,23 +604,6 @@ class ServingStore:
                     txn.replace(f"{RST_COL}={bid}")
         gc_index_tree(self.path, self.gc_grace_sec)
         return sum(hits.values())
-
-    def forget(self, id_col: str, ids: list[int]) -> int:
-        """Right-to-be-forgotten on serving rows (free on the manifest
-        substrate, :func:`~..sources.manifest.manifest_forget_rows`):
-        rewrite ONLY the data files containing the given ids
-        (pushdown-pruned discovery scan), publish as one snapshot, GC
-        after the grace window — after which the forgotten rows have no
-        bytes on disk anywhere in the store. Unlike :meth:`delete` (the
-        reference's predicate DELETE, partition granular), this is
-        file-granular and id-keyed."""
-        from ..sources.manifest import manifest_forget_rows
-
-        subtrees = [f"{RST_COL}={i}" for i in self._batch_ids()]
-        return manifest_forget_rows(
-            self.spark, self.path, id_col, ids, subtrees,
-            grace_sec=self.gc_grace_sec,
-        )
 
     def reset(self) -> None:
         """H4/D5: '/r' — wipe all state (in-memory db reconnect semantics,

@@ -163,30 +163,32 @@ def test_one_persist_site_and_no_legacy_cache_helpers():
     assert legacy == []
 
 
-# Paper-surface functions no served root calls: the reference's sinks
-# and producer (K2-K4), the H3 Avro route body and the Q3 delete, the
-# S9 file loader and the A5 update-mode counter. Plus ``manifest_at``,
-# the one way to open a past generation's snapshot for generation time
-# travel (COVERAGE "Time travel" and "LSH index persistence" rows): its
-# result is what ``ServingStore.view_at`` and the index query functions'
-# ``snapshot=`` take, where ``ServingStore.snapshot`` gives only the
-# latest. What they call counts as reached too.
+# Paper-surface functions and methods no served root calls: the
+# reference's sinks and producer (K2-K4), the H3 Avro route body, the
+# Q3 delete, the D3 schema lookup, the S9 file loader and the A5
+# update-mode counter. Plus ``manifest_at``, the one way to open a past
+# generation's snapshot (COVERAGE "LSH index persistence" row): its
+# result is what the index query functions' ``snapshot=`` takes, where
+# ``latest_manifest`` gives only the newest. What they call counts as
+# reached too.
 SERVED_ELSEWHERE = {
     "sources.files": ("open_or_none",),
     "sources.kafka": ("count_json_payload", "kafka_sink_writer"),
     "sources.manifest": ("manifest_at",),
     "streaming.api": ("custom_sql_avro", "delete"),
     "streaming.pipeline": ("start_merged_counter",),
+    "streaming.serving": ("ServingStore.describe",),
     "streaming.sinks": ("jdbc_upsert_batch", "merge_sql", "upsert_sql"),
 }
 
 
 def test_streaming_and_sources_have_no_unserved_entry_points():
-    """Spark-free: every top-level function in ``streaming/`` and
-    ``sources/`` is reached from a served root (CLI, HTTP routes,
-    ``@query`` catalog, ``__spark_entry__.py``, ``bench.py``,
-    ``perfbench/``, ``tools/``) or named above, so an unserved entry
-    point cannot creep back in (``tools/unreached.py``)."""
+    """Spark-free: every top-level function, and every method of a
+    top-level class, in ``streaming/`` and ``sources/`` is reached from
+    a served root (CLI, HTTP routes, ``@query`` catalog,
+    ``__spark_entry__.py``, ``bench.py``, ``perfbench/``, ``tools/``)
+    or named above, so an unserved entry point cannot creep back in
+    (``tools/unreached.py``)."""
     import importlib.util
 
     root = PLANS_DIR.parents[1]
@@ -199,7 +201,9 @@ def test_streaming_and_sources_have_no_unserved_entry_points():
     }
     for mod, name in sorted(allowed):
         src = (root / (mod.replace(".", "/") + ".py")).read_text()
-        assert f"\ndef {name}(" in src, f"stale allow-list entry {mod}.{name}"
+        cls, _, fn = name.rpartition(".")
+        decls = [f"\nclass {cls}", f"\n    def {fn}("] if cls else [f"\ndef {fn}("]
+        assert all(d in src for d in decls), f"stale allow-list entry {mod}.{name}"
     left = [
         f"{mod}.{name}"
         for mod, name in tool.unreached(allowed)

@@ -385,16 +385,12 @@ def test_stale_lease_from_dead_pid_is_broken(tmp_path):
 
 
 def test_empty_subtree_never_resurrects_retired_files(spark, tmp_path):
-    """r8 ADVICE #2: when a forget retires EVERY file of a subtree, the
-    old fallback read the bare directory — resurrecting the retired
-    files still on disk inside the GC grace window. Now: empty DataFrame
-    with the subtree's schema while ghosts remain, PATH_NOT_FOUND after
-    GC sweeps them."""
+    """When a commit retires EVERY file of a subtree, reading the bare
+    directory would resurrect the retired files still on disk inside
+    the GC grace window. The read instead gives an empty DataFrame with
+    the subtree's schema while ghosts remain, PATH_NOT_FOUND after GC
+    sweeps them."""
     from pyspark.errors import AnalysisException
-
-    from spark_streaming_kafka_bucket_counter_spark.sources.manifest import (
-        manifest_forget_rows,
-    )
 
     root = tmp_path / "idx"
     root.mkdir()
@@ -402,8 +398,8 @@ def test_empty_subtree_never_resurrects_retired_files(spark, tmp_path):
     with manifest_txn(root):
         df.coalesce(1).write.mode("append").parquet(str(root / "t"))
 
-    n = manifest_forget_rows(spark, root, "doc_id", [1, 2], ["t"], grace_sec=3600)
-    assert n >= 1
+    with manifest_txn(root, replace_prefixes=["t"]):
+        pass  # the subtree's files retire; nothing is written
     # retired files still on disk (grace window) — but NOT readable
     assert any(f.startswith("t/") for f in scan_parquet_files(root))
     out = manifest_read(spark, root, "t")
@@ -413,30 +409,6 @@ def test_empty_subtree_never_resurrects_retired_files(spark, tmp_path):
     gc_index_tree(root, grace_sec=0)
     with pytest.raises(AnalysisException):
         manifest_read(spark, root, "t").collect()
-
-
-def test_forget_on_unmanaged_tree_adopts_and_honors(spark, tmp_path):
-    """r8 ADVICE #3: a forget against a pre-manifest index must not be
-    a success-shaped no-op — the tree is adopted (its directory state
-    becomes generation 1) and the rows actually disappear."""
-    from spark_streaming_kafka_bucket_counter_spark.sources.manifest import (
-        manifest_forget_rows,
-    )
-
-    root = tmp_path / "legacy"
-    spark.createDataFrame(
-        [(i, f"d{i}") for i in range(6)], "doc_id long, text string"
-    ).write.parquet(str(root / "t"))
-    assert latest_manifest(root) is None
-
-    n = manifest_forget_rows(spark, root, "doc_id", [2, 4], ["t"], grace_sec=0)
-    assert n >= 1
-    m = latest_manifest(root)
-    assert m is not None  # adopted
-    remaining = sorted(
-        r["doc_id"] for r in manifest_read(spark, root, "t").collect()
-    )
-    assert remaining == [0, 1, 3, 5]
 
 
 def test_live_lease_heartbeat_survives_timeout(tmp_path, monkeypatch):
@@ -453,7 +425,9 @@ def test_live_lease_heartbeat_survives_timeout(tmp_path, monkeypatch):
         _maintainer_lease,
     )
 
-    monkeypatch.setenv("SSBC_LEASE_TIMEOUT_SEC", "2")
+    from spark_streaming_kafka_bucket_counter_spark.sources import manifest
+
+    monkeypatch.setattr(manifest, "LEASE_TIMEOUT_SEC", 2.0)
     root = tmp_path / "idx"
     root.mkdir()
     with _maintainer_lease(root):

@@ -114,8 +114,7 @@ def test_legacy_marker_raises_at_construction(tmp_path, marker):
 
 def test_current_names_are_not_legacy_markers(tmp_path):
     root = tmp_path / "store"
-    for name in (f"{manifest.COMPACT_STAGE_PREFIX}ab12",
-                 f"{manifest.COMMIT_STAGE_PREFIX}cd34", f"{RST_COL}=0"):
+    for name in (f"{manifest.COMMIT_STAGE_PREFIX}ab12", f"{RST_COL}=0"):
         (root / name).mkdir(parents=True)
     ServingStore(None, str(root))
 

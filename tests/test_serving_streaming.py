@@ -169,19 +169,6 @@ def test_parse_and_bucket_dropped_bucket_field_still_buckets(spark):
     assert [tuple(r) for r in out.collect()] == [("click", 40, 60)]
 
 
-def test_store_time_travel(spark, tmp_path):
-    store = ServingStore(spark, str(tmp_path / "ttstore"), clean_freq=0)
-    for b in range(3):
-        store.append(spark.createDataFrame([(b, b * 10)], "k long, v long"), b)
-    asof1 = store.view_asof(1)
-    assert sorted(r["k"] for r in asof1.collect()) == [0, 1]
-    # pruning: only the qualifying partition dirs are scanned
-    plan = asof1._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan and "RST_ID" in plan
-    # full view unaffected
-    assert store.view().count() == 3
-
-
 def test_store_recent_answers_from_one_snapshot(spark, tmp_path, monkeypatch):
     """H6 (/rv/<n>) resolves the newest batch id and the view from ONE
     snapshot: a commit landing between the store's snapshot reads must
@@ -202,6 +189,9 @@ def test_store_recent_answers_from_one_snapshot(spark, tmp_path, monkeypatch):
     monkeypatch.setattr(store, "_snapshot", snapshot_then_commit)
     assert sorted(r[RST_COL] for r in store.recent(2).collect()) == [1, 2]
     assert committed == [3] and store.rst() == 3
+    # the batch-id filter prunes partitions: only qualifying leaves are read
+    plan = store.recent(2)._jdf.queryExecution().executedPlan().toString()
+    assert "PartitionFilters" in plan and RST_COL in plan
 
 
 def test_store_replay_is_reader_atomic(spark, tmp_path):
@@ -281,8 +271,7 @@ def test_store_clean_retires_then_gcs_and_snapshot_pins(spark, tmp_path):
     for b in range(6):
         store.append(spark.createDataFrame([(b, b * 10)], "k long, v long"), b)
 
-    pinned = store.snapshot()
-    pinned_df = store.view_at(pinned)  # planned BEFORE the clean
+    pinned_df = store.view()  # planned BEFORE the clean
 
     assert store.clean(clean_interval=2) == 3  # drop batches 0,1,2
     assert store._batch_ids() == [3, 4, 5]
@@ -291,7 +280,6 @@ def test_store_clean_retires_then_gcs_and_snapshot_pins(spark, tmp_path):
     # the pinned reader still sees all six batches: retired files are
     # on disk inside the grace window
     assert sorted(r["k"] for r in pinned_df.collect()) == [0, 1, 2, 3, 4, 5]
-    assert sorted(r["k"] for r in store.view_at(pinned).collect()) == list(range(6))
 
     gc_index_tree(tmp_path / "gstore", grace_sec=0)
     import glob
@@ -301,30 +289,3 @@ def test_store_clean_retires_then_gcs_and_snapshot_pins(spark, tmp_path):
         str(tmp_path / "gstore" / f"RST_ID={b}") for b in (3, 4, 5)
     ]
     assert sorted(r["k"] for r in store.view().collect()) == [3, 4, 5]
-
-
-def test_store_forget_rows(spark, tmp_path):
-    """Right-to-be-forgotten on the serving store (free on the manifest
-    substrate): only files containing the ids are rewritten, results
-    match never-inserted, and after GC the bytes are gone."""
-    from spark_streaming_kafka_bucket_counter_spark.sources.manifest import (
-        gc_index_tree,
-    )
-
-    store = ServingStore(spark, str(tmp_path / "fstore"), clean_freq=0)
-    for b in range(3):
-        rows = [(b * 10 + i, f"u{b * 10 + i}") for i in range(4)]
-        store.append(
-            spark.createDataFrame(rows, "user_id long, name string"), b
-        )
-
-    n = store.forget("user_id", [1, 21])
-    assert n >= 1
-    got = sorted(r["user_id"] for r in store.view().collect())
-    assert got == [0, 2, 3, 10, 11, 12, 13, 20, 22, 23]
-    # untouched batch 1 files were not rewritten (still 1 file live)
-    m = store.snapshot()
-    assert any(f.startswith("RST_ID=1/") for f in m["files"])
-
-    gc_index_tree(tmp_path / "fstore", grace_sec=0)
-    assert sorted(r["user_id"] for r in store.view().collect()) == got

@@ -4,8 +4,10 @@ The reference served full SQL over HTTP against a throwaway SQLite file
 (http_endpoint.py:88-92, models.py:155-187); here the same route reaches
 a live SparkSession, so mutating statements must be refused BEFORE they
 execute — spark.sql runs DDL eagerly, so a post-hoc check would be too
-late. These tests drive real sockets end-to-end and also pin the
-parser-level classifier and the direct-API opt-out.
+late. Queries are read-only too: after ``spark.sql`` (or ``spark.table``
+for ``/a/<table>``) the analyzed plan is refused if it reads files
+outside the store or calls JVM methods through reflection. These tests
+drive real sockets end-to-end and also pin the parser-level classifier.
 """
 
 from __future__ import annotations
@@ -154,21 +156,56 @@ def test_http_cs_route_is_gated_too(gated):
     assert status == 403
 
 
-def test_direct_api_override_executes_commands(spark, tmp_path):
-    store = ServingStore(spark, str(tmp_path / "store2"))
-    store.append(spark.createDataFrame([(1,)], "a long"), 0)
-    with pytest.raises(CommandRejected):
-        store.run_cmd("CREATE OR REPLACE TEMPORARY VIEW gate_probe AS SELECT 1 AS x")
-    # per-call opt-out
-    store.run_cmd(
-        "CREATE OR REPLACE TEMPORARY VIEW gate_probe AS SELECT 1 AS x",
-        allow_commands=True,
-    )
-    assert spark.sql("SELECT x FROM gate_probe").collect()[0][0] == 1
-    spark.catalog.dropTempView("gate_probe")
-    # store-level opt-out (reference-compat full-SQL mode)
-    open_store = ServingStore(spark, str(tmp_path / "store3"), allow_commands=True)
-    open_store.append(spark.createDataFrame([(1,)], "a long"), 0)
-    open_store.run_cmd("CREATE OR REPLACE TEMPORARY VIEW gate_probe2 AS SELECT 2 AS x")
-    assert spark.sql("SELECT x FROM gate_probe2").collect()[0][0] == 2
-    spark.catalog.dropTempView("gate_probe2")
+SECRET = "gate-probe-secret-7f3a"
+
+
+@pytest.fixture()
+def secret_file(tmp_path):
+    """A driver-local file outside the store that no route may read."""
+    path = tmp_path / "secret.txt"
+    path.write_text(SECRET + "\n")
+    return str(path)
+
+
+@pytest.mark.parametrize("route", [
+    "/c/SELECT * FROM text.`{f}`",
+    "/c/SELECT * FROM IDENTIFIER('text.`{f}`')",
+    "/a/text.`{f}`",
+    "/c/SELECT * FROM default WHERE event_type IN (SELECT value FROM text.`{f}`)",
+    "/c/WITH x AS (SELECT value FROM text.`{f}`) SELECT * FROM x",
+    "/cs/SELECT * FROM text.`{f}`",
+])
+def test_http_file_reads_outside_the_store_are_403(gated, secret_file, route):
+    _, base = gated
+    status, body = _get(base, route.format(f=secret_file))
+    assert status == 403, body
+    assert SECRET not in json.dumps(body)
+
+
+@pytest.mark.parametrize("call", [
+    "reflect('java.lang.System', 'getProperty', 'java.home')",
+    "java_method('java.lang.System', 'getProperty', 'java.home')",
+    "try_reflect('java.lang.System', 'getProperty', 'java.home')",
+])
+@pytest.mark.parametrize("shape", [
+    "/c/SELECT {call} AS r",
+    "/c/SELECT * FROM default WHERE event_type IN (SELECT {call})",
+])
+def test_http_reflection_calls_are_403(gated, call, shape):
+    store, base = gated
+    java_home = store.spark._jvm.java.lang.System.getProperty("java.home")
+    status, body = _get(base, shape.format(call=call))
+    assert status == 403, body
+    assert java_home not in json.dumps(body)
+
+
+@pytest.mark.parametrize("sql, n", [
+    ("SELECT * FROM default WHERE event_type IN "
+     "(SELECT event_type FROM default WHERE count = 1)", 1),
+    ("SELECT * FROM default WHERE count > (SELECT min(count) FROM default)", 1),
+    ("SELECT event_type FROM default WHERE rand() >= 0", 2),
+])
+def test_http_queries_over_the_store_stay_200(gated, sql, n):
+    _, base = gated
+    status, rows = _get(base, "/c/" + sql)
+    assert status == 200 and len(rows) == n, rows

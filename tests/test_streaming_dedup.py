@@ -72,7 +72,7 @@ def test_ivf_index_crash_mid_compaction_recovers(spark, tmp_path):
     (r8): stage both crash shapes a staged rewrite can leave behind —
     (1) rewritten files MOVED into a leaf but never published (the
     publish is the commit point, so they are orphans no snapshot
-    references) and (2) an abandoned ``_compactstage_`` dir — and prove
+    references) and (2) an abandoned ``_commitstage_`` dir — and prove
     queries keep answering from the intact snapshot, GC sweeps both
     debris shapes, and a subsequent append lands normally."""
     import os
@@ -85,6 +85,7 @@ def test_ivf_index_crash_mid_compaction_recovers(spark, tmp_path):
         ivf_query_index,
     )
     from spark_streaming_kafka_bucket_counter_spark.sources.manifest import (
+        COMMIT_STAGE_PREFIX,
         gc_index_tree,
         latest_manifest,
         manifest_read,
@@ -117,7 +118,7 @@ def test_ivf_index_crash_mid_compaction_recovers(spark, tmp_path):
     )
     shutil.copyfile(os.path.join(idx, dup_src), os.path.join(idx, orphan))
     # crash shape 2: abandoned staging directory
-    stage = Path(idx) / "_compactstage_dead"
+    stage = Path(idx) / f"{COMMIT_STAGE_PREFIX}dead"
     stage.mkdir()
     (stage / "part-0.parquet").write_bytes(b"not parquet")
 

@@ -1,7 +1,7 @@
 """Zone-map pins for the manifest layer (sources/manifest.py): per-file
 min/max/null stats harvested from parquet FOOTERS at commit time, then
-used for plan-time file pruning — manifest_read(predicate=...) and the
-forget path's candidate pruning. The contract under test: pruning is
+used for plan-time file pruning (``files_matching``, which
+``ServingStore.view_where`` reads through). The contract under test: pruning is
 correctness-neutral (kept files may still not match; skipped files
 provably cannot), and every unknown (missing stats, unreadable footer,
 nested/oversized column, cross-type compare) degrades to "keep".
@@ -18,8 +18,6 @@ from spark_streaming_kafka_bucket_counter_spark.sources.manifest import (
     _satisfiable,
     files_matching,
     latest_manifest,
-    manifest_forget_rows,
-    manifest_read,
     manifest_txn,
 )
 
@@ -74,24 +72,6 @@ def test_files_matching_prunes_by_range(ranged):
     assert len(files_matching(m, "data", [("id", "=", "abc")])) == 3
 
 
-def test_manifest_read_predicate_same_rows_fewer_files(spark, ranged):
-    full = manifest_read(spark, ranged, "data").filter(F.col("id") == 150)
-    pruned = manifest_read(
-        spark, ranged, "data", predicate=[("id", "=", 150)]
-    ).filter(F.col("id") == 150)
-    assert sorted(r["id"] for r in full.collect()) == sorted(
-        r["id"] for r in pruned.collect()
-    )
-    assert len(full.inputFiles()) == 3
-    assert len(pruned.inputFiles()) == 1
-
-
-def test_manifest_read_all_pruned_keeps_schema(spark, ranged):
-    out = manifest_read(spark, ranged, "data", predicate=[("id", "=", 10_000)])
-    assert out.count() == 0
-    assert set(out.columns) == {"id", "w"}
-
-
 def test_allnull_column_prunes_comparisons(spark, tmp_path):
     root = tmp_path / "nulls"
     df = spark.range(0, 10).select(
@@ -132,22 +112,6 @@ def test_long_string_stats_dropped(spark, tmp_path):
     # recorded max an invalid upper bound) -> never pruned on it
     assert "s" not in m["stats"][f]["cols"]
     assert len(files_matching(m, "data", [("s", "=", "zzz")])) == 1
-
-
-def test_forget_skips_files_outside_id_range(spark, ranged):
-    before = {f for f in latest_manifest(ranged)["files"] if f.startswith("data/")}
-    n = manifest_forget_rows(spark, ranged, "id", [150, 160], ["data"])
-    assert n == 1  # only the 100..199 file rewritten
-    m = latest_manifest(ranged)
-    after = {f for f in m["files"] if f.startswith("data/")}
-    # the two untouched files survive as the SAME file paths
-    assert len(before & after) == 2
-    got = sorted(r["id"] for r in manifest_read(spark, ranged, "data").collect())
-    assert got == [i for i in range(300) if i not in (150, 160)]
-    # the replacement file's stats were harvested at the forget's commit
-    (new,) = after - before
-    assert m["stats"][new]["cols"]["id"]["mn"] == 100
-    assert m["stats"][new]["cols"]["id"]["mx"] == 199
 
 
 def test_serving_store_view_where_prunes_files(spark, tmp_path):
@@ -325,7 +289,9 @@ def test_nan_data_never_pruned_on_upper_bound(spark, tmp_path):
     spark.conf.set("spark.sql.parquet.filterPushdown", "false")
     try:
         got = (
-            manifest_read(spark, root, "data", predicate=[("v", ">", 10.0)])
+            spark.read.parquet(*[
+                str(root / f) for f in files_matching(m, "data", [("v", ">", 10.0)])
+            ])
             .filter(F.col("v") > 10.0)
             .select("id")
             .collect()

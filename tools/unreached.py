@@ -1,18 +1,23 @@
-"""List the package's top-level functions that no served surface reaches.
+"""List the package's functions and methods that no served surface reaches.
 
-    python3 tools/unreached.py            # one ``module.function`` a line
+    python3 tools/unreached.py     # ``module.function`` or ``module.Class.method``
 
 A static ``ast`` scan, stdlib only. The roots are the surfaces that run
 the package: the CLI (``__main__.py``), every ``@query`` catalog entry
 (with its decorator arguments, where the oracle SQL builders are
-referenced), every module's top-level statements and class bodies (the
-HTTP routes, ``ServingStore`` and the other classes), and every file of
+referenced), every module's top-level statements, and every file of
 ``__spark_entry__.py``, ``bench.py``, ``perfbench/`` and ``tools/``.
 From the roots, a function is reached when a reached body names it:
 directly, through ``from … import … as …`` (at module level or inside a
 function, following re-exports), as ``module.function`` through an
 imported module alias, or as ``call(module, "function")`` (the tracer's
 ``wrap``). A name that resolves to nothing in the package is ignored.
+
+The methods of the top-level classes in ``streaming/`` and ``sources/``
+are scanned one by one: a method is reached when a reached body names
+it as an attribute (``obj.method``, whatever ``obj`` is) or passes its
+name as a string to ``wrap`` or ``getattr``; dunder methods are roots.
+Elsewhere a class body counts as a root, methods included.
 
 The scan is conservative in one direction only: code that the roots name
 counts as reached even if no run takes that branch. A function this
@@ -29,6 +34,8 @@ from typing import Collection
 REPO = Path(__file__).resolve().parents[1]
 PKG = "spark_streaming_kafka_bucket_counter_spark"
 EXTERNAL_ROOTS = ("__spark_entry__.py", "bench.py", "perfbench", "tools")
+#: packages whose classes' methods are scanned one by one
+METHOD_SCOPES = (f"{PKG}.streaming.", f"{PKG}.sources.")
 
 
 def _module_name(path: Path) -> str:
@@ -61,11 +68,27 @@ class _Scan:
             for node in tree.body
             if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef))
         }
+        # (module, "Class.method") for every method of a top-level class
+        # in METHOD_SCOPES, and method name -> those keys
+        self.methods: dict[str, set[tuple]] = {}
+        for mod, (_p, tree, _i) in self.trees.items():
+            for cls in self._scoped_classes(mod, tree):
+                for node in cls.body:
+                    if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                        key = (mod, f"{cls.name}.{node.name}")
+                        self.defs[key] = node
+                        self.methods.setdefault(node.name, set()).add(key)
         # module -> top-level alias map (what its own imports bind)
         self.top_aliases = {
             mod: self._aliases(mod, is_pkg, tree.body)
             for mod, (_p, tree, is_pkg) in self.trees.items()
         }
+
+    @staticmethod
+    def _scoped_classes(module: str, tree: ast.Module) -> list[ast.ClassDef]:
+        if not module.startswith(METHOD_SCOPES):
+            return []
+        return [n for n in tree.body if isinstance(n, ast.ClassDef)]
 
     def _aliases(self, module: str, is_pkg: bool, stmts) -> dict[str, tuple]:
         """Names bound by the import statements in ``stmts`` (walked, so a
@@ -130,26 +153,41 @@ class _Scan:
                         add(module, node.id)
                 elif isinstance(node, ast.Attribute):
                     add(self._module_of(node.value, aliases), node.attr)
+                    out |= self.methods.get(node.attr, set())
                 elif isinstance(node, ast.Call) and len(node.args) >= 2:
                     first, second = node.args[0], node.args[1]
                     if isinstance(second, ast.Constant) and isinstance(second.value, str):
                         add(self._module_of(first, aliases), second.value)
+                        callee = node.func
+                        name = callee.attr if isinstance(callee, ast.Attribute) else (
+                            callee.id if isinstance(callee, ast.Name) else None)
+                        if name in ("wrap", "getattr"):
+                            out |= self.methods.get(second.value, set())
         return out
 
     def run(self, extra_roots: Collection[tuple[str, str]] = ()) -> list[tuple[str, str]]:
         frontier: set[tuple] = set(extra_roots)
-        # package roots: module-level statements (class bodies included),
-        # decorators and defaults of every def, and every @query function
+        # package roots: module-level statements (class bodies included,
+        # except the methods of scoped classes), decorators and defaults
+        # of every def, every @query function and every scoped dunder
         for mod, (_p, tree, is_pkg) in self.trees.items():
             aliases = self.top_aliases[mod]
+            scoped = self._scoped_classes(mod, tree)
             stmts = []
             for node in tree.body:
                 if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
-                    stmts += node.decorator_list + node.args.defaults + [
-                        d for d in node.args.kw_defaults if d is not None
-                    ]
+                    stmts += _signature(node)
                     if any(_is_query(d) for d in node.decorator_list):
                         frontier.add((mod, node.name))
+                elif node in scoped:
+                    stmts += node.decorator_list + node.bases + node.keywords
+                    for item in node.body:
+                        if not isinstance(item, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                            stmts.append(item)
+                            continue
+                        stmts += _signature(item)
+                        if item.name.startswith("__") and item.name.endswith("__"):
+                            frontier.add((mod, f"{node.name}.{item.name}"))
                 elif not isinstance(node, (ast.Import, ast.ImportFrom)):
                     stmts.append(node)
             frontier |= self.refs(mod, stmts, aliases)
@@ -174,6 +212,13 @@ class _Scan:
         return sorted(set(self.defs) - reached)
 
 
+def _signature(fn) -> list:
+    """A def's decorators and default values: evaluated where it is defined."""
+    return fn.decorator_list + fn.args.defaults + [
+        d for d in fn.args.kw_defaults if d is not None
+    ]
+
+
 def _is_query(dec) -> bool:
     f = dec.func if isinstance(dec, ast.Call) else dec
     return (isinstance(f, ast.Name) and f.id == "query") or (
@@ -182,9 +227,10 @@ def _is_query(dec) -> bool:
 
 
 def unreached(extra_roots: Collection[tuple[str, str]] = ()) -> list[tuple[str, str]]:
-    """``(module, function)`` for every top-level package function no
-    served surface reaches, sorted. ``extra_roots`` (``(module,
-    function)`` pairs) count as served too, and so does what they call."""
+    """``(module, function)`` for every top-level package function, and
+    ``(module, "Class.method")`` for every scoped method, that no served
+    surface reaches, sorted. ``extra_roots`` (pairs of the same shape)
+    count as served too, and so does what they call."""
     return _Scan().run(extra_roots)
 
 
